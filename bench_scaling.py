@@ -9,8 +9,9 @@ Job (the north-star quadtree-assignment + tile-split pipeline, end to end):
   index — same table regardless of partitioning) → quadtree cell id
   (buffer 0.05, depth 17, Arrow-vectorized kernel) → cell histogram at tree
   level 15 (hash aggregate) → driver-side greedy grouping (reference
-  find_groups_copy semantics) → broadcast find_tile assignment →
-  repartitionByRange(group_qt) + sortWithinPartitions → materialized write.
+  find_groups_copy semantics) → broadcast find_tile assignment + destination
+  partition from the tile's DFS position → repartitionById +
+  sortWithinPartitions → materialized write.
 
 Each parallelism level runs in its OWN subprocess (its own JVM) so thread
 pools, shuffle partitions and memory managers are sized for that level, as
@@ -144,9 +145,10 @@ def run_job(spark, n_rows: int, partitions: int) -> dict:
     phases["histogram_grouping"] = round(time.time() - t0, 3)
 
     # PASS 2 — generation + kernel + broadcast find_tile assignment FUSED in
-    # ONE Arrow stage (a single JVM↔Python crossing), then the range
-    # partition + in-partition sort + materialized write.
+    # ONE Arrow stage (a single JVM↔Python crossing), then the partition-id
+    # placement + in-partition sort + materialized write.
     t0 = time.time()
+    from osmquadtree_spark.operators.sortblocks import tile_partitions
     from osmquadtree_spark.plans.qttree import assign_groups
 
     bc = spark.sparkContext.broadcast(gqt)
@@ -158,12 +160,13 @@ def run_job(spark, n_rows: int, partitions: int) -> dict:
             minx, miny, maxx, maxy = derive_footprints(idx)
             qt = calculate(minx, miny, maxx, maxy)
             grp = assign_groups(qt, g_tab)
-            yield pd.DataFrame({"idx": idx, "qt": qt, "group_qt": grp})
+            part = tile_partitions(grp, g_tab, partitions)
+            yield pd.DataFrame({"idx": idx, "qt": qt, "group_qt": grp, "_part_id": part})
 
     assigned = spark.range(0, n_rows, 1, partitions).mapInPandas(
-        gen, "idx bigint, qt bigint, group_qt bigint"
+        gen, "idx bigint, qt bigint, group_qt bigint, _part_id int"
     )
-    out = assigned.repartitionByRange(partitions, "group_qt").sortWithinPartitions(
+    out = assigned.repartitionById(partitions, "_part_id").sortWithinPartitions(
         "group_qt", "idx"
     )
     out.write.format("noop").mode("overwrite").save()

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import sys
 
 
 def main() -> None:
@@ -83,16 +84,19 @@ def main() -> None:
         exclude_bench=not args.no_exclude_bench,
         verify=args.verify,
     )
+    # run endpoint: flush any operator metrics registered during the run
+    # (hot-bucket drops, candidate counts — osmquadtree_spark/metrics.py).
+    # A failed metrics base must not eat the committed manifests: report
+    # it, print the manifests, then fail the job.
     from osmquadtree_spark import metrics
 
-    try:
-        metrics.commit_pending()
-    except Exception as ex:
-        import sys
-
-        print(f"metrics commit failed: {type(ex).__name__}: {ex}", file=sys.stderr)
+    errors = metrics.commit_pending()["errors"]
+    for base, msg in errors.items():
+        print(f"metrics commit failed for {base}: {msg}", file=sys.stderr)
     print(json.dumps(manifests))
     spark.stop()
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -32,9 +32,10 @@ lineage on resume. NULL-text documents are counted into a
 keep for them — they need inspection, not a silent drop) and excluded
 from every downstream stage.
 
-Commit-cost shape (round 5): stage row counts come from the WRITE job
-itself via the observation API (``DataFrame.observe`` — accumulator-
-backed, exactly-once per successful job), not a read-back ``count()``;
+Commit-cost shape: stage row counts come from the WRITE job itself
+(``commit.write_observed``, shared with the tiling pipeline) via the
+observation API (``DataFrame.observe`` — accumulator-backed,
+exactly-once per successful job), not a read-back ``count()``;
 at 100 TB a per-stage re-listing + footer scan of every output file
 would double the pipeline's IO for numbers the write already knows. The
 only post-write reads are bounded summaries a write-side aggregate
@@ -56,35 +57,9 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .pipeline import _commit, _read_manifest
-from .operators.sortblocks import is_committed
+from .commit import commit_manifest, is_committed, read_manifest, write_observed
 
 BENCH_MOD_DEFAULT = 41  # every 41st doc is the synthetic benchmark set
-
-
-def _write(
-    df: DataFrame, path: str, extra: dict | None = None, verify: bool = False
-) -> dict:
-    """Write the stage output; row count (+ any extra aggregate columns)
-    is observed ON the write job — zero read-back. ``verify`` re-reads
-    the committed files and cross-checks the observed count (the old
-    always-on behavior, now an opt-in integrity mode)."""
-    data = os.path.join(path, "data")
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("rows")] + [
-        v.alias(k) for k, v in (extra or {}).items()
-    ]
-    df.observe(obs, *aggs).write.mode("overwrite").parquet(data)
-    got = {k: int(v) if v is not None else 0 for k, v in obs.get.items()}
-    if verify:
-        rb = int(df.sparkSession.read.parquet(data).count())
-        if rb != got["rows"]:
-            raise RuntimeError(
-                f"stage verify failed at {data}: wrote {got['rows']} rows, "
-                f"read back {rb}"
-            )
-        got["verified_rows"] = rb
-    return got
 
 
 def _data(spark: SparkSession, path: str) -> DataFrame:
@@ -104,7 +79,7 @@ def stage_quality(
     drop-rate tuning surface the reason histogram in this stage's
     manifest exists to inform."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     from .operators.docs import quality_gate
 
@@ -118,7 +93,7 @@ def stage_quality(
     hist_aggs = {
         f"_r{k}": F.count_if(F.col("reasons") == k) for k in range(16)
     }
-    w = _write(
+    w = write_observed(
         joined,
         path,
         extra={
@@ -132,7 +107,7 @@ def stage_quality(
     hist = {k: v for k, v in hist.items() if v}
     if w["manual_queue"]:
         hist["null"] = w["manual_queue"]
-    return _commit(
+    return commit_manifest(
         path,
         {
             **w,
@@ -158,7 +133,7 @@ def stage_dedup(
     component-convergence rounds alongside (the production observability
     surface — silent caps are how recall loss hides)."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     from .operators.components import connected_components
     from .operators.dedup import minhash_lsh_pairs
@@ -177,11 +152,11 @@ def stage_dedup(
         )
         .withColumn("is_canonical", F.col("component_id") == F.col("doc_id"))
     )
-    w = _write(
+    w = write_observed(
         out, path, extra={"canonical": F.count_if(F.col("is_canonical"))},
         verify=verify,
     )
-    return _commit(
+    return commit_manifest(
         path,
         {
             **w,
@@ -220,12 +195,12 @@ def stage_decon(
     full gram-extraction pass just to count probed rows — the count now
     comes from an observation on the write's own scan)."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     from .operators import bloom as bl
 
     bf = bl.collect_bloom(bl.bloom_build(bench, n=n, m_bits=m_bits, k=k))
-    canonical_total = int(_read_manifest(dedup_path)["canonical"])
+    canonical_total = int(read_manifest(dedup_path)["canonical"])
     docs = _data(spark, dedup_path).filter("is_canonical")
     if exclude_bench:
         docs = docs.join(
@@ -240,12 +215,12 @@ def stage_decon(
     out = docs.observe(probe_obs, F.count(F.lit(1)).alias("probed")).join(
         flagged, "doc_id", "left_anti"
     )
-    w = _write(out, path, verify=verify)
+    w = write_observed(out, path, verify=verify)
     probed_rows = int(probe_obs.get["probed"])
     import numpy as np
 
     set_bits = int(np.unpackbits(bf.bitmap).sum())
-    return _commit(
+    return commit_manifest(
         path,
         {
             **w,
@@ -269,7 +244,7 @@ def stage_weights(
     """DSIR weights of the clean survivors vs the benchmark target; the
     λ artifact commits under this stage's directory (atomic tmp+swap)."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     from .operators.dsir import dsir_weights
 
@@ -285,8 +260,8 @@ def stage_weights(
         lambda_path=os.path.join(path, "lambda"),
         keep_text=True,
     )
-    w = _write(out, path, verify=verify)
-    return _commit(
+    w = write_observed(out, path, verify=verify)
+    return commit_manifest(
         path,
         {**w, "n_buckets": n_buckets, "elapsed_sec": time.time() - t0},
     )
@@ -300,7 +275,7 @@ def stage_shards(
     totals (shards / docs / tokens) are observed on the manifest write —
     the manifest is the |shards|-row summary table, so no read-back."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     from .operators.docs import shard_manifest, token_shards
 
@@ -325,7 +300,7 @@ def stage_shards(
                 f"manifest rows, read back {rb}"
             )
         got["verified_rows"] = rb
-    return _commit(
+    return commit_manifest(
         path,
         {**got, "shard_tokens": shard_tokens, "elapsed_sec": time.time() - t0},
     )

@@ -213,23 +213,31 @@ def _swap_into(tmp: str, path: str) -> None:
 def atomic_export_local(pdf, path: str) -> None:
     """Driver-side tmp+swap parquet export for BOUNDED artifacts whose
     rows already live on the driver (the B≈512-row DSIR λ table: its
-    inputs were collect()ed to compute λ in the first place). The Spark
+    inputs were collect()ed to compute λ in the first place; the
+    ≤|tiles|-row tile lineage of sortblocks.write_tile_sorted). The Spark
     alternative — createDataFrame(rows).coalesce(1).write — exists only
     to round-trip a few hundred rows through a Python-RDD scan and a
     task launch; measured 4.5-7.5 s of pure overhead per export on the
     bench host vs milliseconds for a direct pyarrow write of the SAME
     single-file parquet (DuckDB and Spark read it identically). Use
     atomic_export for anything distributed; this one asserts its input
-    is a pandas frame, i.e. already driver-resident by construction."""
+    is a pandas frame, i.e. already driver-resident by construction. A
+    failed write removes its tmp dir."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(tmp, "part-00000.parquet"),
-    )
+    try:
+        os.makedirs(tmp)
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False),
+            os.path.join(tmp, "part-00000.parquet"),
+        )
+    except BaseException:
+        import shutil
+
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     _swap_into(tmp, path)
 
 

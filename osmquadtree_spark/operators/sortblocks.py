@@ -8,10 +8,14 @@ blocks written sorted by group cell, rows sorted by internal id.
 Spark-first restatement: the count histogram is one hash aggregate (rounding
 is a pure JVM bit expression, no UDF); the greedy grouping runs on the
 driver over ≤4^15 rows (planet ≈ 150k); the resulting group table is
-broadcast into a vectorized assignment kernel; the layout is one
-repartitionByRange on the group cell + sortWithinPartitions — Spark's
-range-partitioned sort is the same external-sort algorithm as the
-reference's splitbyid/tempobjs spill machinery, with shuffle-managed memory.
+broadcast into a vectorized assignment kernel. As in the reference, the
+group table IS the partitioner: the same Arrow pass that assigns a row's
+group also computes its destination partition from the tile's DFS
+position, and the layout is one ``repartitionById`` on that id +
+``sortWithinPartitions`` — no sampling pass, and the layout is a
+deterministic function of the group table. Spark's in-partition sort is
+the same external-sort algorithm as the reference's splitbyid/tempobjs
+spill machinery, with shuffle-managed memory.
 
 At 10^12 rows the only driver-side state is the (cell, count) histogram at
 the tree level, which is bounded by 4^15 ≈ 1.07e9 cells in the worst case —
@@ -21,7 +25,6 @@ so ``tree_level`` must be chosen (or the histogram pre-rolled) to keep it
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -31,8 +34,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..commit import commit_manifest, write_observed
 from ..functions.udfs import round_qt_col
 from ..kernels import quadtree as qtk
+from ..metrics import atomic_export_local
 from ..plans.qttree import (
     QtTreeArr,
     assign_groups,
@@ -240,6 +245,19 @@ def compute_groups_scalable(
     return group_table(groups)
 
 
+# one tile per partition up to this many groups; beyond it, contiguous
+# DFS blocks of tiles per partition
+MAX_TILE_PARTITIONS = 2000
+
+
+def _groups_of(qt: pd.Series, group_qts: np.ndarray) -> np.ndarray:
+    # a single NULL makes the Arrow batch float64, silently destroying
+    # the low (depth) bits of every qt > 2^53 — fail loudly instead
+    if qt.isna().any():
+        raise ValueError("assign_group: NULL cell id in batch")
+    return assign_groups(qt.to_numpy("int64"), group_qts)
+
+
 def make_assign_group_udf(spark, group_qts: np.ndarray):
     """pandas UDF qt → group cell id; the group table ships once per executor
     via a Spark broadcast, not per-task closure pickling."""
@@ -247,11 +265,7 @@ def make_assign_group_udf(spark, group_qts: np.ndarray):
 
     @pandas_udf("bigint")
     def assign_group(qt: pd.Series) -> pd.Series:
-        # a single NULL makes the Arrow batch float64, silently destroying
-        # the low (depth) bits of every qt > 2^53 — fail loudly instead
-        if qt.isna().any():
-            raise ValueError("assign_group: NULL cell id in batch")
-        return pd.Series(assign_groups(qt.to_numpy("int64"), bc.value))
+        return pd.Series(_groups_of(qt, bc.value))
 
     return assign_group
 
@@ -266,6 +280,16 @@ def with_group_column(
     return df.withColumn(out_col, assign(F.col(qt_col)))
 
 
+def tile_partitions(groups: np.ndarray, group_qts: np.ndarray, parts: int) -> np.ndarray:
+    """Destination partition of each assigned group cell: the tile's DFS
+    position in the (sorted) group table × ``parts`` ÷ n_groups. Monotone
+    in the group cell, so partitions follow DFS tile order and a tile
+    never straddles two partitions."""
+    n = len(group_qts)
+    pos = np.searchsorted(group_qts, groups).clip(max=max(n - 1, 0))
+    return (pos * parts // max(n, 1)).astype(np.int32)
+
+
 def tile_sorted(
     df: DataFrame,
     group_qts: np.ndarray,
@@ -273,15 +297,24 @@ def tile_sorted(
     sort_cols: list[str] | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Assign groups and lay out: range-partition by group cell (preserving
-    global DFS tile order across partitions), rows sorted inside each
-    partition by (group cell, sort key) — the resort_objects semantics
+    """Assign groups and lay out: one Arrow pass yields each row's group
+    cell and destination partition (``_part_id``, see tile_partitions),
+    ``repartitionById`` places the rows, and each partition is sorted by
+    (group cell, sort key) — the resort_objects semantics
     (resortobjects.cpp:112-140)."""
-    out = with_group_column(df, group_qts, qt_col)
-    parts = num_partitions or max(1, min(len(group_qts), 2000))
-    out = out.repartitionByRange(parts, "group_qt")
-    keys = ["group_qt"] + (sort_cols or [])
-    return out.sortWithinPartitions(*keys)
+    parts = num_partitions or max(1, min(len(group_qts), MAX_TILE_PARTITIONS))
+    bc = df.sparkSession.sparkContext.broadcast(group_qts)
+
+    @pandas_udf("group_qt bigint, _part_id int")
+    def place_tile(qt: pd.Series) -> pd.DataFrame:
+        g = _groups_of(qt, bc.value)
+        return pd.DataFrame({"group_qt": g, "_part_id": tile_partitions(g, bc.value, parts)})
+
+    out = df.withColumn("_tile", place_tile(F.col(qt_col))).select(
+        *df.columns, "_tile.group_qt", "_tile._part_id"
+    )
+    out = out.repartitionById(parts, "_part_id")
+    return out.sortWithinPartitions("group_qt", *(sort_cols or []))
 
 
 def write_tile_sorted(
@@ -298,43 +331,43 @@ def write_tile_sorted(
     on Iceberg — manifests play the reference's in-file (qt, pos, len) block
     index (writepbffile.cpp:151-199) and the snapshot log is the resume
     point. Sandbox stand-in: parquet + a ``_metrics`` side table holding the
-    per-tile lineage rows (tile id, row count, min/max cell) whose presence
-    marks the committed snapshot — a resumed job reads `_metrics` and skips
-    completed stages (see tests/test_sortblocks.py::test_resume).
+    per-(partition, tile) lineage rows (row count, min/max cell) + the
+    manifest whose presence marks the committed snapshot — a resumed job
+    skips completed stages (see tests/test_sortblocks.py::test_resume).
+
+    The row count is observed on the write job. The lineage is one
+    column-pruned aggregate over (``_part_id``, ``group_qt``, qt) of the
+    committed files, read with the write's schema (no footer-inference
+    job); it has at most |tiles| rows, so it is collected and committed
+    from the driver, and the manifest's rows/tiles derive from it.
     """
     t0 = time.time()
     out = tile_sorted(df, group_qts, qt_col, sort_cols, num_partitions)
-    # stamp the physical partition so lineage rows are per (partition, tile)
-    out = out.withColumn("_part_id", F.spark_partition_id())
-    out.write.mode("overwrite").parquet(os.path.join(path, "data"))
-    spark = df.sparkSession
-    data = spark.read.parquet(os.path.join(path, "data"))
-    metrics = data.groupBy("_part_id", "group_qt").agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.min(qt_col).alias("min_cell"),
-        F.max(qt_col).alias("max_cell"),
+    written = write_observed(out, path)["rows"]
+    lineage = (
+        df.sparkSession.read.schema(out.schema)
+        .parquet(os.path.join(path, "data"))
+        .groupBy("_part_id", "group_qt")
+        .agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.min(qt_col).alias("min_cell"),
+            F.max(qt_col).alias("max_cell"),
+        )
+        .toPandas()
+        .sort_values(["_part_id", "group_qt"], ignore_index=True)
     )
-    metrics.write.mode("overwrite").parquet(os.path.join(path, "_metrics"))
-    agg = data.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct("group_qt").alias("tiles"),
-    ).collect()[0]
-    manifest = {
-        "rows": int(agg["rows"]),
-        "tiles": int(agg["tiles"]),
-        "groups": int(len(group_qts)),
-        "elapsed_sec": time.time() - t0,
-    }
-    # temp-write + rename: the manifest IS the commit record
-    # (is_committed checks existence), so it must appear atomically
-    final = os.path.join(path, "_manifest.json")
-    with open(final + ".tmp", "w") as f:
-        json.dump(manifest, f)
-    os.rename(final + ".tmp", final)
-    return manifest
-
-
-def is_committed(path: str) -> bool:
-    """A stage output is resumable iff its manifest (written after data +
-    metrics) exists — the sandbox stand-in for an Iceberg snapshot commit."""
-    return os.path.exists(os.path.join(path, "_manifest.json"))
+    rows = int(lineage["row_count"].sum())
+    if rows != written:
+        raise RuntimeError(
+            f"tile lineage at {path} counts {rows} rows, the write observed {written}"
+        )
+    atomic_export_local(lineage, os.path.join(path, "_metrics"))
+    return commit_manifest(
+        path,
+        {
+            "rows": rows,
+            "tiles": int(lineage["group_qt"].nunique()),
+            "groups": int(len(group_qts)),
+            "elapsed_sec": time.time() - t0,
+        },
+    )

@@ -6,65 +6,64 @@ src/sorting/sortblocks.cpp:422-501, applied to image rows):
 
   stage "qts"    footprint + quadtree cell per row (Arrow-vectorized kernel)
   stage "groups" cell histogram → driver-side greedy tile split
-  stage "tiles"  group assignment → repartitionByRange → sorted tile table
+  stage "tiles"  group assignment + destination partition (one Arrow pass)
+                 → repartitionById → sorted tile table
                  + per-(partition, tile) lineage metrics
 
 Every stage writes to its own directory under ``out_dir`` and commits by
-writing a manifest LAST (the sandbox stand-in for an Iceberg snapshot
-commit — in production each stage is `writeTo(...).createOrReplace()` on an
-Iceberg table and the manifest is the snapshot). A killed job re-run with
-the same ``out_dir`` skips every committed stage and continues from the
-first uncommitted one, which is the north rule's resume-from-checkpoint
+writing a manifest LAST through the stage-commit helpers shared with the
+curation pipeline (commit.py — the sandbox stand-in for an Iceberg
+snapshot commit; in production each stage is
+`writeTo(...).createOrReplace()` on an Iceberg table and the manifest is
+the snapshot). Row counts come from the write jobs themselves, and the
+committed qts table is read once, with the schema its manifest records,
+for both downstream stages. A killed job re-run with the same
+``out_dir`` skips every committed stage and continues from the first
+uncommitted one, which is the north rule's resume-from-checkpoint
 semantics (tested in tests/test_sortblocks.py::test_resume).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .commit import commit_manifest, is_committed, read_manifest, write_observed
+from .operators import sortblocks
 from .operators.images import with_footprint
-from .operators.sortblocks import is_committed, write_tile_sorted
-import numpy as np
-
-
-def _commit(path: str, manifest: dict) -> dict:
-    """Atomic manifest commit: write to a temp file and rename into place.
-    A kill mid-write must not leave a truncated _manifest.json that
-    is_committed() (existence check) treats as a completed stage — the
-    resume contract is 'manifest present ⇒ stage output complete'."""
-    final = os.path.join(path, "_manifest.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
-    return manifest
-
-
-def _read_manifest(path: str) -> dict:
-    with open(os.path.join(path, "_manifest.json")) as f:
-        return json.load(f)
+from .operators.sortblocks import write_tile_sorted
 
 
 def stage_qts(spark: SparkSession, images: DataFrame, path: str) -> dict:
     """Assign footprint + cell id to every image row; checkpoint the full
-    row (payload columns ride along so the tile write is a single pass)."""
+    row (payload columns ride along so the tile write is a single pass).
+    The manifest records the written schema, so the downstream read needs
+    no footer inference."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
     df = with_footprint(images)
-    df.write.mode("overwrite").parquet(os.path.join(path, "data"))
-    rows = spark.read.parquet(os.path.join(path, "data")).count()
-    return _commit(path, {"rows": int(rows), "elapsed_sec": time.time() - t0})
+    rows = write_observed(df, path)["rows"]
+    return commit_manifest(
+        path,
+        {"rows": rows, "schema": df.schema.jsonValue(), "elapsed_sec": time.time() - t0},
+    )
+
+
+def _read_qts(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    reader = spark.read
+    if "schema" in manifest:  # absent from manifests committed by older versions
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(os.path.join(path, "data"))
 
 
 def stage_groups(
     spark: SparkSession,
-    qts_path: str,
+    qts: DataFrame,
     path: str,
     target: int,
     minsize: int,
@@ -73,25 +72,20 @@ def stage_groups(
 ) -> dict:
     """Histogram → driver greedy grouping; checkpoint the group table."""
     if is_committed(path):
-        return _read_manifest(path)
+        return read_manifest(path)
     t0 = time.time()
-    data = spark.read.parquet(os.path.join(qts_path, "data"))
     # the library grouping op IS the pipeline stage — one code path for
     # histogram → tree → rollup → greedy groups, pinned by the sortblocks
     # tests, instead of a drifting inline copy
-    from .operators.sortblocks import compute_groups
-
-    gqt, gidx, gweight = compute_groups(
-        data, "qt", target=target, minsize=minsize,
+    gqt, gidx, gweight = sortblocks.compute_groups(
+        qts, "qt", target=target, minsize=minsize,
         tree_level=tree_level, rollup=rollup,
     )
-    import pandas as pd
-
     os.makedirs(path, exist_ok=True)
     pd.DataFrame({"group_qt": gqt, "group_idx": gidx, "weight": gweight}).to_parquet(
         os.path.join(path, "groups.parquet")
     )
-    return _commit(
+    return commit_manifest(
         path,
         {
             "groups": int(len(gqt)),
@@ -106,7 +100,7 @@ def stage_groups(
 
 def stage_tiles(
     spark: SparkSession,
-    qts_path: str,
+    qts: DataFrame,
     groups_path: str,
     path: str,
     sort_cols: list[str] | None = None,
@@ -114,18 +108,12 @@ def stage_tiles(
 ) -> dict:
     """Group assignment + tile-sorted layout + per-(partition, tile) lineage."""
     if is_committed(path):
-        return _read_manifest(path)
-    import pandas as pd
-
-    data = spark.read.parquet(os.path.join(qts_path, "data"))
-    gqt = (
-        pd.read_parquet(os.path.join(groups_path, "groups.parquet"))["group_qt"]
-        .to_numpy("int64")
-    )
+        return read_manifest(path)
+    gqt = pd.read_parquet(os.path.join(groups_path, "groups.parquet"))["group_qt"]
     return write_tile_sorted(
-        data,
+        qts,
         path,
-        np.asarray(gqt),
+        gqt.to_numpy("int64"),
         sort_cols=sort_cols or ["image_id"],
         num_partitions=num_partitions,
     )
@@ -156,13 +144,14 @@ def run_image_tiling(
     manifests["qts"] = stage_qts(spark, images, qts_p)
     if stop_after == "qts":
         return manifests
+    qts = _read_qts(spark, qts_p, manifests["qts"])
     manifests["groups"] = stage_groups(
-        spark, qts_p, grp_p, target, minsize, tree_level, rollup
+        spark, qts, grp_p, target, minsize, tree_level, rollup
     )
     if stop_after == "groups":
         return manifests
     manifests["tiles"] = stage_tiles(
-        spark, qts_p, grp_p, til_p, num_partitions=num_partitions
+        spark, qts, grp_p, til_p, num_partitions=num_partitions
     )
     total = time.time() - t0
     manifests["total"] = {

@@ -2877,16 +2877,16 @@ def _tile_sink(spark, sf_dir) -> str:
 
 def q_tile_sink_lineage(spark, sf_dir):
     """Indexed tile sink value gate (SURVEY §2.1): run the REAL sink
-    (write_tile_sorted — range-partition by group tile, sort within
-    partitions, write data + per-(partition, tile) lineage metrics +
-    atomic manifest; the `-index.pbf`/Iceberg-manifest analog,
+    (write_tile_sorted — place each group tile in the partition its DFS
+    position names, sort within partitions, write data + per-(partition,
+    tile) lineage metrics + atomic manifest; the `-index.pbf`/Iceberg-manifest analog,
     writepbffile.cpp:151-199), read the committed ``_metrics`` table back,
     and aggregate it per tile. The oracle re-derives (tile, row_count,
     min/max cell) straight from the element table with the SQL find_tile
     restatement — a mismatch means the sink wrote wrong lineage (lost or
     duplicated rows, wrong extrema), exactly what a resume would then
-    trust. Physical partition ids are summed out: they depend on range
-    sampling, not on semantics."""
+    trust. Physical partition ids are summed out: they are a layout
+    choice (DFS position × partitions ÷ groups), not semantics."""
     path = _tile_sink(spark, sf_dir)
     m = spark.read.parquet(os.path.join(path, "_metrics"))
     return m.groupBy("group_qt").agg(
@@ -2925,9 +2925,11 @@ def q_sorted_layout(spark, sf_dir):
         ROW_NUMBER() OVER (ORDER BY elem_id): equal iff the physical row
         order inside every tile IS elem_id order;
       - ``n_files`` / ``n_parts`` — files/partitions holding the tile
-        (oracle says exactly 1: ranges disjoint);
+        (oracle says exactly 1: a tile's partition is a function of the
+        tile);
       - ``dfs_ok`` — this tile's partition id is ≥ every smaller tile's
-        (oracle says TRUE: range partitioning preserves global DFS order);
+        (oracle says TRUE: the partition id is monotone in the tile's DFS
+        position);
       - row_count + cell extrema as in the lineage gate.
     """
     from pyspark.sql import Window

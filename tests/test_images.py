@@ -6,9 +6,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from osmquadtree_spark.commit import is_committed
 from osmquadtree_spark.kernels import quadtree as qtk
 from osmquadtree_spark.operators.images import decode_stats, resize, verify_roundtrip, with_footprint
-from osmquadtree_spark.operators.sortblocks import compute_groups, is_committed, write_tile_sorted
+from osmquadtree_spark.operators.sortblocks import compute_groups, write_tile_sorted
 from osmquadtree_spark.sources import images as img
 
 

@@ -1,8 +1,8 @@
 """Physical-plan hygiene tests — the engine's declarative-first claims
 (SURVEY §4) must be visible in the plans Catalyst actually produces:
 filters and projections reach the parquet scan, small dimension joins
-broadcast, the tile layout is a range partition + in-partition sort, and
-the assignment kernel stays a single projected Arrow eval (no join)."""
+broadcast, the tile layout is a partition-id exchange + in-partition sort,
+and the assignment kernel stays a single projected Arrow eval (no join)."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -48,17 +48,22 @@ def test_knn_broadcasts_queries(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_tile_layout_is_range_partition_plus_sort(spark, sf_dir):
+def test_tile_layout_is_partition_id_plus_sort(spark, sf_dir):
     from osmquadtree_spark.operators.sortblocks import tile_sorted
 
     df = Q._elements_qt(spark, sf_dir)
     gqt = np.asarray([0], dtype=np.int64)
     out = tile_sorted(df, gqt, "qt", sort_cols=["elem_id"], num_partitions=8)
     plan = _plan(out)
-    assert "rangepartitioning(group_qt" in plan.lower()
+    # the group table is the partitioner: rows go straight to the
+    # partition id the assignment pass computed — no range sampling
+    assert "shufflepartitionidpassthrough" in plan
+    assert "REPARTITION_BY_NUM" in plan
+    assert "rangepartitioning" not in plan.lower()
     # in-partition sort only (Sort [...], false = local), above the exchange
     assert "Sort [group_qt" in plan and "], false, 0" in plan
-    # qt kernel + group assignment fuse into ONE ArrowEvalPython stage
+    assert plan.index("Sort [group_qt") < plan.index("Exchange")
+    # group cell + destination partition come from ONE ArrowEvalPython
     assert plan.count("ArrowEvalPython") == 1
 
 

@@ -126,3 +126,72 @@ def test_compute_groups_scalable_matches_dense(spark):
         scal = compute_groups_scalable(df, "qt", target, minsize, 15)
         for a, b in zip(dense, scal):
             assert np.array_equal(a, b)
+
+
+@pytest.mark.parametrize("case", ["parts_below_groups", "parts_above_groups", "root_only"])
+def test_tile_layout_places_whole_tiles_in_dfs_order(spark, tmp_path, case):
+    """The group table is the partitioner: whatever the partition count,
+    every tile lands in exactly one partition (one file), partitions
+    follow DFS tile order, and the committed lineage equals the data."""
+    from pyspark.sql import functions as F
+
+    from osmquadtree_spark.operators.images import with_footprint
+    from osmquadtree_spark.operators.sortblocks import compute_groups, write_tile_sorted
+
+    imgs = with_footprint(images_df(spark, N_IMAGES, partitions=8))
+    gqt, _, _ = compute_groups(imgs, "qt", TARGET, MINSIZE, 15, rollup=True)
+    assert len(gqt) >= 4
+    gqt, parts = {
+        "parts_below_groups": (gqt, len(gqt) // 3),
+        "parts_above_groups": (gqt, 2 * len(gqt) + 1),
+        "root_only": (np.zeros(1, np.int64), 4),
+    }[case]
+    path = str(tmp_path / case)
+    man = write_tile_sorted(imgs, path, gqt, sort_cols=["image_id"], num_partitions=parts)
+    data = (
+        spark.read.parquet(os.path.join(path, "data"))
+        .select("group_qt", "qt", "_part_id", F.col("_metadata.file_path").alias("file"))
+        .toPandas()
+    )
+    assert len(data) == man["rows"] == N_IMAGES
+    assert data["_part_id"].between(0, parts - 1).all()
+    assert (data.groupby("group_qt")["_part_id"].nunique() == 1).all()
+    assert (data.groupby("file")["_part_id"].nunique() == 1).all()
+    assert (data.groupby("_part_id")["file"].nunique() == 1).all()
+    per_tile = data.groupby("group_qt")["_part_id"].first().sort_index()
+    assert per_tile.is_monotonic_increasing
+    if parts >= len(gqt):
+        assert (data.groupby("_part_id")["group_qt"].nunique() == 1).all()
+    lineage = pd.read_parquet(os.path.join(path, "_metrics"))
+    want = (
+        data.groupby(["_part_id", "group_qt"])["qt"]
+        .agg(row_count="count", min_cell="min", max_cell="max")
+        .reset_index()
+    )
+    got = lineage.sort_values(["_part_id", "group_qt"], ignore_index=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert man["tiles"] == data["group_qt"].nunique()
+    assert man["groups"] == len(gqt)
+
+
+def test_write_tile_sorted_job_count(spark, tmp_path):
+    """The tile commit is the write (map stage + write) plus one lineage
+    aggregate (map stage + collect): a range-sampling pass, a footer
+    inference or a read-back count would each add jobs here."""
+    import uuid
+
+    from osmquadtree_spark.operators.images import with_footprint
+    from osmquadtree_spark.operators.sortblocks import compute_groups, write_tile_sorted
+
+    src = str(tmp_path / "src")
+    with_footprint(images_df(spark, N_IMAGES, partitions=8)).write.parquet(src)
+    imgs = spark.read.parquet(src)
+    gqt, _, _ = compute_groups(imgs, "qt", TARGET, MINSIZE, 15, rollup=True)
+    sc = spark.sparkContext
+    group = f"tile-commit-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "write_tile_sorted job-count guard")
+    try:
+        write_tile_sorted(imgs, str(tmp_path / "tiles"), gqt, sort_cols=["image_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4

@@ -5,11 +5,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from osmquadtree_spark.commit import is_committed
 from osmquadtree_spark.kernels import quadtree as qtk
 from osmquadtree_spark.operators.ann import cosine_topk, lsh_topk
 from osmquadtree_spark.operators.sortblocks import (
     compute_groups,
-    is_committed,
     write_tile_sorted,
 )
 from osmquadtree_spark.operators.spatial import (
