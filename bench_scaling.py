@@ -280,9 +280,10 @@ def edge_table(spark, n: int, partitions: int):
 def run_graph_job(
     spark, n_rows: int, partitions: int, edges_path: str | None = None
 ) -> dict:
-    """Connected components end to end over ~n edges: orient/distinct →
-    alternating large-star/small-star to the fixpoint (each round two
-    groupBy-min shuffles + a checkpoint + one tiny convergence aggregate)
+    """Connected components end to end over ~n edges: orient/distinct
+    into one checkpoint → alternating large-star/small-star until the
+    star-forest test passes (each round two groupBy-min shuffles + a
+    checkpoint; the test before each round one groupBy + one aggregate)
     → full label table. Self-verifying: the chain construction fixes the
     component count (n/32), the total label rows (every node), and every
     component id ≡ 0 (mod 32) with value 32·c summed in closed form."""

@@ -9,6 +9,10 @@ Iceberg snapshot commit: ``is_committed`` is an existence check, and a
 resumed run skips every stage whose manifest is present. So the manifest
 must appear atomically and durably: tmp file → fsync → rename → fsync of
 the directory, and a failed commit leaves no tmp file behind.
+
+The manifest also records the written schema, so the next stage reads
+the committed data with it (``read_committed``) instead of inferring it
+from the parquet footers — a Spark job per stage boundary.
 """
 
 from __future__ import annotations
@@ -16,8 +20,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
@@ -63,6 +68,7 @@ def write_observed(
 ) -> dict:
     """Write ``df`` as the stage's ``data`` parquet; the row count (+ any ``extra``
     aggregate columns) is observed ON the write job — zero read-back.
+    The result also holds the written ``schema`` (JSON) for the manifest.
     ``verify`` re-reads the committed files and cross-checks the observed
     count (an opt-in integrity mode; the manifest gains
     ``verified_rows``)."""
@@ -81,4 +87,20 @@ def write_observed(
                 f"read back {rb}"
             )
         got["verified_rows"] = rb
+    got["schema"] = df.schema.jsonValue()
     return got
+
+
+def read_committed(
+    spark: SparkSession, path: str, manifest: dict | None = None
+) -> DataFrame:
+    """The stage's ``data`` parquet, read with the schema its manifest
+    records (``manifest`` defaults to the committed one; a
+    ``write_observed`` result works too). A manifest committed without
+    ``schema`` by an older version still reads, with footer inference."""
+    if manifest is None:
+        manifest = read_manifest(path)
+    reader = spark.read
+    if "schema" in manifest:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(os.path.join(path, "data"))

@@ -21,16 +21,18 @@ operators a training-data pipeline actually runs:
                    (operators/dsir, λ artifact committed inside)
   stage "shards"   fixed-token-budget shard packing + per-shard
                    manifest (operators/docs.token_shards /
-                    shard_manifest — the resume/lineage table)
+                    assignment_manifest — the resume/lineage table)
 
 Every stage writes its own directory under ``out_dir`` and commits by
 writing ``_manifest.json`` LAST; a killed run re-invoked with the same
 ``out_dir`` skips committed stages and reads each stage's INPUT from the
 previous stage's committed parquet — no recomputation of upstream
-lineage on resume. NULL-text documents are counted into a
-``manual_queue`` bucket at the quality stage (quality_gate returns NULL
-keep for them — they need inspection, not a silent drop) and excluded
-from every downstream stage.
+lineage on resume. The read uses the schema the manifest records
+(``commit.read_committed``), so a stage boundary costs no footer
+inference job. NULL-text documents are counted into a ``manual_queue``
+bucket at the quality stage (quality_gate returns NULL keep for them —
+they need inspection, not a silent drop) and excluded from every
+downstream stage.
 
 Commit-cost shape: stage row counts come from the WRITE job itself
 (``commit.write_observed``, shared with the tiling pipeline) via the
@@ -38,9 +40,11 @@ observation API (``DataFrame.observe`` — accumulator-backed,
 exactly-once per successful job), not a read-back ``count()``;
 at 100 TB a per-stage re-listing + footer scan of every output file
 would double the pipeline's IO for numbers the write already knows. The
-only post-write reads are bounded summaries a write-side aggregate
-cannot express (the ≤ 2^4-combination quality reason histogram — one
-column-pruned aggregate over the ``reasons`` column). ``verify=True``
+only post-write read inside a stage is the per-shard manifest, a
+summary a write-side observation cannot express: one column-pruned
+groupBy(shard_id) over the committed shard assignment, read with the
+write's schema, instead of re-running the assignment's two-level prefix
+sum (the tile lineage aggregate has the same shape). ``verify=True``
 restores the read-back as an explicit integrity mode: each stage
 re-counts its committed parquet and the manifest records
 ``verified_rows``.
@@ -57,13 +61,11 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .commit import commit_manifest, is_committed, read_manifest, write_observed
+from .commit import (
+    commit_manifest, is_committed, read_committed, read_manifest, write_observed,
+)
 
 BENCH_MOD_DEFAULT = 41  # every 41st doc is the synthetic benchmark set
-
-
-def _data(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "data"))
 
 
 def stage_quality(
@@ -138,7 +140,7 @@ def stage_dedup(
     from .operators.components import connected_components
     from .operators.dedup import minhash_lsh_pairs
 
-    docs = _data(spark, quality_path).filter(F.col("keep") == True)  # noqa: E712
+    docs = read_committed(spark, quality_path).filter(F.col("keep") == True)  # noqa: E712
     pairs = minhash_lsh_pairs(
         docs.select("doc_id", "text"), metrics_path=metrics_path
     ).select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
@@ -183,12 +185,14 @@ def stage_decon(
     the filter's fill factor (the false-positive-rate driver).
 
     ``exclude_bench`` anti-joins the benchmark's doc_ids out of the
-    corpus BEFORE the probe (broadcast — the bench side is small by
-    definition): when bench is carved from the corpus itself (the
-    default every-Nth slice), the probe alone only removes bench docs
-    that self-flag with ≥ min_hits distinct grams, so short bench docs
-    would leak into the final shards as training rows AND be
-    double-counted as target+raw by the weights stage. Set False only
+    corpus BEFORE the probe (the planner picks the join: a bench slice
+    of O(corpus/41) rows need not fit a broadcast, and a small eval set
+    still broadcasts under the default threshold): when bench is carved
+    from the corpus itself (the default every-Nth slice), the probe
+    alone only removes bench docs that self-flag with ≥ min_hits
+    distinct grams, so short bench docs would leak into the final shards
+    as training rows AND be double-counted as target+raw by the weights
+    stage. Set False only
     for an external eval set whose doc_id namespace is unrelated to the
     corpus. The probe itself runs ONCE, in the same job as the stage
     write (its flagged side feeds the anti-join; round 4 paid a second
@@ -200,12 +204,11 @@ def stage_decon(
     from .operators import bloom as bl
 
     bf = bl.collect_bloom(bl.bloom_build(bench, n=n, m_bits=m_bits, k=k))
-    canonical_total = int(read_manifest(dedup_path)["canonical"])
-    docs = _data(spark, dedup_path).filter("is_canonical")
+    dedup = read_manifest(dedup_path)
+    canonical_total = int(dedup["canonical"])
+    docs = read_committed(spark, dedup_path, dedup).filter("is_canonical")
     if exclude_bench:
-        docs = docs.join(
-            F.broadcast(bench.select("doc_id").distinct()), "doc_id", "left_anti"
-        )
+        docs = docs.join(bench.select("doc_id").distinct(), "doc_id", "left_anti")
     flagged = (
         bl.bloom_probe(docs.select("doc_id", "text"), bf, min_hits=min_hits)
         .filter("contaminated")
@@ -248,7 +251,7 @@ def stage_weights(
     t0 = time.time()
     from .operators.dsir import dsir_weights
 
-    docs = _data(spark, decon_path).select("doc_id", "text")
+    docs = read_committed(spark, decon_path).select("doc_id", "text")
     both = docs.withColumn("is_target", F.lit(False)).unionByName(
         bench.select("doc_id", "text").withColumn("is_target", F.lit(True))
     )
@@ -271,18 +274,22 @@ def stage_shards(
     spark, weights_path: str, path: str, shard_tokens: int, verify: bool = False
 ) -> dict:
     """Token-budget shard packing of the final corpus + the per-shard
-    lineage manifest a resuming shard writer restarts from. The manifest
-    totals (shards / docs / tokens) are observed on the manifest write —
-    the manifest is the |shards|-row summary table, so no read-back."""
+    lineage manifest a resuming shard writer restarts from. The packing
+    (token_shards' two-level prefix sum) runs once, in the assignment
+    write; the manifest is one column-pruned groupBy(shard_id) over the
+    committed assignment, read with the write's schema
+    (docs.assignment_manifest — the aggregate the shard_manifest gate
+    runs). The manifest totals (shards / docs / tokens) are observed on
+    the manifest write, and the observed docs must equal the assignment's
+    observed rows."""
     if is_committed(path):
         return read_manifest(path)
     t0 = time.time()
-    from .operators.docs import shard_manifest, token_shards
+    from .operators.docs import assignment_manifest, token_shards
 
-    docs = _data(spark, weights_path).select("doc_id", "text")
-    shards = token_shards(docs, shard_tokens)
-    shards.write.mode("overwrite").parquet(os.path.join(path, "data"))
-    man = shard_manifest(docs, shard_tokens)
+    docs = read_committed(spark, weights_path).select("doc_id", "text")
+    w = write_observed(token_shards(docs, shard_tokens), path, verify=verify)
+    man = assignment_manifest(read_committed(spark, path, w))
     obs = Observation()
     man.observe(
         obs,
@@ -291,6 +298,11 @@ def stage_shards(
         F.sum("n_tokens").alias("tokens"),
     ).write.mode("overwrite").parquet(os.path.join(path, "manifest"))
     got = {k: int(v) if v is not None else 0 for k, v in obs.get.items()}
+    if got["docs"] != w["rows"]:
+        raise RuntimeError(
+            f"shard manifest at {path} covers {got['docs']} docs, the "
+            f"assignment write observed {w['rows']}"
+        )
     if verify:
         man_r = spark.read.parquet(os.path.join(path, "manifest"))
         rb = int(man_r.count())
@@ -302,7 +314,12 @@ def stage_shards(
         got["verified_rows"] = rb
     return commit_manifest(
         path,
-        {**got, "shard_tokens": shard_tokens, "elapsed_sec": time.time() - t0},
+        {
+            **got,
+            "schema": w["schema"],
+            "shard_tokens": shard_tokens,
+            "elapsed_sec": time.time() - t0,
+        },
     )
 
 
@@ -336,7 +353,7 @@ def run_curation(
     if docs is None and not is_committed(q_p):
         raise ValueError("stage 'quality' not committed and no input provided")
     if bench is None:
-        src = docs if docs is not None else _data(spark, q_p)
+        src = docs if docs is not None else read_committed(spark, q_p)
         bench = src.filter(F.col("doc_id") % bench_mod == 0).select(
             "doc_id", "text"
         )

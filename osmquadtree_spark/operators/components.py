@@ -13,20 +13,26 @@ ACM SoCC 2014): each round is two groupBy-min shuffles over the edge list,
 convergence in O(log² n) rounds (2-5 in practice), every step a plain
 DataFrame op (no UDFs, no driver-side graph).
 
-Scale shape: state is only the current edge list (≤ input edges, shrinking
-toward one star edge per non-root node); each round shuffles on the node id —
-the natural key, skew-limited because large-star points high-degree
-neighborhoods at their min and the edge list contracts geometrically. Lineage
-is truncated per round via cache.stage_checkpoint (reliable checkpoint dir on
-clusters, localCheckpoint in bounded local runs); convergence is ONE tiny
-aggregate action per round (count + xxhash64 checksum of the edge set).
+Scale shape: the input edges are oriented (large → small) and deduplicated
+ONCE into an eager checkpoint; the node set and the loop both read that
+checkpoint, so the (possibly expensive) plan that produced the edges runs
+exactly once. State is only the current edge list (≤ input edges,
+shrinking toward one star edge per non-root node); each round shuffles on
+the node id — the natural key, skew-limited because large-star points
+high-degree neighborhoods at their min and the edge list contracts
+geometrically. Lineage is truncated per round via cache.stage_checkpoint
+(reliable checkpoint dir on clusters, localCheckpoint in bounded local
+runs). The loop stops on an exact star-forest test run BEFORE each round
+(one groupBy over the u/v roles + one aggregate): an input that is
+already a star forest runs zero rounds, and no round is spent confirming
+a fixpoint already reached.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..cache import cached, release_stage_checkpoint, stage_checkpoint
+from ..cache import release_stage_checkpoint, stage_checkpoint
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -62,76 +68,101 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _oriented(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """The input as distinct (u ≥ v) edges, self-loops KEPT, in an eager
+    checkpoint: the one evaluation of ``edges``. Self-loops stay so the
+    node set read off this frame covers a node that appears only in a
+    self-edge; the loop filters them out."""
+    e = edges.select(
+        F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v")
+    ).distinct()
+    return stage_checkpoint(e, eager=True)
+
+
+def _star_test(e: DataFrame) -> tuple[int, int]:
+    """(edges, violations) of a distinct u > v edge set. It is a star
+    forest — the fixpoint, every non-root node pointing at its
+    component's min — iff no node has two parents (appears twice as u)
+    and no parent is also a child (appears as both v and u). One
+    groupBy over the u/v roles + one aggregate; the per-node child
+    counts sum to the edge count, so the same action feeds the metrics."""
+    roles = e.select(
+        F.col("u").alias("n"), F.lit(1).alias("_c"), F.lit(0).alias("_p")
+    ).unionByName(
+        e.select(F.col("v").alias("n"), F.lit(0).alias("_c"), F.lit(1).alias("_p"))
+    )
+    per = roles.groupBy("n").agg(
+        F.sum("_c").alias("_c"), F.max("_p").alias("_p")
+    )
+    row = per.agg(
+        F.coalesce(F.sum("_c"), F.lit(0)).alias("edges"),
+        F.count_if(
+            (F.col("_c") > 1) | ((F.col("_c") > 0) & (F.col("_p") > 0))
+        ).alias("bad"),
+    ).first()
+    return int(row["edges"]), int(row["bad"])
+
+
 def _converged_star(
-    edges: DataFrame,
-    id_a: str,
-    id_b: str,
+    oriented: DataFrame,
     max_rounds: int,
     metrics_path: str | None = None,
     operator: str = "connected_components",
 ) -> DataFrame:
-    """Run the alternation to its fixpoint and return the star forest as
-    checkpointed (u=non-root node, v=component root) edges — exactly one
-    row per non-root node; roots carry no row (they label themselves).
+    """Alternate large-star / small-star over the ``u != v`` rows of
+    ``oriented`` (see :func:`_oriented`) until they form a star forest,
+    and return it as (u=non-root node, v=component root) edges — exactly
+    one row per non-root node; roots carry no row (they label
+    themselves).
 
-    Convergence is detected by a (count, xxhash64-sum) checksum of the
-    oriented edge set: one tiny aggregate per round, the only driver-side
-    state. ``max_rounds`` is a runaway backstop far above the O(log² n)
-    bound (n = 2^30 nodes needs ~10 rounds); hitting it raises instead of
-    returning a wrong answer."""
-    e = (
-        edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-    e = stage_checkpoint(e, eager=True)
-    prev = None
+    The stop test (:func:`_star_test`) runs BEFORE each round and is
+    exact: both alternation steps preserve connectivity, so once the
+    edge set is a star forest each star is one input component and its
+    root (the star's smallest id, by orientation) is the canonical
+    label. An input that is already a star forest runs zero rounds.
+    ``max_rounds`` is a runaway backstop far above the O(log² n) bound
+    (n = 2^30 nodes needs ~10 rounds); reaching it without a star forest
+    raises instead of returning a wrong answer.
+
+    Metrics (``metrics_path``): ``rounds`` = rounds run (0 when the
+    input is already a star forest) and ``edges_round_<i>`` = edges
+    after round i, for i < rounds."""
+    e = oriented.filter(F.col("u") != F.col("v"))
+    prev = None  # the previous round's checkpoint (never ``oriented``)
     rounds = 0
     edge_counts: list[int] = []
-    for _ in range(max_rounds):
-        old = e
-        # eager=False: the convergence aggregate right below is the
-        # materializing action, so each round pays ONE pass over the new
-        # edge set instead of two (eager checkpoint job + agg job) — the
-        # round-loop's fixed cost is the serial term of the whole
-        # operator's Amdahl profile (measured: ~9 s/round eager vs ~5 s
-        # non-eager at 8M edges), and the checkpoint still truncates
-        # lineage before the next round reads it
-        e = stage_checkpoint(_small_star(_large_star(e)), eager=False)
-        # decimal(38,0) accumulator: an int64 sum of xxhash64 terms overflows
-        # (ANSI mode raises); decimal holds ~10^38, beyond any edge count
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        # the agg above fully materialized THIS round's checkpoint blocks
-        # (lineage is truncated — nothing downstream can reach the old
-        # round), so the previous round's blocks are dead weight: drop
-        # them NOW instead of leaving them to the async reference-tracking
-        # cleaner. Without this the loop accumulates O(rounds × edges) of
-        # MEMORY_AND_DISK blocks, which at the 2 GiB/core scaling-bench
-        # sizing forces spill-to-disk churn mid-loop — the graph job was
-        # the scaling trilogy's only IO-sensitive workload, and this was
-        # the IO. Storage is now bounded by the live round (+ its parent
-        # during the one pass that derives it).
-        release_stage_checkpoint(old)
-        rounds += 1
-        edge_counts.append(row["n"])
-        sig = (row["n"], row["h"])
-        if sig == prev:
+    while True:
+        # the test's aggregate is the action that materializes this
+        # round's lazy checkpoint, so each round pays one pass over its
+        # new edge set for the checkpoint and the test together
+        n, bad = _star_test(e)
+        if rounds:
+            edge_counts.append(n)
+        if prev is not None:
+            # lineage is truncated at this round's now-materialized
+            # checkpoint, so the previous round's blocks are dead weight:
+            # drop them NOW instead of leaving them to the async
+            # reference-tracking cleaner. Without this the loop
+            # accumulates O(rounds × edges) of MEMORY_AND_DISK blocks and
+            # forces spill-to-disk churn mid-loop at the scaling bench's
+            # 2 GiB/core sizing.
+            release_stage_checkpoint(prev)
+        if not bad:
             break
-        prev = sig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds "
-            "(theoretical bound is O(log^2 n) ≈ 10 for 2^30 nodes) — the "
-            "edge set is oscillating, which the alternating algorithm "
-            "excludes; treat as a bug, not a data property"
-        )
+        if rounds == max_rounds:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_rounds} rounds "
+                "(theoretical bound is O(log^2 n) ≈ 10 for 2^30 nodes) — "
+                "treat as a bug, not a data property"
+            )
+        # round 0 reads the oriented checkpoint, which the node set still
+        # needs; only round outputs are released
+        prev = e if rounds else None
+        # eager=False: the star test above is the materializing action
+        # (measured: ~9 s/round eager vs ~5 s non-eager at 8M edges — the
+        # round loop's fixed cost is the serial term of the operator)
+        e = stage_checkpoint(_small_star(_large_star(e)), eager=False)
+        rounds += 1
     if metrics_path is not None:
         # convergence observability (the "no silent caps" discipline):
         # rounds-to-fixpoint and the per-round edge counts go to the
@@ -162,17 +193,14 @@ def connected_components(
     component_id = the smallest node id in the component (the canonical
     "keep" representative of a duplicate cluster).
 
-    Alternates large-star / small-star until the edge set is a fixpoint —
-    at that point the edge list IS the star forest (each non-root node has
-    exactly the edge (node, root)); see _converged_star for the loop and
-    convergence machinery."""
-    star = _converged_star(edges, id_a, id_b, max_rounds, metrics_path, operator)
-    # node set off the CHECKPOINTED star input is not enough — roots of
-    # singleton-free components appear only on the v side, isolated
-    # self-loop-only inputs were filtered; rebuild from the original edges
-    nodes = cached(
-        edges.select(F.col(id_a).alias("node"))
-        .unionByName(edges.select(F.col(id_b).alias("node")))
+    ``edges`` is evaluated once, into the oriented checkpoint; the node
+    set is that checkpoint's distinct endpoints (self-loops included) and
+    the labels are the star forest of :func:`_converged_star`."""
+    oriented = _oriented(edges, id_a, id_b)
+    star = _converged_star(oriented, max_rounds, metrics_path, operator)
+    nodes = (
+        oriented.select(F.col("u").alias("node"))
+        .unionByName(oriented.select(F.col("v").alias("node")))
         .distinct()
     )
     labels = star.select(F.col("u").alias("node"), F.col("v").alias("component_id"))
@@ -208,7 +236,7 @@ def dup_clusters(
     is_representative row — "keep representatives, drop the rest" can
     never silently delete a whole cluster. One left join + one
     groupBy(min, count) + one re-join."""
-    star = _converged_star(edges, id_a, id_b, max_rounds=30,
+    star = _converged_star(_oriented(edges, id_a, id_b), max_rounds=30,
                            metrics_path=metrics_path, operator=operator)
     labels = star.select(F.col("u").alias("node"), F.col("v").alias("_root"))
     base = (

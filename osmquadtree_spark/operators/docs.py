@@ -953,7 +953,6 @@ def shared_span_pairs(
     gram_cap: int | None = 100_000,
     metrics_path: str | None = None,
     hash_grams: bool = True,
-    operator: str = "ngram_jaccard",
 ) -> DataFrame:
     """(doc_a, doc_b, max_span_tokens, n_runs): exact shared-substring
     detection — for every document pair sharing a contiguous run of at
@@ -1124,7 +1123,6 @@ def dedup_span_mask(
     gram_cap: int | None = 100_000,
     metrics_path: str | None = None,
     hash_grams: bool = True,
-    operator: str = "ngram_jaccard",
 ) -> DataFrame:
     """(doc_id, n_tokens, dup_tokens, dup_intervals, dup_frac_x10000):
     the REMOVAL half of ExactSubstr dedup (Lee et al. 2022) — for every
@@ -1204,10 +1202,16 @@ def shard_manifest(
     reads the manifest, sees which shard ids are committed, and restarts
     from the first absent one; min/max doc bound each shard's id range so
     a shard can be re-derived (and audited) from the source table alone.
-    One extra groupBy(shard_id) over the assignment — map-side combined,
-    |shards| output rows."""
-    s = token_shards(docs, shard_tokens, band)
-    return s.groupBy("shard_id").agg(
+    The aggregate is :func:`assignment_manifest`, which the curation
+    shards stage runs over its committed assignment instead."""
+    return assignment_manifest(token_shards(docs, shard_tokens, band))
+
+
+def assignment_manifest(assignment: DataFrame) -> DataFrame:
+    """The shard manifest of a :func:`token_shards` assignment: one
+    groupBy(shard_id) over (shard_id, doc_id, n_tokens) — map-side
+    combined, |shards| output rows."""
+    return assignment.groupBy("shard_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         F.min("doc_id").alias("min_doc"),

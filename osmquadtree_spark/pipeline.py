@@ -30,9 +30,10 @@ import time
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
-from .commit import commit_manifest, is_committed, read_manifest, write_observed
+from .commit import (
+    commit_manifest, is_committed, read_committed, read_manifest, write_observed,
+)
 from .operators import sortblocks
 from .operators.images import with_footprint
 from .operators.sortblocks import write_tile_sorted
@@ -46,19 +47,8 @@ def stage_qts(spark: SparkSession, images: DataFrame, path: str) -> dict:
     if is_committed(path):
         return read_manifest(path)
     t0 = time.time()
-    df = with_footprint(images)
-    rows = write_observed(df, path)["rows"]
-    return commit_manifest(
-        path,
-        {"rows": rows, "schema": df.schema.jsonValue(), "elapsed_sec": time.time() - t0},
-    )
-
-
-def _read_qts(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    reader = spark.read
-    if "schema" in manifest:  # absent from manifests committed by older versions
-        reader = reader.schema(StructType.fromJson(manifest["schema"]))
-    return reader.parquet(os.path.join(path, "data"))
+    w = write_observed(with_footprint(images), path)
+    return commit_manifest(path, {**w, "elapsed_sec": time.time() - t0})
 
 
 def stage_groups(
@@ -144,7 +134,7 @@ def run_image_tiling(
     manifests["qts"] = stage_qts(spark, images, qts_p)
     if stop_after == "qts":
         return manifests
-    qts = _read_qts(spark, qts_p, manifests["qts"])
+    qts = read_committed(spark, qts_p, manifests["qts"])
     manifests["groups"] = stage_groups(
         spark, qts, grp_p, target, minsize, tree_level, rollup
     )

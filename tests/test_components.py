@@ -41,6 +41,17 @@ def _run(spark, edges):
     return {r.node: r.component_id for r in got}
 
 
+def _convergence(spark, mp):
+    from osmquadtree_spark import metrics
+
+    metrics.commit_pending()
+    return {
+        r.bucket_key: r.value
+        for r in metrics.read_metrics(spark, mp).collect()
+        if r.operator == "connected_components"
+    }
+
+
 def test_chain_and_islands(spark):
     # chain 1-2-3-4 (transitivity), island {10,11}, triangle {20,21,22}
     edges = [(1, 2), (2, 3), (3, 4), (11, 10), (20, 21), (21, 22), (20, 22)]
@@ -127,20 +138,55 @@ def test_dup_clusters_recanonicalizes_missing_root(spark):
 
 
 def test_convergence_metrics_committed(spark, tmp_path):
-    from osmquadtree_spark import metrics
-
     mp = str(tmp_path / "metrics")
     edges = _edges_df(spark, [(i, i + 1) for i in range(100, 116)])
     cc.connected_components(edges, metrics_path=mp).collect()
-    metrics.commit_pending()
-    rows = {
-        r.bucket_key: r.value
-        for r in metrics.read_metrics(spark, mp).collect()
-        if r.operator == "connected_components"
-    }
+    rows = _convergence(spark, mp)
     assert rows["rounds"] >= 2  # a 16-node chain needs >1 alternation
     # final round's edge count = 16 non-root nodes of the one component
     assert rows[f"edges_round_{rows['rounds'] - 1}"] == 16
+
+
+def test_star_input_runs_zero_rounds(spark, tmp_path):
+    """An input that is already a star forest (every non-root node has one
+    edge, to its component's min) stops before the first round, with the
+    exact labels — the benchmark's isolated planted pairs are this case."""
+    mp = str(tmp_path / "metrics")
+    edges = [(1, 5), (7, 1), (1, 9), (12, 10), (30, 31), (40, 40)]
+    got = {
+        r.node: r.component_id
+        for r in cc.connected_components(_edges_df(spark, edges), metrics_path=mp).collect()
+    }
+    assert got == {1: 1, 5: 1, 7: 1, 9: 1, 10: 10, 12: 10, 30: 30, 31: 30, 40: 40}
+    assert _convergence(spark, mp) == {"rounds": 0}
+
+
+def test_max_rounds_raises(spark):
+    # a 64-node path needs more than one round; the backstop must raise,
+    # never return the unconverged labels
+    edges = [(i, i + 1) for i in range(100, 164)]
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        cc.connected_components(_edges_df(spark, edges), max_rounds=1)
+
+
+def test_edges_input_evaluated_once(spark):
+    """The node set and the round loop both read the oriented checkpoint,
+    so the plan producing the edges (in the curation chain, the whole
+    MinHash-LSH pair plan) runs once, not again for the node set."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        acc.add(1)
+        return x
+
+    tap_udf = F.udf(tap, "bigint").asNondeterministic()
+    chain = [(i, i + 1) for i in range(200, 216)]
+    edges = _edges_df(spark, chain).select(tap_udf("id_a").alias("id_a"), "id_b")
+    got = {r.node: r.component_id for r in cc.connected_components(edges).collect()}
+    assert set(got.values()) == {200} and len(got) == 17
+    assert acc.value == len(chain)
 
 
 def test_cluster_split_leakage_safety_and_determinism(spark):

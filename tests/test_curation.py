@@ -9,7 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from osmquadtree_spark.curation import run_curation
+from osmquadtree_spark.commit import commit_manifest, write_observed
+from osmquadtree_spark.curation import run_curation, stage_shards
 
 # permissive thresholds for the tiny-vocab synthetic corpus: the default
 # Gopher-style mean-frequency rule correctly drops ~98% of word salad,
@@ -152,3 +153,40 @@ def test_manifest_files_are_json(full_run):
     for stage in ("quality", "dedup", "decon", "weights", "shards"):
         with open(os.path.join(out, stage, "_manifest.json")) as f:
             assert isinstance(json.load(f), dict)
+
+
+def test_stage_shard_manifest_matches_gate(spark, docs, tmp_path):
+    """The stage builds its manifest from the committed assignment; it must
+    equal the shard_manifest gate's operator run over the same documents."""
+    from osmquadtree_spark.operators.docs import shard_manifest
+
+    src = str(tmp_path / "weights")
+    corpus = docs.select("doc_id", "text")
+    commit_manifest(src, write_observed(corpus, src))
+    stage_shards(spark, src, str(tmp_path / "shards"), 512)
+    got = spark.read.parquet(str(tmp_path / "shards" / "manifest"))
+    want = shard_manifest(corpus, 512)
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert len(want.collect()) > 10
+
+
+def test_run_curation_job_count(spark, docs, tmp_path):
+    """The whole chain's Spark jobs under one job group. Re-running the
+    MinHash pair plan for the component node set, an idle convergence
+    round, re-running the shard packing for the manifest or a footer
+    inference per stage read would each add jobs here."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"curation-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "run_curation job-count guard")
+    try:
+        run_curation(spark, docs, str(tmp_path / "run"), quality_params=QP)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # with a checkpoint dir set on the session (tests/test_cache.py sets
+    # one, and it sticks), stage checkpoints are reliable: writing the
+    # oriented-edge checkpoint's files is one more job
+    reliable = sc._jsc.sc().getCheckpointDir().isDefined()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 56 + reliable

@@ -1,9 +1,12 @@
-"""Pin the transcribed default style tables verbatim against the reference
-checkout — a transcription error in functions/style_defaults.py would
-otherwise be invisible to the driver gate (engine and oracle share the
-tables by design). Skipped when the reference tree is absent."""
+"""Pin the transcribed default style tables — a transcription error in
+functions/style_defaults.py would otherwise be invisible to the value
+gates (engine and oracle share the tables by design). Frozen SHA-256
+digests of the four tables run unconditionally; the verbatim
+comparisons against the reference checkout run when it is present."""
 
 import ast
+import hashlib
+import json
 import os
 
 import pytest
@@ -14,10 +17,42 @@ from osmquadtree_spark.functions import style_defaults as sd
 REF_STYLE = "/root/reference/python/oqt/geometry/style.py"
 REF_MINZOOM = "/root/reference/python/oqt/geometry/minzoomvalues.py"
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not (os.path.exists(REF_STYLE) and os.path.exists(REF_MINZOOM)),
     reason="reference checkout not present",
 )
+
+
+def _digest(value) -> str:
+    return hashlib.sha256(json.dumps(value).encode()).hexdigest()
+
+
+# each table in the form its verbatim test compares: ordered where the
+# reference order matters, sorted where the comparison is a set
+FROZEN = {
+    "FEATURE_KEYS": (
+        lambda: list(sd.FEATURE_KEYS),
+        "22d2e3b030ba0d8f5f11325c5118cdbec46da296959476335f515e16cbfc5fff",
+    ),
+    "DROP_KEYS": (
+        lambda: sorted(set(sd.DROP_KEYS)),
+        "0c6b11006e9e2f3203f3141331fba711398a576694e5b23198ae3329e889a844",
+    ),
+    "POLYGON_TAGS": (
+        lambda: [[k, t, sorted(v)] for k, (t, v) in sorted(sd.POLYGON_TAGS.items())],
+        "c791489ae70b1cf66dfd3d41d70022028274608112d1a0b0bb9282a95f24713e",
+    ),
+    "MINZOOM_DEFAULT": (
+        lambda: [list(r) for r in sd.MINZOOM_DEFAULT],
+        "e588e707c06b7230ca4f64dfaa1a796e6160aa979f4a1fe8e800971138925e62",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FROZEN))
+def test_table_digest_frozen(name):
+    canonical, want = FROZEN[name]
+    assert _digest(canonical()) == want, name
 
 
 def _module_assign(path, name):
@@ -33,14 +68,17 @@ def _module_assign(path, name):
     raise AssertionError(f"{name} not found in {path}")
 
 
+@needs_reference
 def test_feature_keys_verbatim():
     assert list(sd.FEATURE_KEYS) == _module_assign(REF_STYLE, "default_feature_keys")
 
 
+@needs_reference
 def test_drop_keys_verbatim():
     assert set(sd.DROP_KEYS) == set(_module_assign(REF_STYLE, "osm_carto_drop_keys"))
 
 
+@needs_reference
 def test_polygon_tags_verbatim():
     ref = _module_assign(REF_STYLE, "default_polygon_tags")
     assert set(sd.POLYGON_TAGS) == set(ref)
@@ -53,6 +91,7 @@ def test_polygon_tags_verbatim():
             assert typ == rt and set(vals) == set(rvals), k
 
 
+@needs_reference
 def test_minzoom_default_verbatim():
     ref = [tuple(r) for r in _module_assign(REF_MINZOOM, "default")]
     assert list(sd.MINZOOM_DEFAULT) == ref
