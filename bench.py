@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: the headline gates (``headline=True`` in
+osmquadtree_spark.queries.GATES) at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, ...}
 
 The primary north-rule metric (tiles+rows/sec on the quadtree-assignment +
@@ -20,30 +21,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "qt_assign",
-    "qt_cell_histogram",
-    "qt_lca_by_order",
-    "group_assign_fine",
-    "bbox_extract",
-    "poly_extract",
-    "xyz_tiles",
-    "knn_points",
-    "changes_merge",
-    "update_change_tiles",
-    "geom_way_stats",
-    "multipolygon_assembly",
-    "tpch_q1",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_embedding_lsh",
-    "ngram_jaccard_pairs",
-    "text_analysis",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-]
 
 
 def build_spark(cpus: int):
@@ -85,11 +62,13 @@ def main() -> int | None:
 
     spark = build_spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    # merge the repo-local sweep extension so --queries can time any
-    # value-gated operator, not just the external driver's capped 50
-    registry = {**Q.spark_queries(), **Q.sweep_queries()}
-    names = args.queries.split(",") if args.queries else HEADLINE
-    unknown = [n for n in names if n not in registry]
+    # --queries can time any gate, not just the external driver's capped 50
+    names = (
+        args.queries.split(",")
+        if args.queries
+        else [n for n, g in Q.GATES.items() if g.headline]
+    )
+    unknown = [n for n in names if n not in Q.GATES]
     if unknown:
         # fail BEFORE the untimed setup (input count, qts-store build,
         # warmup) — a typo'd name would otherwise surface as a bare
@@ -138,7 +117,7 @@ def main() -> int | None:
         # from the on-disk qts store on EVERY attempt.
         Q.clear_session_caches(keep_input_stores=rep > 0)
         for name in names:
-            fn = registry[name]
+            fn = Q.GATES[name].build
             t0 = time.time()
             df = fn(spark, args.sf_dir)
             t1 = time.time()

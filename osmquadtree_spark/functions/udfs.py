@@ -122,19 +122,3 @@ def round_qt_sql(expr: str, level: int) -> str:
         f"CASE WHEN ({expr}) & 31 < {level} THEN ({expr}) "
         f"ELSE ((({expr}) >> {sh}) << {sh}) + {level} END"
     )
-
-
-def is_ancestor_sql(anc: str, qt: str) -> str:
-    """SQL predicate: ``anc`` is ancestor-or-equal of ``qt``.
-
-    Written as an expression string because the shift amount depends on the
-    ancestor's depth (Spark SQL's shiftright accepts column shift amounts,
-    the Python ``F.shiftright`` wrapper does not). Valid in Spark SQL and
-    DuckDB (DuckDB uses ``>>``, Spark accepts both).
-    """
-    la = f"(({anc}) & 31)"
-    sh = f"(63 - 2 * {la})"
-    return (
-        f"({la} <= (({qt}) & 31) AND "
-        f"(shiftleft(shiftright({qt}, {sh}), {sh}) + {la}) = ({anc}))"
-    )

@@ -246,13 +246,6 @@ def bbox_scalar(qt: int, buffer: float = 0.0) -> tuple[int, int, int, int]:
     )
 
 
-def overlaps_quadtree_scalar(box: tuple[int, int, int, int], qt: int) -> bool:
-    """quadtree.cpp:259-262 — cell bbox buffered by 0.05 vs filter box."""
-    minx, miny, maxx, maxy = bbox_scalar(qt, 0.05)
-    a, b, c, d = box
-    return not (minx > c or maxx < a or miny > d or maxy < b)
-
-
 # -- vectorized numpy kernels --------------------------------------------------
 
 
@@ -532,12 +525,3 @@ def tiles_overlapping_box(tile_qts, minx, miny, maxx, maxy, buffer: float = BUFF
         & (y0 - slop <= qy1)
         & (y1 + slop >= qy0)
     )
-
-
-def string_arr(qt) -> np.ndarray:
-    """Vectorized quadtree::string → object array of A-D path strings."""
-    qt = _as_i64(qt)
-    out = np.empty(qt.shape, dtype=object)
-    for i, v in enumerate(qt.ravel()):
-        out.ravel()[i] = string_scalar(int(v))
-    return out

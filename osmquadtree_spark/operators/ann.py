@@ -492,24 +492,16 @@ OUTLIER_OFFSET = 1 << 20      # shift making every code nonnegative (|x| ≤ 102
 OUTLIER_FACTOR = 4            # flag when dist² > FACTOR · floor-mean dist²
 
 
-# above this dim, the 3×dim Catalyst column algebra's driver-side
-# expression-tree construction dominates (≈1.6 s at dim 64 already, and
-# it grows linearly); the Arrow kernel's construct cost is flat in dim
-OUTLIER_ARROW_DIM = 128
-
-
-def _outlier_dist2_arrow(
+def _outlier_dist2(
     vectors: DataFrame, dim: int, label_col: str, vec_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow twin of the quantize→centroid→distance passes: identical
-    int64 math (float64 quantize is the same IEEE ops, int64 sums are
-    associative-exact, floor-div on nonnegative operands), but the dim
-    loop lives in numpy instead of a 3×dim Catalyst expression tree —
-    construct time flat in dim. Two mapInPandas passes over the corpus
-    (centroid partials, then distances), mirroring the column path's two
-    scans; the centroid table is |labels| rows (the same boundedness the
-    column path's broadcast join already assumes) and ships to pass 2 as
-    a sparkContext broadcast."""
+    """The quantize→centroid→distance passes in numpy over Arrow batches
+    (int64 sums are associative-exact, floor-div on nonnegative operands),
+    so construct time is flat in dim — a Catalyst expression tree over
+    3×dim columns paid ≈1.6 s of driver-side building at dim 64 alone.
+    Two mapInPandas passes over the corpus (centroid partials, then
+    distances); the centroid table is |labels| rows and ships to pass 2
+    as a sparkContext broadcast."""
     import pandas as pd
 
     spark = vectors.sparkSession
@@ -525,7 +517,7 @@ def _outlier_dist2_arrow(
 
     def _label_groups(pdf):
         # NULL-safe grouping: NaN/None labels form their own group, keyed
-        # None (the column path's struct-wrapped join key, restated)
+        # None (the struct-wrapped join key, restated)
         lab = pdf[label_col]
         na = lab.isna().to_numpy()
         vals = lab.to_numpy(object)
@@ -607,7 +599,6 @@ def label_outlier_stats(
     label_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    kernel: str | None = None,
 ) -> DataFrame:
     """(vec_id, label, dist2, mean_dist2, is_outlier): per-label centroid
     distance — the standard embedding label-noise / mislabeled-example
@@ -627,84 +618,19 @@ def label_outlier_stats(
     |x| ≤ 2, dist² ≤ dim·(4·1024)² ≈ 2^30 at dim 64, so per-label dist²
     sums stay < 2^63 up to ~2^33 rows per label, and code sums to ~2^41).
 
-    Scale shape at 10^12 vectors: quantization is one JVM projection; the
-    centroid pass is ONE groupBy(label) with `dim` partially-aggregated
-    sums (no explode — the row count crossing the shuffle is |labels|·
-    tasks, not rows·dim); both stat lookups broadcast (|labels| rows).
-    Two scans of the input (centroid pass, distance pass) — caching the
-    quantized corpus is a corpus-sized footprint, recomputing the
-    projection is cheaper; the SLIM per-row distance frame IS cached so
-    the mean aggregate and the final join share one distance pass. NULL
-    embeddings are excluded (no codes); NULL labels form their own group
-    (struct-wrapped join keys).
-
-    ``kernel``: "column" = the 3×dim Catalyst expression tree (widest
-    whole-stage-codegen span, zero Python in the quantize/centroid hot
-    path — best at moderate dim); "arrow" = numpy twin with construct
-    cost flat in dim (a dim-1024 corpus pays ~25 s of driver-side
-    expression building on the column path, VERDICT r4 Wrong #5); None =
-    auto by OUTLIER_ARROW_DIM. Both produce bit-identical values — the
-    arrow path is EQ-gated against the same DuckDB twin in the sweep and
-    pinned equal in tests/test_label_outliers.py.
+    Scale shape at 10^12 vectors: quantization runs per Arrow batch; the
+    centroid pass ships per-task partial sums (|labels|·tasks rows, never
+    rows·dim — no explode) through ONE groupBy(label) merge, and the
+    |labels|-row centroid table is broadcast. Two scans of the input
+    (centroid pass, distance pass) — caching the quantized corpus is a
+    corpus-sized footprint, recomputing the quantization is cheaper; the
+    SLIM per-row distance frame IS cached so the mean aggregate and the
+    final join share one distance pass. NULL embeddings are excluded (no
+    codes); NULL labels form their own group (struct-wrapped join keys).
     """
-    if kernel is None:
-        kernel = "arrow" if dim > OUTLIER_ARROW_DIM else "column"
     from ..cache import cached
 
-    if kernel == "arrow":
-        d = cached(
-            _outlier_dist2_arrow(vectors, dim, label_col, vec_col, id_col)
-        )
-        m = d.groupBy("_k").agg(
-            F.expr("sum(dist2) div count(*)").cast("bigint").alias("mean_dist2")
-        )
-        return d.join(F.broadcast(m), "_k").select(
-            id_col,
-            label_col,
-            "dist2",
-            "mean_dist2",
-            (F.col("dist2") > OUTLIER_FACTOR * F.col("mean_dist2")).alias("is_outlier"),
-        )
-    s = float(OUTLIER_SCALE)
-    q = [
-        (
-            F.floor(F.element_at(vec_col, i + 1).cast("double") * s + 0.5).cast("bigint")
-            + OUTLIER_OFFSET
-        ).alias(f"_q{i}")
-        for i in range(dim)
-    ]
-    base = vectors.filter(F.col(vec_col).isNotNull()).select(
-        id_col, label_col, F.struct(F.col(label_col).alias("k")).alias("_k"), *q
-    )
-    cent = base.groupBy("_k").agg(
-        F.count("*").alias("_cnt"),
-        *[F.sum(f"_q{i}").alias(f"_s{i}") for i in range(dim)],
-    )
-    cm = cent.select(
-        "_k",
-        *[
-            F.expr(f"_s{i} div _cnt").alias(f"_c{i}")  # nonneg ⇒ floor
-            for i in range(dim)
-        ],
-    )
-    diff2 = functools.reduce(
-        operator.add,
-        [
-            (F.col(f"_q{i}") - F.col(f"_c{i}")) * (F.col(f"_q{i}") - F.col(f"_c{i}"))
-            for i in range(dim)
-        ],
-    )
-    # the slim (id, label, _k, dist2) frame feeds BOTH the mean aggregate
-    # and the returned join — without the cache the quantization
-    # projection + centroid join over the full corpus runs twice (a whole
-    # extra input scan at 10^12 vectors); caching 4 columns is cheap,
-    # unlike the corpus-sized quantized vectors (which stay uncached by
-    # the recompute-over-cache argument above)
-    d = cached(
-        base.join(F.broadcast(cm), "_k").select(
-            id_col, label_col, "_k", diff2.cast("bigint").alias("dist2")
-        )
-    )
+    d = cached(_outlier_dist2(vectors, dim, label_col, vec_col, id_col))
     m = d.groupBy("_k").agg(
         F.expr("sum(dist2) div count(*)").cast("bigint").alias("mean_dist2")
     )

@@ -236,6 +236,7 @@ def collect_bloom(bloom: DataFrame) -> BloomFilter:
     return BloomFilter(out, n=int(rows[0]["n"]), k=int(rows[0]["k"]))
 
 
+# Twin of docs.benchmark_overlap for a different regime: shuffle-free fixed-size bitmap.
 def bloom_probe(
     docs: DataFrame,
     bf: BloomFilter,

@@ -432,11 +432,6 @@ def minhash_lsh_pairs_incremental(
     return _minhash_rescore(cand, sigs_all, min_matches)
 
 
-def _word_hash(w):
-    """Spread the 14-bit word code over 32 bits (Knuth multiplicative)."""
-    return (_word_code(w) * F.lit(KNUTH)) % F.lit(1 << 32)
-
-
 def simhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, sig): 32-bit SimHash over word hashes. Bit j of the
     signature is set iff the j-th bits of the word hashes are set in at

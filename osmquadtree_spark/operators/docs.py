@@ -59,28 +59,6 @@ def token_count(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, stopword_cnt, mean_word_len_x100, quality_bucket):
-    length/stopword heuristics. mean word length is kept as an exact integer
-    (len*100 // tokens) to stay float-free."""
-    words = F.split(F.col("text"), " ")
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_tokens = F.size(words).cast("bigint")
-    stop_cnt = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))).cast("bigint")
-    # integer division (operands positive) — exact parity with SQL `//`
-    mwl = F.expr("CAST(length(text) AS BIGINT) * 100 DIV CAST(size(split(text, ' ')) AS BIGINT)")
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        stop_cnt.alias("stopword_cnt"),
-        mwl.alias("mean_word_len_x100"),
-        F.when((n_tokens >= F.lit(20)) & (stop_cnt * 5 >= n_tokens), F.lit("high"))
-        .when(n_tokens >= F.lit(20), F.lit("mid"))
-        .otherwise(F.lit("low"))
-        .alias("quality_bucket"),
-    )
-
-
 def lang_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, lang_pred): argmax of per-language marker-word counts with a
     deterministic alphabetical tie-break — an n-gram-free language-ID
@@ -416,6 +394,7 @@ def ngram_pairs(
     return out
 
 
+# Twin of bloom.bloom_probe: the exact n-gram join, kept as the probe's oracle.
 def benchmark_overlap(
     train: DataFrame,
     bench: DataFrame,

@@ -27,29 +27,12 @@ from ..kernels import quadtree as qtk
 Box = tuple[int, int, int, int]  # minx, miny, maxx, maxy fixed-point
 
 
-def box_filter(df: DataFrame, box: Box, minx="minx", miny="miny", maxx="maxx", maxy="maxy") -> DataFrame:
-    """Rows whose bbox overlaps the query box — closed intervals, pure JVM
-    comparisons (contains/overlaps, bbox.hpp:38-50)."""
-    a, b, c, d = box
-    return df.filter(
-        (F.col(minx) <= F.lit(c))
-        & (F.col(maxx) >= F.lit(a))
-        & (F.col(miny) <= F.lit(d))
-        & (F.col(maxy) >= F.lit(b))
-    )
-
-
 def make_pnpoly_udf(poly: gk.Polygon):
     @pandas_udf("boolean")
     def pnpoly(lon: pd.Series, lat: pd.Series) -> pd.Series:
         return pd.Series(gk.point_in_poly(poly, lon.to_numpy("int64"), lat.to_numpy("int64")))
 
     return pnpoly
-
-
-def poly_filter(df: DataFrame, poly: gk.Polygon, lon="minx", lat="miny") -> DataFrame:
-    """Point-in-polygon row filter (pnpoly, geometry.cpp:30-80)."""
-    return df.filter(make_pnpoly_udf(poly)(F.col(lon), F.col(lat)))
 
 
 def prune_tiles(tile_qts: np.ndarray, box: Box, buffer: float = qtk.BUFFER_DEFAULT) -> np.ndarray:

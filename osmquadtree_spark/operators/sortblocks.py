@@ -62,6 +62,7 @@ def cell_histogram(df: DataFrame, qt_col: str = "qt", tree_level: int = 15) -> D
     )
 
 
+# Twin of compute_groups_scalable: dense histogram, the scalable path's oracle.
 def compute_groups(
     df: DataFrame,
     qt_col: str = "qt",
@@ -87,6 +88,7 @@ def compute_groups(
     return group_table(groups)
 
 
+# Twin of compute_groups for a different regime: skew-proof, collect bounded by output.
 def compute_groups_scalable(
     df: DataFrame,
     qt_col: str = "qt",

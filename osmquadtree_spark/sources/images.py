@@ -214,14 +214,6 @@ def derive_footprints(idx: np.ndarray):
     return footprints(ph, w, h, idx)
 
 
-def generate_pandas(n: int, start: int = 0):
-    """Generate n rows as a pandas DataFrame (driver-side; for tests/bench).
-    At scale the same generator runs distributed — see images_df()."""
-    import pandas as pd
-
-    return pd.DataFrame([image_row(i) for i in range(start, start + n)])
-
-
 IMAGE_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string, phash bigint"
 )

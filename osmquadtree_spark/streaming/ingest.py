@@ -122,23 +122,3 @@ def session_counts_stream(
             "row_count",
         )
     )
-
-
-def write_tiles_stream(
-    enriched: DataFrame,
-    path: str,
-    checkpoint: str,
-    tile_col: str = "group_qt",
-):
-    """Append stream to a tile-partitioned parquet table (Iceberg partition
-    transform in production; partitionBy here). The checkpoint directory is
-    the resume point — a restarted query continues from the last committed
-    micro-batch, which is the streaming analog of the pipeline's staged
-    ``_manifest.json`` commits."""
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(tile_col)
-        .outputMode("append")
-    )

@@ -1,94 +1,41 @@
 """Driver-style correctness gate, run locally: every queries() entry is
-executed on Spark and compared against its oracle_sql() twin in DuckDB —
-row count, schema (column names), and order-insensitive values.
+executed on Spark and compared against its oracle_sql() twin in DuckDB with
+the one shared comparison (queries.compare) — column names, row count and
+order-insensitive values.
 
 Mirrors the external driver's CORRECTNESS check so oracle drift is caught
 before a round lands.
 """
 
-import math
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from osmquadtree_spark.sources.tables import TABLES
+from osmquadtree_spark import queries as Q
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # the group-assignment oracles derive their group tables from the parquet at
 # oracle-build time — point them at the same sf this test compares against
 os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 
-
-def _duck_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                # exact float equality is the contract; canonicalize -0.0/nan
-                if math.isnan(v):
-                    v = "nan"
-                elif v == 0.0:
-                    v = 0.0
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=repr)
-    return out
-
-
-def _compare(name, spark, con, qfn, sql):
-    sdf = qfn(spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = con.sql(sql)
-    dcols = list(rel.columns)
-    drows = rel.fetchall()
-    assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols), (
-        f"{name}: column mismatch {scols} vs {dcols}"
-    )
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
-    a = _normalize(srows, [c.lower() for c in scols])
-    b = _normalize(drows, [c.lower() for c in dcols])
-    mism = [i for i, (x, y) in enumerate(zip(a, b)) if x != y]
-    assert not mism, f"{name}: first value mismatch at {mism[0]}: {a[mism[0]]} vs {b[mism[0]]}"
-
-
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
-# rows-only ops: driver-greedy grouping / LSH candidate sets / binary codecs
-# are not SQL-expressible; their semantics are pytest-asserted instead
-ROWS_ONLY = {
-    "ann_lsh_topk",
-    "dedup_embedding_lsh",
-    "media_features",
-}
-
 
 def test_all_queries_have_oracles_or_are_flagged():
-    missing = set(QUERIES) - set(ORACLES)
-    # rows-only ops (driver accepts these as weaker checks, judge sees which)
-    assert missing <= ROWS_ONLY, missing
+    # no gate is flagged rows-only any more: every driver query has an oracle
+    assert set(QUERIES) == set(ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) & set(ORACLES)))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark):
-    con = _duck_con(SF_DIR)
-    _compare(name, spark, con, QUERIES[name], ORACLES[name])
+    con = Q.oracle_connection(SF_DIR)
+    v = Q.compare(QUERIES[name](spark, SF_DIR), con.sql(ORACLES[name]))
+    assert v.status == "EQ", f"{name}: " + "; ".join(v.report)
 
 
 def test_entry_smoke(spark):
@@ -96,9 +43,3 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["group_qt", "n_rows"]
-
-
-def test_rows_only_queries_run(spark):
-    for name in sorted(ROWS_ONLY):
-        df = QUERIES[name](spark, SF_DIR)
-        assert df.count() > 0, name

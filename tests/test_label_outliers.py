@@ -4,7 +4,6 @@ label/embedding handling. Value parity vs DuckDB over the fixture table is
 gated by tools/driver_sweep.py (`embedding_outliers`)."""
 
 import numpy as np
-import pytest
 
 from osmquadtree_spark.operators.ann import (
     OUTLIER_FACTOR,
@@ -43,75 +42,57 @@ def _reference(rows):
     }
 
 
-def _run(spark, rows, kernel="column"):
+def _run(spark, rows):
     df = spark.createDataFrame(rows, "vec_id bigint, label int, embedding array<float>")
     return {
         r["vec_id"]: (r["label"], r["dist2"], r["mean_dist2"], r["is_outlier"])
-        for r in label_outlier_stats(df, dim=DIM, kernel=kernel).collect()
+        for r in label_outlier_stats(df, dim=DIM).collect()
     }
 
 
-KERNELS = ("column", "arrow")
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_outliers_match_numpy_reference(spark, kernel):
+def test_outliers_match_numpy_reference(spark):
     rng = np.random.RandomState(7)
     rows = [
         (i, int(i % 3), [float(x) for x in rng.uniform(-0.5, 0.5, DIM).astype(np.float32)])
         for i in range(60)
     ]
-    assert _run(spark, rows, kernel) == _reference(rows)
+    assert _run(spark, rows) == _reference(rows)
 
 
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_outliers_planted_far_vector_flagged(spark, kernel):
+def test_outliers_planted_far_vector_flagged(spark):
     # 20 tight vectors at ~0 and one far away in the same label
     rows = [(i, 1, [0.01 * (i % 2)] * DIM) for i in range(20)]
     rows.append((99, 1, [0.9] * DIM))
-    got = _run(spark, rows, kernel)
+    got = _run(spark, rows)
     assert got[99][3] is True
     assert sum(1 for v in got.values() if v[3]) == 1
 
 
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_outliers_null_handling(spark, kernel):
+def test_outliers_null_handling(spark):
     rows = [
         (1, None, [0.1] * DIM),
         (2, None, [0.1] * DIM),
         (3, 5, None),          # NULL embedding excluded
         (4, 5, [0.2] * DIM),
     ]
-    got = _run(spark, rows, kernel)
+    got = _run(spark, rows)
     assert set(got) == {1, 2, 4}
     assert got[1][0] is None and got[2][0] is None  # NULL label is one group
     assert got[4][1] == 0  # singleton group sits on its own centroid
 
 
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_outliers_empty_input(spark, kernel):
+def test_outliers_empty_input(spark):
     df = spark.createDataFrame([], "vec_id bigint, label int, embedding array<float>")
-    assert label_outlier_stats(df, dim=DIM, kernel=kernel).collect() == []
+    assert label_outlier_stats(df, dim=DIM).collect() == []
 
 
-def test_kernels_bit_identical_and_auto_dispatch(spark):
-    """The two kernels must agree value-for-value on a mixed fixture, and
-    the auto dispatch must pick arrow above OUTLIER_ARROW_DIM."""
+def test_outliers_mixed_null_labels_match_numpy_reference(spark):
+    """A mixed fixture — four labels plus NULL labels every 7th row —
+    agrees value-for-value with the numpy reference."""
     rng = np.random.RandomState(11)
     rows = [
         (i, int(i % 4) if i % 7 else None,
          [float(x) for x in rng.uniform(-0.6, 0.6, DIM).astype(np.float32)])
         for i in range(80)
     ]
-    assert _run(spark, rows, "column") == _run(spark, rows, "arrow")
-    from osmquadtree_spark.operators import ann
-
-    df = spark.createDataFrame(rows, "vec_id bigint, label int, embedding array<float>")
-    auto = label_outlier_stats(df, dim=DIM)  # dim 4 → column path
-    assert "mapInPandas" not in auto._jdf.queryExecution().executedPlan().toString()
-    big = [(i, 0, [0.0] * (ann.OUTLIER_ARROW_DIM + 1)) for i in range(3)]
-    bdf = spark.createDataFrame(
-        big, f"vec_id bigint, label int, embedding array<float>"
-    )
-    auto_big = label_outlier_stats(bdf, dim=ann.OUTLIER_ARROW_DIM + 1)
-    assert "mapInPandas" in auto_big._jdf.queryExecution().executedPlan().toString().replace("MapInPandas", "mapInPandas")
+    assert _run(spark, rows) == _reference(rows)

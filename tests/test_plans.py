@@ -329,21 +329,12 @@ def test_source_quota_prunes_before_window(spark, sf_dir):
     assert "_mark" in plan and "_thr" in plan
 
 
-def test_embedding_outliers_no_explode(spark, sf_dir):
-    """label_outlier_stats claims the centroid pass never explodes the
-    vectors (dim partially-aggregated sums, |labels| rows shuffled): no
-    Generate in the plan, and both stat lookups broadcast."""
-    plan = _plan(Q.q_embedding_outliers(spark, sf_dir))
-    assert "Generate" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-
-
 def test_embedding_outliers_arrow_plan_shape(spark, sf_dir):
-    """The dim-flat Arrow twin claims its distance pass is ONE
+    """The dim-flat Arrow kernel claims its distance pass is ONE
     mapInPandas over the scan (centroid table broadcast as a
     sparkContext variable, not a join) with the mean lookup the single
-    broadcast join — still no explode anywhere."""
-    plan = _plan(Q.q_embedding_outliers_arrow(spark, sf_dir))
+    broadcast join — no explode anywhere."""
+    plan = _plan(Q.q_embedding_outliers(spark, sf_dir))
     assert "Generate" not in plan
     assert "MapInPandas" in plan
     assert plan.count("BroadcastHashJoin") == 1

@@ -89,3 +89,28 @@ def test_stale_run_dirs_pruned_fresh_kept(tmp_path, monkeypatch):
     Q._prune_stale_runs(base)
     assert not os.path.isdir(old)
     assert os.path.isdir(fresh)
+
+
+def test_resolving_a_name_keeps_a_live_run_dir_from_pruning(tmp_path, monkeypatch):
+    """A live session whose run dir was last written > 2 h ago must survive
+    another session's prune as long as it still resolves names: each
+    resolve refreshes the dir's mtime."""
+    from osmquadtree_spark import queries as Q
+
+    monkeypatch.setattr(Q, "_SCRATCH", str(tmp_path))
+    base = str(tmp_path / "sfLive")
+    mine = os.path.join(base, f"run-{Q.RUN_ID}")
+    os.makedirs(mine)
+    past = time.time() - Q._STALE_RUN_DIR_SEC - 60
+    os.utime(mine, (past, past))
+    Q._scratch("/data/sfLive", "lsh_dedup_candidates")
+    subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            f"from osmquadtree_spark import queries as Q; Q._prune_stale_runs({base!r})",
+        ],
+        cwd=REPO,
+        check=True,
+    )
+    assert os.path.isdir(mine)

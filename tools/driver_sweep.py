@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Emulate the external driver's correctness sweep over the full query
-registry: run every ``queries()`` entry on Spark at a given scale factor,
-run its ``oracle_sql()`` twin in DuckDB over the same parquet, and compare
-row counts, column names and full sorted values.
+"""Emulate the external driver's correctness sweep over every gate: run
+each ``GATES`` entry (osmquadtree_spark/queries.py) on Spark at a given
+scale factor, run its DuckDB oracle over the same parquet, and compare them
+with ``queries.compare`` — column names, row counts and full sorted values.
 
 This is the repo-local twin of the per-round CORRECTNESS_r{N}.json gate —
-run it after touching any operator the registry exercises:
+run it after touching any operator a gate exercises:
 
     python tools/driver_sweep.py                       # all gates, sf0.01
     python tools/driver_sweep.py --queries geom_ways   # subset
@@ -16,18 +16,8 @@ LSH/IVF/semantic soundness oracles, and dsir_weights' λ table) derive
 artifacts — the greedy group table, the engine-exported candidate sets
 and the committed DSIR λ parquet — at the driver's fixed correctness
 scale, because ``oracle_sql()`` takes no sf argument per the contract.
-When sweeping at any scale other than sf0.01 this script points them at
-the swept scale via SPARK_GRAFT_ORACLE_SF_DIR; verified 100/100 green
-(50 driver gates + 50 sweep extensions) at both sf0.01 and sf0.001.
-
-Comparison pitfalls this script gets right (learned the hard way):
-- NULL sorting: raw ``sorted()`` on tuples containing None raises
-  TypeError against ints/strs — sort via a (is_null, type, value) key.
-- DuckDB ``.df()`` coerces nullable integer columns to float64 + NaN,
-  which then never compares equal to Spark's int + None. Use
-  ``fetchall()`` (native Python values) instead.
-- Column ORDER differs between engines; the driver sorts columns by
-  name before hashing — do the same on both sides.
+This script points them at the swept scale via SPARK_GRAFT_ORACLE_SF_DIR.
+Every gate has an oracle; a gate is green only when it is EQ.
 """
 
 from __future__ import annotations
@@ -38,14 +28,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _sort_key(t):
-    return tuple((v is None, type(v).__name__, 0 if v is None else v) for v in t)
 
 
 def main() -> int:
@@ -85,10 +67,9 @@ def main() -> int:
         )
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = args.sf
 
-    import duckdb
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entry
+    from osmquadtree_spark import queries as Q
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -98,19 +79,10 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
+    con = Q.oracle_connection(args.sf)
 
-    queries, oracles = entry.queries(), entry.oracle_sql()
-    # repo-local extension beyond the external driver's 50-query cap:
-    # same value gate, same comparison
-    from osmquadtree_spark import queries as Qx
-
-    queries = {**queries, **Qx.sweep_queries()}
-    oracles = {**oracles, **Qx.sweep_oracle_sql()}
-    names = args.queries or list(queries)
-    unknown = [n for n in names if n not in queries]
+    names = args.queries or list(Q.GATES)
+    unknown = [n for n in names if n not in Q.GATES]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
@@ -119,46 +91,20 @@ def main() -> int:
     gate_results: dict[str, dict] = {}
     for name in names:
         t0 = time.time()
+        g = Q.GATES[name]
         try:
-            sdf = queries[name](spark, args.sf)
-            cols = sorted(sdf.columns)
-            srows = sorted((tuple(r[c] for c in cols) for r in sdf.collect()), key=_sort_key)
-            if name in oracles:
-                rel = con.sql(oracles[name])
-                ocols = rel.columns
-                order = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                orows = sorted(
-                    (tuple(t[i] for i in order) for t in rel.fetchall()), key=_sort_key
-                )
-                ok = cols == sorted(ocols) and srows == orows
-                status = "EQ" if ok else "MISMATCH"
-                if not ok:
-                    failures.append(name)
-                    if cols != sorted(ocols):
-                        print(f"  cols: spark={cols} oracle={sorted(ocols)}")
-                    if len(srows) != len(orows):
-                        print(f"  rows: spark={len(srows)} oracle={len(orows)}")
-                    # sample the SYMMETRIC DIFFERENCE, not a positional
-                    # zip (which shows nothing when one side is a shifted
-                    # or truncated copy of the other)
-                    s_set, o_set = set(srows), set(orows)
-                    for r in list(s_set - o_set)[:3]:
-                        print(f"  spark-only:  {r}")
-                    for r in list(o_set - s_set)[:3]:
-                        print(f"  oracle-only: {r}")
-            else:
-                status = "rows-only"
-                if not srows:
-                    failures.append(name)
-                    status = "rows-only EMPTY"
+            v = Q.compare(g.build(spark, args.sf), con.sql(g.oracle()))
+            status, rows = v.status, v.rows
+            for line in v.report:
+                print(f"  {line}")
         except Exception as ex:  # surface, keep sweeping
+            status, rows = f"ERROR {type(ex).__name__}: {ex}", 0
+        if status != "EQ":
             failures.append(name)
-            status = f"ERROR {type(ex).__name__}: {ex}"
-            srows = []
-        print(f"{name}: {status} rows={len(srows)} {time.time() - t0:.1f}s", flush=True)
+        print(f"{name}: {status} rows={rows} {time.time() - t0:.1f}s", flush=True)
         gate_results[name] = {
             "status": status,
-            "rows": len(srows),
+            "rows": rows,
             "sec": round(time.time() - t0, 1),
         }
 
