@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: the headline gates (``headline=True`` in
 osmquadtree_spark.queries.GATES) at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+the host-fitted session of osmquadtree_spark.session.build (local[<cores
+this process may use>] unless --cpus says otherwise). Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, ...}
 
 The primary north-rule metric (tiles+rows/sec on the quadtree-assignment +
@@ -23,22 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("osmquadtree-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def materialize(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -46,7 +31,7 @@ def materialize(df):
 def main() -> int | None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--json-out", default=None)
     ap.add_argument("--queries", default=None, help="comma-separated subset")
     # best-of-N per query: the sandbox host is multi-tenant and single
@@ -59,8 +44,9 @@ def main() -> int | None:
     args = ap.parse_args()
 
     from osmquadtree_spark import queries as Q
+    from osmquadtree_spark import session
 
-    spark = build_spark(args.cpus)
+    spark = session.build("osmquadtree-spark-bench", args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # --queries can time any gate, not just the external driver's capped 50
     names = (
@@ -99,9 +85,9 @@ def main() -> int | None:
     def _warm(v):
         return v
 
-    spark.range(0, 32 * 1024, 1, args.cpus).select(_warm("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    spark.range(0, 32 * 1024).select(_warm("id")).write.format("noop").mode(
+        "overwrite"
+    ).save()
 
     from osmquadtree_spark import metrics as M
 
@@ -149,7 +135,7 @@ def main() -> int | None:
         "unit": "sec",
         "queries": timings,
         "sf": args.sf_dir,
-        "cpus": args.cpus,
+        "session": session.describe(spark),
         "input_rows": n_rows,
         "pipeline_sec": round(pipeline_sec, 3),
         "rows_per_sec": round(n_rows / pipeline_sec, 1) if pipeline_sec else None,

@@ -336,26 +336,6 @@ def edges_parquet_path(n_rows: int) -> str:
     )
 
 
-def prepare_edges(cpus: int, n_rows: int) -> None:
-    """Materialize the graph job's edge table ONCE (own JVM, outside every
-    timed window), 64 files for identical splits at both levels."""
-    path = edges_parquet_path(n_rows)
-    if os.path.isdir(path) and os.path.isfile(os.path.join(path, "_SUCCESS")):
-        return
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("oqt-scaling-edges-prep")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    edge_table(spark, n_rows, 64).write.mode("overwrite").parquet(path)
-    spark.stop()
-
-
 def _docs_gen_fingerprint() -> str:
     """Hash of everything the generated table depends on (doc_table's
     source, the stride/width constants, the vocab word list) — baked into
@@ -382,29 +362,22 @@ def docs_parquet_path(n_rows: int) -> str:
     )
 
 
-def prepare_docs(cpus: int, n_rows: int) -> None:
-    """Materialize the dedup job's input table ONCE (its own JVM, excluded
-    from every timed window). 64 files so both parallelism levels see the
-    same well-split scan."""
-    path = docs_parquet_path(n_rows)
+def prepare_input(table, path: str, cpus: int, n_rows: int) -> None:
+    """Materialize a job's input table ONCE (its own JVM, excluded from
+    every timed window). 64 files so both parallelism levels see the same
+    well-split scan."""
     if os.path.isdir(path) and os.path.isfile(os.path.join(path, "_SUCCESS")):
         return
-    from pyspark.sql import SparkSession
+    from osmquadtree_spark import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("oqt-scaling-docs-prep")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session.build("oqt-scaling-prep", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    doc_table(spark, n_rows, 64).write.mode("overwrite").parquet(path)
+    table(spark, n_rows, 64).write.mode("overwrite").parquet(path)
     spark.stop()
 
 
 def worker(cpus: int, n_rows: int, out_path: str, job: str = "tiling") -> None:
-    from pyspark.sql import SparkSession
+    from osmquadtree_spark import session
 
     # Pin the WHOLE process tree (JVM + Python workers, which inherit the
     # affinity mask) to exactly `cpus` hardware threads. Without this,
@@ -416,21 +389,9 @@ def worker(cpus: int, n_rows: int, out_path: str, job: str = "tiling") -> None:
     # distinct physical cores on this box (SMT siblings are the high range).
     os.sched_setaffinity(0, set(range(cpus)))
 
-    # memory scales with the simulated cluster size: a 4N-executor cluster
-    # has 4N× the aggregate heap, so each parallelism level gets ~1.5 GiB
-    # per core (single-JVM stand-in; 128 GiB box)
-    mem_gb = int(os.environ.get("SPARK_GRAFT_MEM_PER_CORE_GB", "2")) * cpus
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"oqt-scaling-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", f"{mem_gb}g")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the builder's heap grows with the level as with the simulated
+    # cluster: a 4N-executor cluster has 4N× the aggregate heap
+    spark = session.build(f"oqt-scaling-{cpus}", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # warmup excluded from the timed window (cluster startup, not steady-state
     # throughput): executor threads, codegen, AND the python worker pool —
@@ -466,6 +427,7 @@ def worker(cpus: int, n_rows: int, out_path: str, job: str = "tiling") -> None:
     elapsed = time.time() - t0
     result = {
         "cpus": cpus,
+        "session": session.describe(spark),
         "input_rows": n_rows,
         "elapsed_sec": round(elapsed, 3),
         "rows_per_sec": round(n_rows / elapsed, 1),
@@ -566,10 +528,9 @@ def main() -> None:
 
     levels = sorted(int(x) for x in args.levels.split(","))
     if args.job == "dedup":
-        # one-off input materialization, outside every timed window
-        prepare_docs(max(levels), args.rows)
+        prepare_input(doc_table, docs_parquet_path(args.rows), max(levels), args.rows)
     elif args.job == "graph":
-        prepare_edges(max(levels), args.rows)
+        prepare_input(edge_table, edges_parquet_path(args.rows), max(levels), args.rows)
     results = {}
     attempts: dict[int, list] = {c: [] for c in levels}
     for _rep in range(args.repeats):

@@ -11,10 +11,12 @@ the documents-table twin of jobs/tile_pipeline.py:
 
 Stages (quality → dedup → decon → weights → shards) each commit a
 manifest LAST; re-running with the same --out-dir resumes from the first
-uncommitted stage. Prints one JSON line of stage manifests.
+uncommitted stage. Prints one {"session": ...} JSON line of the session's
+shape, then one JSON line of stage manifests, last.
 
-The same reliable-checkpoint escape hatch as the tile pipeline applies:
-set ``SPARK_GRAFT_CHECKPOINT_DIR`` on a real cluster so the
+The session and the reliable-checkpoint escape hatch are the tile
+pipeline's: osmquadtree_spark.session.build fills what the launcher left
+unset, and ``SPARK_GRAFT_CHECKPOINT_DIR`` on a real cluster lets the
 connected-components rounds survive executor loss.
 """
 
@@ -57,14 +59,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from osmquadtree_spark import session
 
-    spark = (
-        SparkSession.builder.appName("oqt-curation-pipeline")
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
-    )
+    spark = session.build("oqt-curation-pipeline")
     spark.sparkContext.setLogLevel("WARN")
+    print(json.dumps({"session": session.describe(spark)}))
 
     from osmquadtree_spark.curation import run_curation
 

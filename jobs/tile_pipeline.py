@@ -11,7 +11,7 @@ The north-rule deployment shape:
 
 Re-running with the same --out-dir resumes from the first uncommitted
 stage (per-stage manifests are the commit markers — Iceberg snapshots in
-production). Prints one JSON line of stage manifests.
+production). Prints one JSON line of stage manifests, last.
 
 Smoke-tested end to end through real spark-submit --py-files in
 tests/test_submit.py.
@@ -27,6 +27,10 @@ from the checkpoint files (osmquadtree_spark/cache.stage_checkpoint).
 The pipeline's own resumability is independent of this: stage manifests
 commit to --out-dir and a re-run resumes from the first uncommitted
 stage regardless of how the in-flight job died.
+
+The session comes from osmquadtree_spark.session.build, which fills what
+the launcher left unset; its shape is printed as one {"session": ...}
+JSON line before the manifests line.
 """
 
 from __future__ import annotations
@@ -49,18 +53,11 @@ def main() -> None:
     ap.add_argument("--stop-after", default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from osmquadtree_spark import session
 
-    spark = (
-        SparkSession.builder.appName("oqt-tile-pipeline")
-        # with the SPARK_GRAFT_CHECKPOINT_DIR reliable-checkpoint escape
-        # hatch engaged (osmquadtree_spark/cache.py), Spark only deletes
-        # out-of-scope checkpoint files when this is set — without it the
-        # HDFS/S3 checkpoint dir grows without bound across runs
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
-    )
+    spark = session.build("oqt-tile-pipeline")
     spark.sparkContext.setLogLevel("WARN")
+    print(json.dumps({"session": session.describe(spark)}))
 
     from osmquadtree_spark.pipeline import run_image_tiling
     from osmquadtree_spark.sources.images import images_df

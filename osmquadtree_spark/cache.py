@@ -40,9 +40,9 @@ def stage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
     Cleanup caveat: Spark deletes reliable-checkpoint FILES only when
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` was set at
-    session build (jobs/tile_pipeline.py sets it); otherwise every
-    checkpointed stage leaves its files behind and the checkpoint dir
-    grows across runs — budget for that or set the conf."""
+    session build (osmquadtree_spark.session.build sets it unless the
+    launcher chose otherwise); without it every checkpointed stage leaves
+    its files behind and the checkpoint dir grows across runs."""
     import os
 
     sc = df.sparkSession.sparkContext

@@ -30,6 +30,7 @@ libm-vs-StrictMath divergence.
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 from collections import Counter
@@ -88,6 +89,33 @@ def gate(name: str, oracle: Callable[[], str], driver: bool = False, headline: b
         return build
 
     return register
+
+
+# every per-(session, sf) memo's store, with whether it is an input store
+# (see clear_session_caches)
+_SESSION_MEMOS: list[tuple[dict, bool]] = []
+
+
+def _session_memo(input_store: bool = False):
+    """Memoize the decorated ``fn(spark, sf_dir)`` per (session, sf_dir) in
+    a store ``clear_session_caches`` empties. ``input_store=True`` marks a
+    stand-in for the input tables themselves, which survives
+    ``clear_session_caches(keep_input_stores=True)``."""
+
+    def decorate(fn):
+        store: dict = {}
+        _SESSION_MEMOS.append((store, input_store))
+
+        @functools.wraps(fn)
+        def memo(spark, sf_dir):
+            key = (spark.sparkContext.applicationId, sf_dir)
+            if key not in store:
+                store[key] = fn(spark, sf_dir)
+            return store[key]
+
+        return memo
+
+    return decorate
 
 
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -208,24 +236,18 @@ def _elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     return geo_elements(spark, sf_dir)
 
 
-_ELEMENTS_QT_CACHE: dict = {}
-
-
+@_session_memo()
 def _elements_qt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per (session, sf): the assigned-cell element table — seven
     queries derive from it; a session computes the cell table once, exactly
     like production reading a stored `-qts` table. (bench.py clears the memo
     between repeat sweeps so the first consumer of each sweep pays the full
     generation+kernel cost.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ELEMENTS_QT_CACHE:
-        return _ELEMENTS_QT_CACHE[key]
     qt_calc = make_qt_calculate()
     df = _elements(spark, sf_dir).withColumn(
         "qt", qt_calc("minx", "miny", "maxx", "maxy")
     )
-    _ELEMENTS_QT_CACHE[key] = stage_checkpoint(df, eager=False)
-    return _ELEMENTS_QT_CACHE[key]
+    return stage_checkpoint(df, eager=False)
 
 
 _ELEM_CTE = elements_sql(intdiv="//")
@@ -723,28 +745,20 @@ def q_changes_merge(spark, sf_dir):
 # calcqts parity over the OSM-shaped fixture (way/node/relation paths)
 
 
-_FIXTURE_CACHE: dict = {}
-
-
+@_session_memo(input_store=True)
 def _osm_fixture(spark, sf_dir):
     """Memoized per (session, sf): the OSM-shaped element tables, READ from
     the on-disk planet store (sources/qts_store — the planet-file analog;
     built once per source fixture). A dozen queries derive from these, and
     every one pays exactly what production pays: a prunable parquet scan,
     not a re-synthesis of the fixture lineage."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _FIXTURE_CACHE:
-        return _FIXTURE_CACHE[key]
     from .sources.qts_store import read_planet_store
 
     t = read_planet_store(spark, sf_dir)
-    _FIXTURE_CACHE[key] = (t["nodes"], t["ways"], t["rels"])
-    return _FIXTURE_CACHE[key]
+    return t["nodes"], t["ways"], t["rels"]
 
 
-_WAY_COORDS_CACHE: dict = {}
-
-
+@_session_memo()
 def _way_coords(spark, sf_dir):
     """Raw ordered way coordinate arrays, READ from the persistent qts
     store (sources/qts_store.read_way_coords) — the shared upstream of
@@ -753,32 +767,20 @@ def _way_coords(spark, sf_dir):
     build time, the analog of the reference's geometry stage reading
     -qts-sorted planet tiles with locations resolved; every query run pays
     a prunable parquet scan."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WAY_COORDS_CACHE:
-        return _WAY_COORDS_CACHE[key]
     from .sources.qts_store import read_way_coords
 
-    _WAY_COORDS_CACHE[key] = read_way_coords(spark, sf_dir)
-    return _WAY_COORDS_CACHE[key]
+    return read_way_coords(spark, sf_dir)
 
 
-_EXTRACT_CACHE: dict = {}
-
-
+@_session_memo()
 def _extract_ids(spark, sf_dir):
     """Memoized per (session, sf): the BOX extract's kept IdSet —
     extract_expand and extract_members share the whole semi-join chain."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EXTRACT_CACHE:
-        return _EXTRACT_CACHE[key]
     from .operators.extract import extract_with_expansion
 
     nodes, ways, rels = _osm_fixture(spark, sf_dir)
     ids = extract_with_expansion(nodes, ways, rels, BOX)
-    _EXTRACT_CACHE[key] = {
-        k: stage_checkpoint(v, eager=False) for k, v in ids.items()
-    }
-    return _EXTRACT_CACHE[key]
+    return {k: stage_checkpoint(v, eager=False) for k, v in ids.items()}
 
 
 @gate("way_qts", oracle=cqo.way_qts_sql, driver=True)
@@ -811,17 +813,12 @@ def q_rel_qts(spark, sf_dir):
 # incremental update (calc_change_qts + find_change_tiles, update.cpp)
 
 
-_OLD_QTS_CACHE: dict = {}
-
-
+@_session_memo()
 def _old_state(spark, sf_dir):
     """Memoized per (session, sf): the fixture tables and their full
     calcqts at CLI depth 17, lazily localCheckpoint-ed — serves the three
     calcqts queries (way/node/rel_qts), whose POINT is the derivation; the
     update queries instead READ the persistent qts store (_stored_old)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _OLD_QTS_CACHE:
-        return _OLD_QTS_CACHE[key]
     from .operators.calcqts import node_quadtrees, relation_quadtrees, way_quadtrees
 
     # fixture frames arrive already lazily checkpointed from _osm_fixture;
@@ -837,8 +834,7 @@ def _old_state(spark, sf_dir):
     nq = stage_checkpoint(node_quadtrees(nodes, ways, wq, small_way_qts=True), eager=False)
     rq = stage_checkpoint(relation_quadtrees(rels, nq, wq, small_member_qts=True), eager=False)
     old = {"nodes": nq, "ways": wq, "relations": rq}
-    _OLD_QTS_CACHE[key] = (nodes, ways, rels, old)
-    return _OLD_QTS_CACHE[key]
+    return nodes, ways, rels, old
 
 
 def _stored_old(spark, sf_dir):
@@ -867,16 +863,14 @@ def _change_set(spark, sf_dir):
     return ch["ch_nodes"], ch["ch_ways"], ch["ch_rels"], old
 
 
-_RESOLVED_CACHE: dict = {}
-
 # diff resolutions at or below this row count run driver-side (the
-# reference's in-process update shape); override for experiments. 250k ≈
-# 10× a typical daily planet .osc — comfortably inside driver memory even
-# with refs/members arrays (a few hundred MB), while a weekly/catch-up
-# diff in the millions takes the distributed path whose per-row cost the
-# gate exists to amortize (a 2M-row default would have pulled GBs through
-# toPandas and a pure-Python relation closure onto the driver)
-_UPDATE_INMEM_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_UPDATE_INMEM_ROWS", "250000"))
+# reference's in-process update shape). 250k ≈ 10× a typical daily planet
+# .osc — comfortably inside driver memory even with refs/members arrays (a
+# few hundred MB), while a weekly/catch-up diff in the millions takes the
+# distributed path whose per-row cost the gate exists to amortize (a
+# 2M-row default would have pulled GBs through toPandas and a pure-Python
+# relation closure onto the driver)
+_UPDATE_INMEM_MAX_ROWS = 250_000
 
 
 def _change_store_rows(sf_dir: str) -> int:
@@ -897,14 +891,12 @@ def _change_store_rows(sf_dir: str) -> int:
     return n
 
 
+@_session_memo()
 def _resolved_elements(spark, sf_dir):
     """Memoized per (session, sf_dir): update_change_qts and
     update_change_tiles share the whole calcqts+resolution lineage — the
     driver invokes them as separate queries, and without the memo each
     pays the full recompute."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RESOLVED_CACHE:
-        return _RESOLVED_CACHE[key]
     from .cache import cached
     from .operators.update import (
         DuplicateChangeIds,
@@ -1002,11 +994,10 @@ def _resolved_elements(spark, sf_dir):
     # per core, not 198 — the branches end in Python-UDF stages, and each
     # extra task is an Arrow round-trip. defaultParallelism, not a literal:
     # a hardcoded width would cap downstream parallelism on larger clusters
-    _RESOLVED_CACHE[key] = (
+    return (
         cached(out.coalesce(spark.sparkContext.defaultParallelism)),
         old,
     )
-    return _RESOLVED_CACHE[key]
 
 
 @gate("update_change_qts", oracle=uo.change_qts_sql, driver=True)
@@ -2218,22 +2209,16 @@ def clear_session_caches(keep_input_stores: bool = False) -> None:
     sweeps so a best-of-N timing never reports a query's OWN computation as
     a memo hit.
 
-    ``keep_input_stores=True`` preserves only the fixture source frames —
-    they stand in for the input parquet tables themselves. Old element
-    cells are no longer a memo at all: the update queries read them from
-    the persistent parquet qts store (sources/qts_store) on every run, so
-    the old-qt derivation memo (_OLD_QTS_CACHE, now serving only the three
-    calcqts queries) clears on every sweep like any other computation."""
-    always = (
-        _RESOLVED_CACHE, _EXTRACT_CACHE, _WAY_COORDS_CACHE, _ELEMENTS_QT_CACHE,
-        _OLD_QTS_CACHE, _CLUSTERS_CACHE, _TILE_SINK_CACHE,
-    )
-    stores = (_FIXTURE_CACHE,)
-    for cache in always:
-        cache.clear()
-    if not keep_input_stores:
-        for cache in stores:
-            cache.clear()
+    ``keep_input_stores=True`` preserves only the ``input_store=True``
+    memos (the fixture source frames of ``_osm_fixture``) — they stand in
+    for the input parquet tables themselves. Old element cells are no
+    longer a memo at all: the update queries read them from the persistent
+    parquet qts store (sources/qts_store) on every run, so the old-qt
+    derivation memo (``_old_state``, serving only the three calcqts
+    queries) clears on every sweep like any other computation."""
+    for store, input_store in _SESSION_MEMOS:
+        if not (keep_input_stores and input_store):
+            store.clear()
     # flush pending operator metrics (hot-bucket drops, candidate counts)
     # BEFORE releasing caches: the registered frames read the operators'
     # cached intermediates, so the run-end commit is a cache read. Any
@@ -3045,9 +3030,7 @@ def q_pruned_bbox_extract(spark, sf_dir):
     ).select("elem_id")
 
 
-_TILE_SINK_CACHE: dict = {}
-
-
+@_session_memo()
 def _tile_sink(spark, sf_dir) -> str:
     """Committed tile sink shared by the lineage gate and the
     physical-layout gate (identical grouping params + sort key): built
@@ -3056,9 +3039,6 @@ def _tile_sink(spark, sf_dir) -> str:
     still pays the full write — within one sweep the two gates verify
     the SAME committed artifact from two angles (lineage table vs
     physical row order), which is the point."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TILE_SINK_CACHE:
-        return _TILE_SINK_CACHE[key]
     import numpy as np
 
     from .operators.sortblocks import compute_groups_scalable, write_tile_sorted
@@ -3067,7 +3047,6 @@ def _tile_sink(spark, sf_dir) -> str:
     gqt, _, _ = compute_groups_scalable(df, "qt", target=1000, minsize=500, tree_level=15)
     path = _scratch(sf_dir, "tile_sink_gate")
     write_tile_sorted(df, path, np.asarray(gqt, dtype=np.int64), "qt", sort_cols=["elem_id"])
-    _TILE_SINK_CACHE[key] = path
     return path
 
 
@@ -3717,9 +3696,7 @@ DECON_BENCH_MOD = 41  # every 41st doc is the synthetic benchmark/eval set
 DECON_MIN_HITS = 2
 
 
-_CLUSTERS_CACHE: dict = {}
-
-
+@_session_memo()
 def _doc_cluster_frame(spark, sf_dir):
     """Shared near-dup cluster table (exact-dup ∪ 3-gram-jaccard edges →
     large-star/small-star components) feeding BOTH the dedup_components
@@ -3727,9 +3704,6 @@ def _doc_cluster_frame(spark, sf_dir):
     persisted via the cache registry so the multi-round star fixpoint and
     the 3-gram self-join run once per sweep, not once per gate (cleared
     by clear_session_caches like every derived memo)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CLUSTERS_CACHE:
-        return _CLUSTERS_CACHE[key]
     from .operators import components as ccm
     from .operators import docs as dops
 
@@ -3750,13 +3724,12 @@ def _doc_cluster_frame(spark, sf_dir):
     ).select("doc_a", "doc_b")
     from .cache import cached
 
-    _CLUSTERS_CACHE[key] = cached(
+    return cached(
         ccm.dup_clusters(
             docs, exact_edges.unionByName(ngram_edges),
             metrics_path=_scratch(sf_dir, "metrics"),
         )
     )
-    return _CLUSTERS_CACHE[key]
 
 
 def _dedup_components_sql() -> str:

@@ -12,18 +12,9 @@ SF_DIR_CORRECTNESS = os.environ.get("SPARK_GRAFT_TEST_SF01_DIR", "/root/testdata
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from osmquadtree_spark import session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("osmquadtree-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    s = session.build("osmquadtree-spark-tests", cpus=4)
     yield s
     s.stop()
 

@@ -36,7 +36,8 @@ def _submit(zpath, *cli_args, job="tile_pipeline.py") -> dict:
         SPARK_SUBMIT,
         "--master", "local[4]",
         "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.sql.shuffle.partitions=8",
+        # not the builder's 2 × 4: the session line must show the launcher's
+        "--conf", "spark.sql.shuffle.partitions=6",
         "--py-files", zpath,
         os.path.join(REPO, "jobs", job),
         *cli_args,
@@ -45,8 +46,12 @@ def _submit(zpath, *cli_args, job="tile_pipeline.py") -> dict:
     env.pop("PYTHONPATH", None)  # the zip must be self-sufficient
     r = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=420)
     assert r.returncode == 0, r.stderr[-2000:]
-    line = [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    lines = [json.loads(ln) for ln in r.stdout.splitlines() if ln.startswith("{")]
+    # the launcher's master and partitions win over the session builder's
+    shape = next(ln["session"] for ln in lines if "session" in ln)
+    assert shape["master"] == "local[4]"
+    assert shape["shuffle_partitions"] == "6"
+    return lines[-1]
 
 
 def test_spark_submit_pipeline_runs_and_resumes(tmp_path):

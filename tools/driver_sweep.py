@@ -17,7 +17,9 @@ artifacts — the greedy group table, the engine-exported candidate sets
 and the committed DSIR λ parquet — at the driver's fixed correctness
 scale, because ``oracle_sql()`` takes no sf argument per the contract.
 This script points them at the swept scale via SPARK_GRAFT_ORACLE_SF_DIR.
-Every gate has an oracle; a gate is green only when it is EQ.
+Every gate has an oracle; a gate is green only when it is EQ. The sweep
+exits 1 when a gate is not EQ or a base of the run-end metrics commit
+fails (the --json-out artifact names those under metrics_errors).
 """
 
 from __future__ import annotations
@@ -33,16 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    ap.add_argument("--cpus", type=int, default=8)
-    ap.add_argument(
-        "--driver-memory",
-        default="4g",
-        help="JVM heap for the local driver. The sweep COLLECTS full result "
-        "sets to compare them (that is the point of the gate), so sweeping "
-        "above the driver's fixed sf0.01 needs headroom — sf0.1's "
-        "geojson_tiles (600k geojson feature strings) OOMs a default-size "
-        "heap. This only sizes the comparison harness, not any operator.",
-    )
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--queries", nargs="*", default=None, help="subset of registry keys")
     ap.add_argument(
         "--json-out",
@@ -67,17 +60,11 @@ def main() -> int:
         )
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = args.sf
 
-    from pyspark.sql import SparkSession
-
+    from osmquadtree_spark import metrics as M
     from osmquadtree_spark import queries as Q
+    from osmquadtree_spark import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.driver.memory", args.driver_memory)
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session.build("osmquadtree-spark-sweep", args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     con = Q.oracle_connection(args.sf)
 
@@ -109,46 +96,39 @@ def main() -> int:
         }
 
     # run endpoint: commit operator metrics registered during the sweep
-    # (hot-bucket drops, candidate counts) once, against warm caches
-    from osmquadtree_spark import metrics as M
-
+    # (hot-bucket drops, candidate counts) once, against warm caches. A
+    # failed base fails the sweep: the artifact still records every gate
+    # and names the failed bases under metrics_errors
+    mc = M.commit_pending()
+    if mc["bases"]:
+        print(f"metrics committed: run_id={mc['run_id']} in {mc['sec']}s")
+    for base, msg in mc["errors"].items():
+        print(f"metrics commit failed for {base}: {msg}", file=sys.stderr)
     committed_metrics: list[dict] = []
-    try:
-        mc = M.commit_pending()
-        if mc["bases"]:
-            print(f"metrics committed: run_id={mc['run_id']} in {mc['sec']}s")
-        # warn-and-skip, never stack-trace: a base whose registered frame
-        # lost its lineage (failed query, vanished export) fails only its
-        # own write; the sweep's EQ verdict is the per-query report above,
-        # so a bookkeeping miss is a warning, not a sweep failure
-        for base, msg in mc["errors"].items():
-            print(f"metrics_commit WARNING (skipped {base}): {msg}")
-        if args.json_out and mc["bases"]:
-            from pyspark.sql import functions as F
+    if args.json_out and mc["bases"]:
+        from pyspark.sql import functions as F
 
-            for base in mc["base_paths"]:
-                if base in mc["errors"]:
-                    continue
-                agg = (
-                    spark.read.parquet(os.path.join(base, f"run_id={mc['run_id']}"))
-                    .groupBy("operator", "metric")
-                    .agg(
-                        F.sum("value").alias("total"),
-                        F.count(F.lit(1)).alias("rows"),
-                    )
-                    .collect()
+        for base in mc["base_paths"]:
+            if base in mc["errors"]:
+                continue
+            agg = (
+                spark.read.parquet(os.path.join(base, f"run_id={mc['run_id']}"))
+                .groupBy("operator", "metric")
+                .agg(
+                    F.sum("value").alias("total"),
+                    F.count(F.lit(1)).alias("rows"),
                 )
-                committed_metrics += [
-                    {
-                        "operator": r["operator"],
-                        "metric": r["metric"],
-                        "total": int(r["total"]) if r["total"] is not None else None,
-                        "rows": int(r["rows"]),
-                    }
-                    for r in agg
-                ]
-    except Exception as ex:
-        print(f"metrics_commit WARNING (skipped all): {type(ex).__name__}: {ex}")
+                .collect()
+            )
+            committed_metrics += [
+                {
+                    "operator": r["operator"],
+                    "metric": r["metric"],
+                    "total": int(r["total"]) if r["total"] is not None else None,
+                    "rows": int(r["rows"]),
+                }
+                for r in agg
+            ]
 
     print(f"\n{len(names) - len(failures)}/{len(names)} green; failures: {failures or 'none'}")
     if args.json_out:
@@ -157,7 +137,7 @@ def main() -> int:
         artifact = {
             "metric": "driver_sweep_value_parity",
             "sf": args.sf,
-            "cpus": args.cpus,
+            "session": session.describe(spark),
             "gates": len(names),
             "green": len(names) - len(failures),
             "failures": failures,
@@ -168,12 +148,13 @@ def main() -> int:
             "committed_metrics": sorted(
                 committed_metrics, key=lambda r: (r["operator"], r["metric"])
             ),
+            "metrics_errors": mc["errors"],
         }
         with open(args.json_out, "w") as f:
             json.dump(artifact, f, indent=1)
         print(f"sweep artifact written: {args.json_out}")
     spark.stop()
-    return 1 if failures else 0
+    return 1 if failures or mc["errors"] else 0
 
 
 if __name__ == "__main__":
