@@ -76,10 +76,11 @@ def main() -> None:
         num_partitions=args.partitions,
         stop_after=args.stop_after,
     )
-    # run endpoint: flush any operator metrics registered during the run
-    # (hot-bucket drops, candidate counts — osmquadtree_spark/metrics.py).
-    # A failed metrics base must not eat the committed manifests: report
-    # it, print the manifests, then fail the job.
+    # run endpoint: write the operator metrics recorded during the run
+    # (hot-bucket drops, candidate counts — osmquadtree_spark/metrics.py)
+    # from the driver, with no Spark job. A failed metrics base must not
+    # eat the committed manifests: report it, print the manifests, then
+    # fail the job.
     from osmquadtree_spark import metrics
 
     errors = metrics.commit_pending()["errors"]

@@ -1,27 +1,34 @@
 """Run-scoped operator metrics — the "no silent caps" surface.
 
 Operators that sacrifice recall for scale (hot-bucket caps in the dedup /
-ANN family) REGISTER their drop statistics and recall proxies here as lazy
-DataFrames at plan-construction time; nothing executes until
-``commit_pending`` runs ONCE per run, writing every registered frame under
-a single run-id directory of one metrics table:
+ANN family) RECORD their drop statistics and recall proxies here as plain
+driver-side values, at the point where the operator computes them: the
+cap's own bucket-count aggregate, the component loop's round counter,
+the bm25 probe it collects, the row count observed on a candidate
+export's write. ``commit_pending`` runs ONCE per run and writes each
+base's rows from the driver with pyarrow, under a single run-id
+directory of one metrics table:
 
-    <base>/run_id=<rid>/part-*.parquet
+    <base>/run_id=<rid>/part-00000.parquet
     columns: operator, metric, bucket_key, value (bigint)
 
-Why deferred: round 3 committed each operator's drops as an eager
-overwrite-parquet action at plan-construction time, which (a) paid a full
-signature pass per query before the query even ran (the 2.3× dedup-family
-bench regression), (b) clobbered the previous run's table even for
-constructed-but-abandoned plans, and (c) could overwrite mid-lifetime
-under concurrent runs. Deferring to one run-scoped append keeps the
-committed-metrics guarantee at every run endpoint in this repo —
-queries.clear_session_caches, bench sweeps, tools/driver_sweep and
-jobs/tile_pipeline all call ``commit_pending`` — while the registered
-frames read the operator's OWN cached intermediates, so the commit costs
-one small job, not a recompute. The contract for OTHER embedders: a
-process that registers metrics and exits without calling
-``commit_pending`` drops them — if you end a run, flush it.
+The commit submits no Spark job, so it cannot fail on a query's broken
+lineage and costs milliseconds. Recording a (base, operator, metric)
+again replaces the pending rows (newest wins): building the same query
+twice in one run commits one copy of its metrics, not two. A plan that
+is built but never run still commits, because its values were computed
+while it was built. Every run endpoint in this repo —
+queries.clear_session_caches, bench sweeps, tools/driver_sweep and both
+jobs — calls ``commit_pending``; a process that records metrics and exits
+without calling it drops them: if you end a run, flush it.
+
+Why no ``DataFrame.observe`` inside a plan: an Observation on a subtree
+that adaptive execution prunes never fires. Probed on pyspark 4.1.2 at
+``local[2]`` with AQE on (Spark's default): an observation on the
+hot-bucket aggregate under a broadcast ``left_anti`` came back as an
+empty row whenever the hot set was empty — the normal case — because AQE
+drops the join. Observing at a plan's ROOT (a write, as
+``commit.write_observed`` and :func:`export_candidates` do) is safe.
 
 Standard metric names:
 - ``bucket_rows_dropped``  rows in each dropped hot bucket (key = bucket)
@@ -41,103 +48,58 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 METRIC_COLS = ("operator", "metric", "bucket_key", "value")
 
-# (base_path, dedupe key or None, canonical frame); a keyed registration
-# REPLACES any pending entry with the same (base_path, key), so building
-# the same query twice in one run commits one copy of its metrics (the
-# last-constructed plan's), not two — rebuilt-plan double-counting was a
-# round-4 review finding. Constructed-but-never-executed plans still
-# commit (their metrics are deterministic functions of the inputs, so the
-# VALUES are right); the only cost is that the commit computes the frame
-# cold instead of reading the abandoned plan's never-populated cache.
-_PENDING: list[tuple[str, tuple | None, DataFrame]] = []
+# (base_path, operator, metric) -> [(bucket_key, value), ...]
+_PENDING: dict[tuple[str, str, str], list[tuple[str, int]]] = {}
 
 
-def metric_frame(
-    operator: str, metric: str, bucket_key_col, value_col
-) -> list:
-    """Column list in canonical order for a metrics row set."""
-    return [
-        F.lit(operator).alias("operator"),
-        F.lit(metric).alias("metric"),
-        bucket_key_col.cast("string").alias("bucket_key"),
-        value_col.cast("bigint").alias("value"),
-    ]
+def record(base_path: str, operator: str, metric: str, value: int) -> None:
+    """Queue one unkeyed metric row for the next commit."""
+    record_rows(base_path, operator, metric, [("", value)])
 
 
-def register(base_path: str, frame: DataFrame, key: tuple | None = None) -> None:
-    """Queue a canonical (operator, metric, bucket_key, value) frame for
-    the next commit. Lazy — no Spark action here. ``key`` (normally
-    ``(operator, metric)``) makes the registration idempotent per run:
-    the newest frame for a (base_path, key) wins."""
-    global _PENDING
-    if key is not None:
-        _PENDING = [e for e in _PENDING if not (e[0] == base_path and e[1] == key)]
-    _PENDING.append((base_path, key, frame))
-
-
-def register_count(
-    base_path: str, operator: str, metric: str, df: DataFrame
-) -> None:
-    """Queue ``count(df)`` as a single metric row. Point it at a CACHED
-    frame (or a parquet scan) so the commit pays a cache read, not a
-    recompute of the operator's joins."""
-    register(
-        base_path,
-        df.groupBy().agg(F.count(F.lit(1)).alias("_n")).select(
-            *metric_frame(operator, metric, F.lit(""), F.col("_n"))
-        ),
-        key=(operator, metric),
-    )
-
-
-def register_literal(
-    base_path: str, operator: str, metric: str, value: int, spark
-) -> None:
-    """Queue a constant metric row (e.g. the cap in force)."""
-    register(
-        base_path,
-        spark.range(1).select(
-            *metric_frame(operator, metric, F.lit(""), F.lit(int(value)))
-        ),
-        key=(operator, metric),
-    )
-
-
-def pending_count() -> int:
-    return len(_PENDING)
+def record_rows(base_path: str, operator: str, metric: str, rows) -> None:
+    """Queue ``(bucket_key, value)`` rows as the run's value of one
+    (base_path, operator, metric), replacing any pending rows for it."""
+    key = (base_path, operator, metric)
+    _PENDING.pop(key, None)  # the newest recording also commits last
+    _PENDING[key] = [(str(k), int(v)) for k, v in rows]
 
 
 def commit_pending(run_id: str | None = None) -> dict:
-    """Write all pending frames — ONE union + write per base path, under a
-    fresh run-id subdirectory (append-by-directory: concurrent or repeated
-    runs never clobber each other; ADVICE r3). Each base commits
-    independently: a frame whose lineage broke after registration (e.g. a
-    failed query, or an export a foreign process removed) fails ONLY its
-    own base — the error is returned in ``errors`` instead of aborting the
-    other bases' writes, so one poisoned frame cannot lose a whole run's
-    metrics. Returns {"bases": n, "run_id": rid, "sec": t, "errors":
-    {base: msg}}; empty pending is a no-op."""
+    """Write every base's pending rows under a fresh run-id subdirectory
+    (append-by-directory: concurrent or repeated runs never clobber each
+    other; ADVICE r3), each through the tmp+swap of
+    :func:`atomic_export_local`. Each base commits independently: a
+    failed write (disk full, a read-only base) fails ONLY its own base,
+    returned in ``errors``. Returns {"bases": n, "base_paths": [...],
+    "run_id": rid, "sec": t, "errors": {base: msg}, "rows": {base:
+    [(operator, metric, bucket_key, value), ...]}}; empty pending is a
+    no-op."""
     global _PENDING
-    pend, _PENDING = _PENDING, []
+    pend, _PENDING = _PENDING, {}
     if not pend:
-        return {"bases": 0, "run_id": None, "sec": 0.0, "errors": {}}
+        return {"bases": 0, "base_paths": [], "run_id": None, "sec": 0.0,
+                "errors": {}, "rows": {}}
+    import pyarrow as pa
+
     rid = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
-    by_base: dict[str, list[DataFrame]] = {}
-    for base, _key, fr in pend:
-        by_base.setdefault(base, []).append(fr)
+    by_base: dict[str, list[tuple]] = {}
+    for (base, op, metric), rows in pend.items():
+        by_base.setdefault(base, []).extend((op, metric, k, v) for k, v in rows)
+    schema = pa.schema(
+        [(c, pa.string()) for c in METRIC_COLS[:3]] + [("value", pa.int64())]
+    )
     errors: dict[str, str] = {}
-    for base, frames in by_base.items():
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
+    for base, rows in by_base.items():
+        table = pa.Table.from_pylist([dict(zip(METRIC_COLS, r)) for r in rows], schema)
         try:
-            out.write.mode("overwrite").parquet(os.path.join(base, f"run_id={rid}"))
+            atomic_export_local(table, os.path.join(base, f"run_id={rid}"))
         except Exception as ex:  # noqa: BLE001 — per-base isolation is the point
             errors[base] = f"{type(ex).__name__}: {ex}"
     return {
@@ -146,14 +108,14 @@ def commit_pending(run_id: str | None = None) -> dict:
         "run_id": rid,
         "sec": round(time.time() - t0, 3),
         "errors": errors,
+        "rows": by_base,
     }
 
 
 def discard_pending() -> None:
-    """Drop pending frames without writing (test isolation only — a real
+    """Drop pending values without writing (test isolation only — a real
     run endpoint must commit instead)."""
-    global _PENDING
-    _PENDING = []
+    _PENDING.clear()
 
 
 def atomic_export(df: DataFrame, path: str) -> None:
@@ -210,7 +172,7 @@ def _swap_into(tmp: str, path: str) -> None:
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-def atomic_export_local(pdf, path: str) -> None:
+def atomic_export_local(table, path: str) -> None:
     """Driver-side tmp+swap parquet export for BOUNDED artifacts whose
     rows already live on the driver (the B≈512-row DSIR λ table: its
     inputs were collect()ed to compute λ in the first place; the
@@ -220,8 +182,9 @@ def atomic_export_local(pdf, path: str) -> None:
     task launch; measured 4.5-7.5 s of pure overhead per export on the
     bench host vs milliseconds for a direct pyarrow write of the SAME
     single-file parquet (DuckDB and Spark read it identically). Use
-    atomic_export for anything distributed; this one asserts its input
-    is a pandas frame, i.e. already driver-resident by construction. A
+    atomic_export for anything distributed; this one takes a pandas
+    frame or a pyarrow table, i.e. rows already driver-resident by
+    construction (the run metrics of :func:`commit_pending` too). A
     failed write removes its tmp dir."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -229,10 +192,9 @@ def atomic_export_local(pdf, path: str) -> None:
     tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
     try:
         os.makedirs(tmp)
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(tmp, "part-00000.parquet"),
-        )
+        if not isinstance(table, pa.Table):
+            table = pa.Table.from_pandas(table, preserve_index=False)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
     except BaseException:
         import shutil
 
@@ -250,15 +212,16 @@ def export_candidates(
     """The shared soundness-oracle export contract (LSH / IVF candidate
     sets): atomically export ``pairs`` to parquet, return the READ-BACK
     scan (so the downstream re-score and the DuckDB oracle read the same
-    bytes), and register the exported row count as the ``candidate_pairs``
-    recall proxy — a free count off the export scan at commit time. One
+    bytes), and record the exported row count as the ``candidate_pairs``
+    recall proxy — observed on the export write itself (a root-level
+    observe, as commit.write_observed does), so it costs no job. One
     definition instead of the three per-operator copies a round-4 review
     flagged."""
-    atomic_export(pairs, export_path)
-    out = pairs.sparkSession.read.parquet(export_path)
+    obs = Observation()
+    atomic_export(pairs.observe(obs, F.count(F.lit(1)).alias("rows")), export_path)
     if metrics_path is not None:
-        register_count(metrics_path, operator, "candidate_pairs", out)
-    return out
+        record(metrics_path, operator, "candidate_pairs", obs.get["rows"])
+    return pairs.sparkSession.read.parquet(export_path)
 
 
 def read_metrics(spark, base_path: str) -> DataFrame:

@@ -243,7 +243,6 @@ def bloom_probe(
     min_hits: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """Probe every document's distinct word n-grams against the filter:
     (doc_id, n_grams, bloom_hits, contaminated). n and k come FROM the
@@ -252,21 +251,14 @@ def bloom_probe(
     clean. ZERO shuffle: one mapInPandas over the scan; the bitmap ships
     as a sparkContext.broadcast variable (one torrent-distributed copy
     per executor — at the multi-GB planet-bench setting a plain closure
-    would re-ship m/8 bytes with EVERY task's serialized function).
-    ``use_broadcast=False`` falls back to closure capture for
-    environments without a live SparkContext on the driver path."""
+    would re-ship m/8 bytes with EVERY task's serialized function)."""
     n, k = bf.n, bf.k
     m_bits = bf.m_bits
     assert m_bits & (m_bits - 1) == 0
-    bvar = (
-        docs.sparkSession.sparkContext.broadcast(bf.bitmap)
-        if use_broadcast
-        else None
-    )
-    plain = None if use_broadcast else bf.bitmap
+    bvar = docs.sparkSession.sparkContext.broadcast(bf.bitmap)
 
     def probe(batches):
-        bitmap = bvar.value if bvar is not None else plain
+        bitmap = bvar.value
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             isnull = pdf[text_col].isna().to_numpy()

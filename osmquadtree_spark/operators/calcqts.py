@@ -229,21 +229,18 @@ def calc_all_quadtrees(
     relations: DataFrame,
     buffer: float = qtk.BUFFER_DEFAULT,
     max_depth: int = qtk.MAX_DEPTH_CLI,
-    persist_intermediates: bool = True,
-    small_side_hints: bool = False,
 ) -> dict[str, DataFrame]:
     """Full calcqts: returns {'nodes': (node_id, qt), 'ways': ..., 'relations': ...}.
 
-    Way and node cells are persisted by default: the node path re-reads the
-    way cells, the relation path re-reads both, and the relation closure's
-    driver collects would otherwise replay the whole join lineage per
-    action — the reference materializes each stage to file for the same
-    reason (calcqts.cpp writes -qts.pbf between passes)."""
-    wq = way_quadtrees(ways, nodes, buffer, max_depth, small_nodes=small_side_hints)
-    if persist_intermediates:
-        wq = wq.persist()
-    nq = node_quadtrees(nodes, ways, wq, buffer, max_depth, small_way_qts=small_side_hints)
-    if persist_intermediates:
-        nq = nq.persist()
-    rq = relation_quadtrees(relations, nq, wq, small_member_qts=small_side_hints)
+    Way and node cells are persisted (through the cache registry, so
+    ``release_all`` frees them): the node path re-reads the way cells, the
+    relation path re-reads both, and the relation closure's driver
+    collects would otherwise replay the whole join lineage per action —
+    the reference materializes each stage to file for the same reason
+    (calcqts.cpp writes -qts.pbf between passes)."""
+    from ..cache import cached
+
+    wq = cached(way_quadtrees(ways, nodes, buffer, max_depth))
+    nq = cached(node_quadtrees(nodes, ways, wq, buffer, max_depth))
+    rq = relation_quadtrees(relations, nq, wq)
     return {"nodes": nq, "ways": wq, "relations": rq}

@@ -170,14 +170,11 @@ def _converged_star(
         # max_rounds is visible before it ever raises
         from .. import metrics
 
-        spark = e.sparkSession
-        rows = [("rounds", rounds)] + [
-            (f"edges_round_{i}", c) for i, c in enumerate(edge_counts)
-        ]
-        frame = spark.createDataFrame(rows, "k string, v bigint").select(
-            *metrics.metric_frame(operator, "convergence", F.col("k"), F.col("v"))
+        metrics.record_rows(
+            metrics_path, operator, "convergence",
+            [("rounds", rounds)]
+            + [(f"edges_round_{i}", c) for i, c in enumerate(edge_counts)],
         )
-        metrics.register(metrics_path, frame, key=(operator, "convergence"))
     return e
 
 

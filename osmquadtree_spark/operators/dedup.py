@@ -185,73 +185,59 @@ def cap_hot_buckets(
     cap: int | None,
     metrics_path: str | None = None,
     operator: str = "unknown",
-) -> DataFrame:
+) -> tuple[DataFrame, int | None]:
     """Drop join-key buckets holding more than ``cap`` rows before a
     candidate self-join — the 100-TB guard: one degenerate bucket (empty
     text, boilerplate n-grams, zero vectors) otherwise goes quadratic in
-    the pair join. The hot-key set is tiny by construction (≤ n_rows/cap
-    keys can exceed the cap), so it broadcasts into a left_anti join.
+    the pair join. Pairs entirely inside a dropped bucket are sacrificed
+    recall, the standard trade (AQE still splits the sub-cap skew).
 
-    "No silent caps": when ``metrics_path`` is given, the dropped-bucket
-    stats (bucket_rows_dropped per bucket + the cap in force) are
-    REGISTERED with the run-scoped metrics registry (osmquadtree_spark.
-    metrics) and committed once per run by the run endpoint — NOT written
-    eagerly at plan-construction time (that paid a full signature pass per
-    query before it ran, and clobbered prior runs' tables for plans that
-    were never executed). The hot set is persisted, so the query's own
-    anti-join materializes it and the commit pays a cache read. Pairs
-    entirely inside a dropped bucket are sacrificed recall, the standard
-    trade (AQE still splits the sub-cap skew)."""
-    if cap is None:
-        return df
-    from .. import metrics
-    from ..cache import cached
+    One driver action: the bucket-count aggregate is collected as ONE row
+    holding the hot ``(key…, n)`` list — ≤ n_rows/cap keys by
+    construction, the rows a broadcast exchange would collect to the
+    driver anyway — and Σ n·(n−1)/2 over the buckets kept, the pre-dedup
+    pair volume of the candidate self-join. The anti-join reads the local
+    hot list (no join at all when nothing is hot, the normal case).
+    Returns ``(capped frame, pair volume)``; with neither a cap nor a
+    ``metrics_path`` nothing runs and the volume is None.
 
-    hot = hot_bucket_stats(df, key_cols, cap)
-    if metrics_path is not None:
-        hot = cached(hot)
-        metrics.register(
-            metrics_path,
-            hot.select(
-                *metrics.metric_frame(
-                    operator,
-                    "bucket_rows_dropped",
-                    F.concat_ws(",", *[F.col(c).cast("string") for c in key_cols]),
-                    F.col("_bn"),
-                )
-            ),
-            key=(operator, "bucket_rows_dropped"),
-        )
-        metrics.register_literal(
-            metrics_path, operator, "bucket_cap", cap, df.sparkSession
-        )
-    return df.join(F.broadcast(hot.select(*key_cols)), key_cols, "left_anti")
-
-
-def register_pair_volume(
-    metrics_path: str, operator: str, keyed: DataFrame, key_cols: list[str]
-) -> None:
-    """Register the per-run recall proxy ``candidate_pair_volume`` =
-    Σ_buckets n·(n−1)/2 over the CAPPED bucket table — the pre-dedup pair
-    volume the candidate join will process. One cheap aggregate over an
-    already-cached slim table (no extra pair join, no plan barrier in the
-    query); a collapsing volume across runs flags silent recall loss in
-    production where no brute-force twin exists. The exact post-dedup
-    count is committed where it is free (the export-scan paths)."""
+    "No silent caps": with ``metrics_path`` and a cap, the dropped-bucket
+    stats (bucket_rows_dropped per bucket + the cap in force) are recorded
+    as values in the run-scoped metrics (osmquadtree_spark.metrics) and
+    committed once per run by the run endpoint; callers that commit the
+    ``candidate_pair_volume`` recall proxy take it from the returned
+    volume."""
+    if cap is None and metrics_path is None:
+        return df, None
     from .. import metrics
 
-    vol = (
-        keyed.groupBy(*key_cols)
+    n = F.col("_n")
+    hot = n > cap if cap is not None else F.lit(False)
+    row = (
+        df.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_n"))
-        .groupBy()
-        .agg(F.sum(F.col("_n") * (F.col("_n") - 1) / 2).cast("bigint").alias("_v"))
-        .select(
-            *metrics.metric_frame(
-                operator, "candidate_pair_volume", F.lit(""), F.coalesce("_v", F.lit(0))
-            )
+        .agg(
+            F.collect_list(F.when(hot, F.struct(*key_cols, n))).alias("hot"),
+            F.sum(F.when(~hot, n * (n - 1))).alias("_v2"),
         )
+        .first()
     )
-    metrics.register(metrics_path, vol, key=(operator, "candidate_pair_volume"))
+    volume = (row["_v2"] or 0) // 2
+    if metrics_path is not None and cap is not None:
+        # bucket_key: the non-NULL key parts joined by ","
+        metrics.record_rows(
+            metrics_path, operator, "bucket_rows_dropped",
+            [(",".join(str(r[c]) for c in key_cols if r[c] is not None), r["_n"])
+             for r in row["hot"]],
+        )
+        metrics.record(metrics_path, operator, "bucket_cap", cap)
+    # a NULL key never equi-joins, so it needs no anti-join row
+    keys = [k for k in (tuple(r[c] for c in key_cols) for r in row["hot"])
+            if None not in k]
+    if not keys:
+        return df, volume
+    hot_df = df.sparkSession.createDataFrame(keys, df.select(*key_cols).schema)
+    return df.join(F.broadcast(hot_df), key_cols, "left_anti"), volume
 
 
 def hot_bucket_stats(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
@@ -313,13 +299,13 @@ def minhash_lsh_pairs(
     from ..cache import cached
 
     sigs = cached(minhash_signature(docs, n, text_col).filter(F.size("sig") > 0))
-    bands = band_rows(sigs)
-    # persist the CAPPED bands: both self-join branches read them, and the
-    # cap's aggregate + broadcast-anti subtree would otherwise run per branch
-    bands = cached(
-        cap_hot_buckets(bands, ["band", "bucket"], bucket_cap, metrics_path,
-                        "dedup_minhash")
+    bands, volume = cap_hot_buckets(
+        band_rows(sigs), ["band", "bucket"], bucket_cap, metrics_path,
+        "dedup_minhash",
     )
+    # persist the CAPPED bands: both self-join branches read them, and the
+    # banding (+ any broadcast-anti join) would otherwise run per branch
+    bands = cached(bands)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
     cand = (
@@ -329,7 +315,9 @@ def minhash_lsh_pairs(
         .dropDuplicates(["doc_a", "doc_b"])
     )
     if metrics_path is not None:
-        register_pair_volume(metrics_path, "dedup_minhash", bands, ["band", "bucket"])
+        from .. import metrics
+
+        metrics.record(metrics_path, "dedup_minhash", "candidate_pair_volume", volume)
     return _minhash_rescore(cand, sigs, min_matches)
 
 
@@ -376,10 +364,11 @@ def minhash_lsh_pairs_incremental(
     all_bands = store_bands.select("doc_id", "band", "bucket").unionByName(
         new_bands
     )
-    all_bands = cached(
-        cap_hot_buckets(all_bands, ["band", "bucket"], bucket_cap,
-                        metrics_path, "dedup_incremental")
+    all_bands, _ = cap_hot_buckets(
+        all_bands, ["band", "bucket"], bucket_cap, metrics_path,
+        "dedup_incremental",
     )
+    all_bands = cached(all_bands)
     # the capped union feeds the probe side; the new side re-filters the
     # cap via a semi-join on its own rows (a new doc in a dropped bucket
     # must not pair through it from EITHER side)
@@ -405,7 +394,8 @@ def minhash_lsh_pairs_incremental(
         # recall proxy: the join's ACTUAL pre-dedup candidate volume,
         # Σ_buckets n_new·(n_all − 1) — NOT the union's C(n,2), which is
         # dominated by stored×stored pairs this join never generates and
-        # would mask a collapsing new-side volume
+        # would mask a collapsing new-side volume. One aggregate over the
+        # cached band tables.
         from .. import metrics
 
         na = a.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_nn"))
@@ -414,17 +404,11 @@ def minhash_lsh_pairs_incremental(
         )
         vol = (
             na.join(nu, ["band", "bucket"])
-            .groupBy()
             .agg(F.sum(F.col("_nn") * (F.col("_nu") - 1)).alias("_v"))
-            .select(
-                *metrics.metric_frame(
-                    "dedup_incremental", "candidate_pair_volume",
-                    F.lit(""), F.coalesce("_v", F.lit(0)),
-                )
-            )
+            .first()["_v"]
         )
-        metrics.register(
-            metrics_path, vol, key=("dedup_incremental", "candidate_pair_volume")
+        metrics.record(
+            metrics_path, "dedup_incremental", "candidate_pair_volume", vol or 0
         )
     sigs_all = store_sigs.select("doc_id", "sig").unionByName(
         new_sigs.select("doc_id", "sig")
@@ -512,7 +496,7 @@ def hamming_block_pairs(
     ``sig_bits`` bits — the ONE definition shared by the 32-bit text
     SimHash (simhash_pairs) and the 64-bit image perceptual hash
     (images.phash_near_dup), so the cap-before-join ordering and the
-    metrics registration cannot drift between them.
+    metrics recording cannot drift between them.
 
     The signature's bits split into ``max_hamming + 1`` contiguous blocks
     (uneven widths allowed): any pair within hamming ≤ max_hamming agrees
@@ -544,11 +528,14 @@ def hamming_block_pairs(
         F.col(id_col).alias("_pid"), F.col(sig_col).alias("_sig"),
         F.explode(F.array(*parts)).alias("_b"),
     ).select("_pid", "_sig", F.col("_b.blk").alias("blk"), F.col("_b.val").alias("val"))
-    blocks = cached(
-        cap_hot_buckets(blocks, ["blk", "val"], bucket_cap, metrics_path, operator)
+    blocks, volume = cap_hot_buckets(
+        blocks, ["blk", "val"], bucket_cap, metrics_path, operator
     )
+    blocks = cached(blocks)
     if metrics_path is not None:
-        register_pair_volume(metrics_path, operator, blocks, ["blk", "val"])
+        from .. import metrics
+
+        metrics.record(metrics_path, operator, "candidate_pair_volume", volume)
     a = blocks.select(F.col("_pid").alias(out_a), F.col("_sig").alias("_sa"), "blk", "val")
     b = blocks.select(F.col("_pid").alias(out_b), F.col("_sig").alias("_sb"), "blk", "val")
     hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("bigint")
@@ -665,10 +652,11 @@ def embedding_dup_pairs_lsh(
     bucketed = bucket_signatures(vectors, planes, [id_col], vec_col).select(
         id_col, "tbl", "bucket"
     )
-    bucketed = cached(
-        cap_hot_buckets(bucketed, ["tbl", "bucket"], bucket_cap, metrics_path,
-                        "dedup_embedding_lsh")
+    bucketed, _ = cap_hot_buckets(
+        bucketed, ["tbl", "bucket"], bucket_cap, metrics_path,
+        "dedup_embedding_lsh",
     )
+    bucketed = cached(bucketed)
     a = bucketed.select(F.col(id_col).alias("id_a"), "tbl", "bucket")
     b = bucketed.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
     pairs = (
@@ -787,10 +775,10 @@ def semantic_dup_pairs(
     from ..cache import cached
 
     assign = ivf_assign(vectors, centroids, [id_col], vec_col, nprobe=nprobe)
-    assign = cached(
-        cap_hot_buckets(assign, ["cid"], cluster_cap, metrics_path,
-                        "dedup_semantic")
+    assign, _ = cap_hot_buckets(
+        assign, ["cid"], cluster_cap, metrics_path, "dedup_semantic"
     )
+    assign = cached(assign)
     a = assign.select(F.col(id_col).alias("id_a"), "cid")
     b = assign.select(F.col(id_col).alias("id_b"), "cid")
     pairs = (

@@ -365,9 +365,10 @@ def ngram_pairs(
     # through the registry so clear_session_caches/bench sweeps release them
     uncapped = cached(grams)
     sizes = uncapped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    grams = cached(
-        cap_hot_buckets(uncapped, ["gram"], gram_cap, metrics_path, operator)
+    grams, volume = cap_hot_buckets(
+        uncapped, ["gram"], gram_cap, metrics_path, operator
     )
+    grams = cached(grams)
     a = grams.withColumnRenamed("doc_id", "doc_a")
     b = grams.withColumnRenamed("doc_id", "doc_b")
     inter = (
@@ -377,11 +378,11 @@ def ngram_pairs(
         .agg(F.count(F.lit(1)).alias("inter_cnt"))
     )
     if metrics_path is not None:
-        # recall proxy per run: pre-join pair volume from the cached capped
-        # gram table (see dedup.register_pair_volume — no extra pair join)
-        from .dedup import register_pair_volume
+        # recall proxy per run: the pre-join pair volume the cap's own
+        # bucket-count aggregate computed (no extra pair join)
+        from .. import metrics
 
-        register_pair_volume(metrics_path, operator, grams, ["gram"])
+        metrics.record(metrics_path, operator, "candidate_pair_volume", volume)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_grams").alias("nb"))
     out = (
@@ -990,18 +991,19 @@ def _diagonal_runs(
     ``_run`` consecutive matched k-grams starting at token _pa0 in doc_a /
     _pb0 in doc_b, certifying a shared span of _run + k − 1 tokens.
     ``operator`` keys the cap-drop and pair-volume metrics: the two
-    callers must register under DISTINCT names (the pending-metrics
-    registry dedupes by (operator, metric), so a shared name would let
-    one caller's frame silently replace the other's)."""
+    callers must record under DISTINCT names (pending metrics are keyed
+    by (operator, metric), so a shared name would let one caller's
+    values silently replace the other's)."""
     from pyspark.sql import Window
 
     from ..cache import cached
     from .dedup import cap_hot_buckets
 
     grams = cached(positional_grams(docs, k, hash_grams=hash_grams))
-    capped = cached(
-        cap_hot_buckets(grams, ["gram"], gram_cap, metrics_path, operator)
+    capped, volume = cap_hot_buckets(
+        grams, ["gram"], gram_cap, metrics_path, operator
     )
+    capped = cached(capped)
     a = capped.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "gram"
     )
@@ -1014,9 +1016,9 @@ def _diagonal_runs(
         .select("doc_a", "doc_b", "pa", (F.col("pa") - F.col("pb")).alias("diag"))
     )
     if metrics_path is not None:
-        from .dedup import register_pair_volume
+        from .. import metrics
 
-        register_pair_volume(metrics_path, operator, capped, ["gram"])
+        metrics.record(metrics_path, operator, "candidate_pair_volume", volume)
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
     runs = hits.withColumn("_isl", F.col("pa") - F.row_number().over(w))
     return runs.groupBy("doc_a", "doc_b", "diag", "_isl").agg(

@@ -88,25 +88,23 @@ def bm25_topk(
     qdf = df_t.join(F.broadcast(qterms.select("term").distinct()), "term", "left_semi")
     probe = qterms.join(F.broadcast(qdf), "term")
     if df_cap is not None:
+        # the probe is the broadcast side (one row per query term), so it
+        # is collected once: the drops are recorded from it and the join
+        # reads its kept rows
+        rows = probe.collect()
         if metrics_path is not None:
             from .. import metrics
 
             # distinct (term, df): probe carries query_id, and a hot term
             # shared by many queries must commit ONE drop row, not one per
             # query (downstream sums would double-count)
-            metrics.register(
-                metrics_path,
-                probe.filter(F.col("df") > df_cap)
-                .select("term", "df").distinct()
-                .select(
-                    *metrics.metric_frame(
-                        "bm25", "query_term_df_dropped",
-                        F.col("term"), F.col("df"),
-                    )
-                ),
-                key=("bm25", "query_term_df_dropped"),
+            metrics.record_rows(
+                metrics_path, "bm25", "query_term_df_dropped",
+                sorted({(r["term"], r["df"]) for r in rows if r["df"] > df_cap}),
             )
-        probe = probe.filter(F.col("df") <= df_cap)
+        probe = docs.sparkSession.createDataFrame(
+            [r for r in rows if r["df"] <= df_cap], probe.schema
+        )
     probe = F.broadcast(probe)
     # candidate hits: postings ⋈ broadcast(query terms + df) — the
     # inverted-index probe; dl re-attaches per candidate doc

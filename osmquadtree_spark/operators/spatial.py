@@ -41,7 +41,6 @@ def raster_vector_join(
     rasters: DataFrame,
     zoom: int,
     qt_col: str = "qt",
-    broadcast_rasters: bool = True,
     salt: int | None = None,
 ) -> DataFrame:
     """Join vector elements to raster tiles covering them.
@@ -89,8 +88,7 @@ def raster_vector_join(
         keys = ["cell", "_salt"]
     else:
         keys = ["cell"]
-    rj = F.broadcast(r) if broadcast_rasters else r
-    out = e.join(rj, keys)
+    out = e.join(F.broadcast(r), keys)
     return out.drop("_salt") if salt else out
 
 

@@ -413,7 +413,7 @@ def dedupe_last_wins(pdf, idc: str):
 
 def missing_refs(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """Lazy frame of ways' refs missing from the change map — the
-    never-silent surface: queries register its count as the
+    never-silent surface: queries record its count as the
     ``missing_way_refs`` run metric, and strict callers enforce the
     reference's abort-above-10 policy (update.cpp:538, 548-556) via
     :func:`missing_ref_count` or the twin's ``max_missing_refs``."""

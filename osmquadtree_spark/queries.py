@@ -953,25 +953,25 @@ def _resolved_elements(spark, sf_dir):
         # the count is committed to the run metrics either way
         from . import metrics as _M
 
-        _M.register_literal(
+        _M.record(
             _scratch(sf_dir, "metrics"), "update_change_qts",
-            "missing_way_refs", missing.get("missing_way_refs", 0), spark,
+            "missing_way_refs", missing.get("missing_way_refs", 0),
         )
     if res is None:
-        from .operators.update import missing_refs
+        from .operators.update import missing_ref_count
 
         # read by way-bbox, fallback, and rel passes; registered with the
         # cache registry so bench sweeps release it — a raw persist() would
         # survive release_all and let the NEXT sweep's identical plan hit
         # Spark's CacheManager, reporting a cache read as the query's cost
         ch_nodes = cached(ch_nodes)
-        # distributed twin of the same never-silent surface: the missing
-        # count commits as a LAZY run metric (no extra in-query action)
+        # distributed twin of the same never-silent surface: one count
+        # action over the cached change nodes
         from . import metrics as _M
 
-        _M.register_count(
+        _M.record(
             _scratch(sf_dir, "metrics"), "update_change_qts",
-            "missing_way_refs", missing_refs(ch_nodes, ch_ways),
+            "missing_way_refs", missing_ref_count(ch_nodes, ch_ways),
         )
         res = calc_change_qts(ch_nodes, ch_ways, ch_rels)
     parts = [
@@ -2219,49 +2219,18 @@ def clear_session_caches(keep_input_stores: bool = False) -> None:
     for store, input_store in _SESSION_MEMOS:
         if not (keep_input_stores and input_store):
             store.clear()
-    # flush pending operator metrics (hot-bucket drops, candidate counts)
-    # BEFORE releasing caches: the registered frames read the operators'
-    # cached intermediates, so the run-end commit is a cache read. Any
-    # endpoint that clears session caches therefore also commits metrics —
-    # "no silent caps" holds per run, not per plan construction.
+    # release the persisted frames, then commit the run's operator metrics
+    # (hot-bucket drops, candidate counts): any endpoint that clears
+    # session caches also commits, so "no silent caps" holds per run, not
+    # per plan construction. The commit writes driver-side values, so a
+    # failed base is a real defect (disk full) and fails loudly.
     from . import metrics as _metrics
     from .cache import release_all
 
-    try:
-        try:
-            _mc = _metrics.commit_pending()
-            if _mc["errors"]:
-                # commit_pending isolates failures per base and returns
-                # them instead of raising; surface them here so a live
-                # session still fails loudly ("no silent caps")
-                raise RuntimeError(f"metrics commit failed: {_mc['errors']}")
-        except Exception:
-            # teardown path with a stopped/dead session: drop rather than
-            # mask the caller's own error. A LIVE session failing here is
-            # a real defect (disk full, broken frame) — re-raise instead
-            # of silently eating the "no silent caps" metrics. The
-            # liveness probe itself can throw (dead py4j gateway with a
-            # still-registered active session), which must not replace
-            # the commit error — treat an unprobeable session as dead.
-            try:
-                from pyspark.sql import SparkSession as _SS
-
-                active = _SS.getActiveSession()
-                live = (
-                    active is not None
-                    and not active.sparkContext._jsc.sc().isStopped()
-                )
-            except Exception:
-                live = False
-            if live:
-                raise
-            # commit_pending drained the queue before failing; nothing
-            # pending remains to discard
-    finally:
-        # ALWAYS release registered persisted frames — a commit failure
-        # that left them cached would let the next sweep's identical
-        # plans hit Spark's CacheManager and report cache reads as cost
-        release_all()
+    release_all()
+    mc = _metrics.commit_pending()
+    if mc["errors"]:
+        raise RuntimeError(f"metrics commit failed: {mc['errors']}")
 
 
 # ----------------------------------------------------------------------------
@@ -3318,7 +3287,7 @@ def q_image_phash_clusters(spark, sf_dir):
     catalog image with its canonical representative (smallest img_idx),
     cluster size and keep/drop flag. The planted re-encode variants
     (1-bit and 3-bit perturbations) must land in their source image's
-    cluster. Convergence metrics register under their own operator key
+    cluster. Convergence metrics are recorded under their own operator key
     so a pipeline running doc AND image clustering commits both."""
     from .operators.components import dup_clusters
 

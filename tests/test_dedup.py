@@ -228,6 +228,92 @@ def test_cap_metrics_committed(spark, tmp_path):
     assert len(runs) == 2
 
 
+def _boiler_docs(spark, n_boiler):
+    boiler = [(i, "the same boilerplate text repeated for every row here") for i in range(n_boiler)]
+    uniq = [(100 + i, f"unique document number {i} with words w{i} x{i} y{i} z{i}") for i in range(5)]
+    return spark.createDataFrame(boiler + uniq, "doc_id bigint, text string")
+
+
+def _committed(spark, mpath):
+    from osmquadtree_spark import metrics
+
+    assert metrics.commit_pending()["errors"] == {}
+    return sorted(
+        (r.operator, r.metric, r.bucket_key, r.value)
+        for r in metrics.read_metrics(spark, mpath).collect()
+    )
+
+
+def test_metrics_commit_submits_no_spark_jobs(spark, tmp_path):
+    """The run-end commit writes driver-side values: no Spark job runs
+    under its job group."""
+    from osmquadtree_spark import metrics
+    from osmquadtree_spark.operators.dedup import minhash_lsh_pairs
+
+    metrics.discard_pending()
+    mpath = str(tmp_path / "metrics")
+    minhash_lsh_pairs(
+        _boiler_docs(spark, 60), bucket_cap=50, metrics_path=mpath
+    ).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-commit", "commit_pending")
+    try:
+        res = metrics.commit_pending()
+    finally:
+        sc.setJobGroup("", "")
+    assert res["bases"] == 1 and res["errors"] == {}
+    assert list(sc.statusTracker().getJobIdsForGroup("metrics-commit")) == []
+
+
+def test_cap_metrics_when_nothing_is_hot(spark, tmp_path):
+    """No bucket exceeds the cap — the case where an observation inside
+    the plan comes back empty under AQE (the anti-join is pruned). The cap
+    and the pair volume still commit, and no drop row does."""
+    from osmquadtree_spark import metrics
+    from osmquadtree_spark.operators.dedup import N_BANDS, minhash_lsh_pairs
+    from osmquadtree_spark.operators.docs import ngram_pairs
+
+    metrics.discard_pending()
+    mpath = str(tmp_path / "metrics")
+    minhash_lsh_pairs(
+        _boiler_docs(spark, 10), bucket_cap=50, metrics_path=mpath
+    ).collect()
+    rows = _committed(spark, mpath)
+    # the 10 boilerplate docs share every band bucket: N_BANDS × C(10, 2)
+    assert rows == [
+        ("dedup_minhash", "bucket_cap", "", 50),
+        ("dedup_minhash", "candidate_pair_volume", "", N_BANDS * 45),
+    ]
+    # no cap at all: the pair volume still commits, and no cap row does
+    # (7 boilerplate trigrams × C(10, 2) + "unique document number" × C(5, 2))
+    npath = str(tmp_path / "ngram")
+    ngram_pairs(_boiler_docs(spark, 10), gram_cap=None, metrics_path=npath).collect()
+    assert _committed(spark, npath) == [
+        ("ngram_jaccard", "candidate_pair_volume", "", 7 * 45 + 10)
+    ]
+
+
+def test_unrun_capped_plan_commits_same_rows(spark, tmp_path):
+    """A capped plan that is built but never collected commits the same
+    rows as one that is collected."""
+    from osmquadtree_spark import metrics
+    from osmquadtree_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = _boiler_docs(spark, 60)
+    got = []
+    for run in (False, True):
+        metrics.discard_pending()
+        mpath = str(tmp_path / f"metrics_{run}")
+        plan = minhash_lsh_pairs(docs, bucket_cap=50, metrics_path=mpath)
+        if run:
+            plan.collect()
+        got.append(_committed(spark, mpath))
+    assert got[0] == got[1]
+    assert {r[1] for r in got[0]} == {
+        "bucket_rows_dropped", "bucket_cap", "candidate_pair_volume"
+    }
+
+
 def test_null_text_yields_null_signatures(spark):
     """NULL text must propagate like the SQL twins' string_split(NULL):
     NULL simhash signature, empty minhash signature (no grams), NULL
@@ -263,10 +349,10 @@ def test_keyed_registration_replaces_duplicate(spark, tmp_path):
 
     metrics.discard_pending()
     mpath = str(tmp_path / "metrics")
-    metrics.register_literal(mpath, "op_x", "bucket_cap", 5, spark)
-    metrics.register_literal(mpath, "op_x", "bucket_cap", 9, spark)  # rebuild
-    metrics.register_literal(mpath, "op_y", "bucket_cap", 7, spark)  # other op
-    assert metrics.pending_count() == 2
+    metrics.record(mpath, "op_x", "bucket_cap", 5)
+    metrics.record(mpath, "op_x", "bucket_cap", 9)  # rebuild
+    metrics.record(mpath, "op_y", "bucket_cap", 7)  # other op
+    assert len(metrics._PENDING) == 2
     metrics.commit_pending()
     rows = {
         (r.operator, r.metric): r.value

@@ -13,7 +13,7 @@ import runpy, sys
 from osmquadtree_spark import metrics
 metrics.commit_pending = lambda run_id=None: {
     "bases": 1, "base_paths": ["/m"], "run_id": "r0", "sec": 0.0,
-    "errors": {"/m": "OSError: disk full"},
+    "errors": {"/m": "OSError: disk full"}, "rows": {"/m": []},
 }
 sys.argv = ["driver_sweep.py"] + sys.argv[1:]
 runpy.run_path("tools/driver_sweep.py", run_name="__main__")
@@ -32,3 +32,5 @@ def test_failed_metrics_commit_fails_the_sweep(tmp_path, sf_dir):
     artifact = json.loads(out.read_text())
     assert artifact["failures"] == []  # the gate itself was EQ
     assert artifact["metrics_errors"] == {"/m": "OSError: disk full"}
+    # the qts store is built before the timed gates, its cost reported apart
+    assert "store_build_sec" in artifact

@@ -80,8 +80,8 @@ def test_lsh_recall_vs_exact(spark, sf_dir, tmp_path):
 
     metrics.discard_pending()
     mpath = str(tmp_path / "metrics")
-    metrics.register_literal(
-        mpath, "ann_lsh_topk", "recall_x1000_vs_exact", int(recall * 1000), spark
+    metrics.record(
+        mpath, "ann_lsh_topk", "recall_x1000_vs_exact", int(recall * 1000)
     )
     assert metrics.commit_pending()["bases"] == 1
     got = metrics.read_metrics(spark, mpath).collect()
