@@ -1942,10 +1942,6 @@ def q_changes_stream(spark, sf_dir):
     stateful latest-wins operator (streaming/changes.py); the converged
     survivor state must equal the batch result, so it shares the
     changes_merge oracle SQL."""
-    import shutil
-    import tempfile
-    import uuid
-
     from .streaming.changes import apply_changes_stream
 
     orders = _load(spark, sf_dir, "orders")
@@ -1969,42 +1965,18 @@ def q_changes_stream(spark, sf_dir):
             (F.col("o_orderkey") % 2 + 4).cast("int").alias("changetype"),
         ),
     ]
-    root = tempfile.mkdtemp(prefix="oqt_stream_")
-    try:
-        for i, b in enumerate(batches):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{root}/src/b{i}")
-        stream = spark.readStream.schema(
-            "key bigint, seq bigint, payload double, changetype int"
-        ).option("maxFilesPerTrigger", "1").parquet(root + "/src/*")
-        sink = f"oqt_stream_sink_{uuid.uuid4().hex[:8]}"
-        q = (
-            apply_changes_stream(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", root + "/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # a timed-out (not failed) stream would leave a partially
-            # processed memory sink — a silent wrong answer; fail loudly
-            q.stop()
-            raise TimeoutError("changes stream did not finish within 300 s")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-        final = (
-            spark.table(sink)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & ~F.col("is_deleted"))
-            .select("key", "payload", "changetype")
-        )
-        # materialize before the temp dir disappears
-        out = spark.createDataFrame(final.toPandas(), "key bigint, payload double, changetype int")
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # complete mode: the memory sink holds exactly the converged state
+    return _replay_stream(
+        spark,
+        batches,
+        "key bigint, seq bigint, payload double, changetype int",
+        lambda stream: apply_changes_stream(stream)
+        .filter(~F.col("is_deleted"))
+        .select("key", "payload", "changetype"),
+        "complete",
+        "key bigint, payload double, changetype int",
+        "oqt_stream_",
+    )
 
 
 EMB_DUP_MIN_COS = 0.4  # synthetic embeddings top out at cos ≈ 0.51

@@ -3,13 +3,15 @@ pipeline (daily .osc diffs merged into the tiled file,
 /root/reference/src/update/update.cpp) recast as a stateful stream.
 
 The reference replays sorted change files through a cursor merge
-(combineblocks.cpp:141-162). Streaming-first restatement: changes arrive as
-a stream of (key..., seq, payload..., changetype) rows;
-``apply_changes_stream`` keeps the latest-seq row per key in keyed state
-(``applyInPandasWithState``) and emits the survivor on every update —
-Delete(1)/Remove(2) survivors emit a tombstone row (is_deleted=true) so a
-downstream MERGE INTO can delete, exactly the reference's apply_change
-semantics (survivors reset to changetype Normal).
+(combineblocks.cpp:141-162) in which the newest row wins per key.
+Streaming-first restatement: changes arrive as a stream of (key..., seq,
+payload..., changetype) rows, and latest-wins is a max over an ordered
+struct, so ``apply_changes_stream`` is one built-in streaming aggregate
+whose per-key state lives in Spark's JVM state store — no Python runs.
+It emits the survivor on every update; Delete(1)/Remove(2) survivors emit
+a tombstone row (is_deleted=true) so a downstream MERGE INTO can delete,
+exactly the reference's apply_change semantics (survivors reset to
+changetype Normal).
 
 The reference's pipeline machinery (threaded_callback stages,
 SURVEY.md §2.8) needs nothing in Spark — micro-batches are the pipeline;
@@ -18,11 +20,8 @@ only the per-key latest-wins state is genuinely stateful.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
 from ..operators.changes import CT_DELETE, CT_NORMAL, CT_REMOVE
 
@@ -41,78 +40,35 @@ def apply_changes_stream(
     survivor is a tombstone and a sink MERGE should drop it. changetype of
     live survivors is normalized to 0 (combineblocks.cpp:120-130).
 
-    State per key is one (seq, payload, changetype) triple — O(live keys),
-    the same bound as the reference's id-indexed update tables
-    (update.cpp:115-195). At planet scale this state shards across
-    executors by key hash; no driver state.
+    The winner per key is the max of ``(seq, changetype, payload IS NOT
+    NULL, payload)``: at equal (seq, changetype) the larger payload wins,
+    NULL loses every tie (the batch window's descending order is NULLS
+    LAST) and a genuine -inf beats NULL. The order is total, so the winner
+    does not depend on how rows split across micro-batches. A NaN payload
+    is NULL to the operator (mapped before the max, emitted as NULL):
+    Spark orders NaN above every double, so unmapped it would win ties.
+
+    State per key is one struct in Spark's state store — O(live keys), the
+    same bound as the reference's id-indexed update tables
+    (update.cpp:115-195), sharded across executors by key hash; no driver
+    state. Works in update mode (one row per key touched by a micro-batch)
+    and complete mode (the converged state). A checkpoint written by the
+    earlier version of this operator, which kept per-key state in a pandas
+    function, cannot restart under the aggregate: the state schema differs.
     """
-
-    out_schema = (
-        f"{key_col} bigint, {seq_col} bigint, {payload_col} double, "
-        f"{changetype_col} int, is_deleted boolean"
-    )
-    state_schema = "seq bigint, payload double, changetype int"
-
-    def _pk(p) -> tuple[int, float]:
-        # NULL payload LOSES to any numeric at equal (seq, changetype) —
-        # the batch window's descending order is NULLS LAST, so the
-        # stream twin must rank NULL below every value, not above it.
-        # A (is_numeric, value) tuple, NOT a -inf sentinel: collapsing
-        # NULL to -inf would tie NULL with a GENUINE -inf payload in the
-        # cross-chunk state comparison while the in-chunk pandas sort
-        # (na_position='first') ranks NULL strictly below -inf — the
-        # winner would again depend on chunk placement
-        return (0, 0.0) if p is None or pd.isna(p) else (1, float(p))
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, payload, ct = state.get
-        else:
-            seq, payload, ct = -1, None, CT_NORMAL
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            # deterministic winner among equal-seq rows: break ties by
-            # (changetype, payload) — idxmax alone keeps whichever row
-            # landed first in the Arrow batch, which is arrival-order-
-            # dependent and varies between runs on identical input.
-            # na_position='first' so a NULL payload never out-sorts a
-            # numeric one (matching _pk and the batch NULLS-LAST window)
-            best = pdf.sort_values(
-                [seq_col, changetype_col, payload_col],
-                kind="stable",
-                na_position="first",
-            ).iloc[-1]
-            # compare the FULL (seq, changetype, payload) triple against
-            # state, not seq alone: equal-seq rows split across Arrow
-            # chunks or micro-batches must elect the same winner as when
-            # they share a chunk — a strict seq comparison would hand the
-            # tie to whichever chunk happened to arrive first
-            b_seq, b_ct = int(best[seq_col]), int(best[changetype_col])
-            b_pay = best[payload_col]
-            if (b_seq, b_ct, _pk(b_pay)) > (seq, ct, _pk(payload)):
-                seq, ct = b_seq, b_ct
-                # preserve NULL as NULL (float() would store NaN and the
-                # sink MERGE would write NaN where batch writes NULL)
-                payload = None if pd.isna(b_pay) else float(b_pay)
-        state.update((seq, payload, ct))
-        dead = ct in (CT_DELETE, CT_REMOVE)
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                seq_col: [seq],
-                payload_col: [payload],
-                changetype_col: [CT_NORMAL],
-                "is_deleted": [dead],
-            }
+    payload = F.nanvl(F.col(payload_col), F.lit(None).cast("double"))
+    best = F.max(
+        F.struct(
+            F.col(seq_col).alias("seq"),
+            F.col(changetype_col).alias("ct"),
+            payload.isNotNull().alias("has_payload"),
+            payload.alias("payload"),
         )
-
-    return changes.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ).alias("best")
+    return changes.groupBy(key_col).agg(best).select(
+        key_col,
+        F.col("best.seq").alias(seq_col),
+        F.col("best.payload").alias(payload_col),
+        F.lit(CT_NORMAL).alias(changetype_col),
+        F.col("best.ct").isin(CT_DELETE, CT_REMOVE).alias("is_deleted"),
     )

@@ -5,8 +5,11 @@ near-dup pairs must surface as they form, without re-scanning the corpus).
 
 The reference has no streaming surface (it is batch-only,
 /root/reference/src/sortblocks — the closest analog is the daily .osc
-replication replay); this module follows the same
-Structured-Streaming-first restatement as streaming/changes.py.
+replication replay); like streaming/changes.py it is a Structured-Streaming
+restatement, but not of the same stateful shape: changes.py's latest-wins
+state is a max, one built-in aggregate in Spark's state store, while the
+state here is a bucket's member list, which no built-in aggregate keeps, so
+it stays a per-(band, bucket) Python state function.
 
 Shape: the signature kernel is STATELESS (the same Arrow batch kernel as
 batch, one mapInPandas per micro-batch); the only genuine state is the

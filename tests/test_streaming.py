@@ -35,7 +35,7 @@ def _run_stream(spark, src, chk, sink_name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     return spark.sql(f"SELECT * FROM {sink_name}")
 
 
@@ -85,7 +85,7 @@ def test_stream_state_survives_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     _write_batch(spark, src, [(1, 0, 10.0, 0), (2, 0, 20.0, 0)], 0)
     run()
@@ -128,7 +128,7 @@ def test_stream_ingest_matches_batch_kernel(spark, tmp_path):
         .writeStream.format("memory").queryName("tilecounts")
         .outputMode("complete").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {r.group_qt: r.row_count for r in spark.sql("SELECT * FROM tilecounts").collect()}
 
     batch = spark.read.parquet(src + "/b0")
@@ -208,6 +208,42 @@ def test_stream_neg_inf_beats_null_across_chunks(spark, tmp_path):
         last = out.sort_values("seq").groupby("key").last()
         results.append(last.loc[1, "payload"])
     assert all(r == ninf for r in results), results
+
+
+def test_stream_nan_payload_is_null(spark, tmp_path):
+    """A NaN payload is NULL to the operator: a lone NaN is emitted as NULL
+    (Spark orders NaN above every double, so a max that skipped the
+    NaN->NULL map would emit NaN and make NaN WIN ties), and NaN loses an
+    equal-(seq, changetype) tie to a numeric payload, in one file and
+    across micro-batches."""
+    nan = float("nan")
+    for tag, batches, want in (
+        ("lone", [[(1, 3, nan, 0)]], None),
+        ("same", [[(1, 5, nan, 4), (1, 5, 7.0, 4)]], 7.0),
+        ("split", [[(1, 5, 7.0, 4)], [(1, 5, nan, 4)]], 7.0),
+    ):
+        src, chk = str(tmp_path / f"s_{tag}"), str(tmp_path / f"c_{tag}")
+        for i, rows in enumerate(batches):
+            # from tuples, not pandas: a pandas NaN would be written as NULL
+            spark.createDataFrame(rows, CH_SCHEMA).coalesce(1).write.parquet(f"{src}/b{i}")
+        sink = f"nan_{tag}"
+        _run_stream(spark, src, chk, sink)
+        # every row the update-mode sink received carries the winner
+        rows = spark.sql(
+            f"SELECT DISTINCT payload, isnan(payload) AS nan FROM {sink}"
+        ).collect()
+        assert [(r["payload"], r["nan"]) for r in rows] == [(want, False)], tag
+
+
+def test_stream_changes_plan_has_no_python(spark, tmp_path):
+    """Latest-wins runs as Spark's built-in streaming aggregate (state in
+    the JVM state store), not as a per-key Python state function."""
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [(1, 0, 1.0, 0)], 0)
+    stream = spark.readStream.schema(CH_SCHEMA).parquet(src + "/*")
+    plan = apply_changes_stream(stream)._jdf.queryExecution().analyzed().toString()
+    assert "Aggregate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def _dedup_corpus(n=150):
