@@ -11,7 +11,10 @@ The north-rule deployment shape:
 
 Re-running with the same --out-dir resumes from the first uncommitted
 stage (per-stage manifests are the commit markers — Iceberg snapshots in
-production). Prints one JSON line of stage manifests, last.
+production). The re-run takes the same --input or --n-images: the qts
+stage checkpoints only (image_id, qt), and the tile stage reads the input
+again and refuses to commit if it no longer matches the qts checkpoint.
+Prints one JSON line of stage manifests, last.
 
 Smoke-tested end to end through real spark-submit --py-files in
 tests/test_submit.py.
@@ -65,7 +68,11 @@ def main() -> None:
     if args.input:
         images = spark.read.parquet(args.input)
     else:
-        images = images_df(spark, args.n_images)
+        # one generator partition per task slot: both the qts and the tile
+        # stage run the generator, and each extra task costs a Python round trip
+        images = images_df(
+            spark, args.n_images, partitions=spark.sparkContext.defaultParallelism
+        )
     manifests = run_image_tiling(
         spark,
         images,

@@ -15,9 +15,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from ..kernels import quadtree as qtk
 from ..sources import images as img
+from . import sortblocks
 
 DECODE_STATS_SCHEMA = (
     "image_id string, w int, h int, fmt string, pix_sum bigint, pix_min int, pix_max int, "
@@ -132,24 +134,58 @@ def resize(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return images.mapInPandas(run, RESIZE_SCHEMA)
 
 
+FOOTPRINT_SCHEMA = "minx bigint, miny bigint, maxx bigint, maxy bigint, qt bigint"
+
+
+def footprint_cells(idx: pd.Series, phash: pd.Series, w: pd.Series, h: pd.Series) -> dict:
+    """The deterministic georeferenced footprint + quadtree cell id of a
+    batch of rows (FIXTURES.md §1 rule), as int64 arrays keyed by the
+    FOOTPRINT_SCHEMA fields. ``idx`` is the row index image_id[3:]."""
+    minx, miny, maxx, maxy = img.footprints(
+        phash.to_numpy("int64"), w.to_numpy("int32"), h.to_numpy("int32"),
+        idx.to_numpy("int64"),
+    )
+    qt = qtk.calculate(minx, miny, maxx, maxy)
+    return {"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy, "qt": qt}
+
+
+def _footprint_inputs() -> list:
+    # the row index is sliced and parsed in the JVM, so the Arrow batch
+    # carries four integer columns instead of the id strings
+    return [F.substr("image_id", F.lit(4)).cast("bigint"), "phash", "w", "h"]
+
+
 def with_footprint(images: DataFrame) -> DataFrame:
     """Attach the deterministic georeferenced footprint + quadtree cell id
-    (FIXTURES.md §1 rule): pandas UDF over (phash, w, h, image_id index)."""
-    from pyspark.sql.functions import pandas_udf
+    columns (footprint_cells): pandas UDF over (image_id index, phash, w, h)."""
 
-    @pandas_udf("minx bigint, miny bigint, maxx bigint, maxy bigint, qt bigint")
-    def fp(image_id: pd.Series, phash: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
-        idx = image_id.str[3:].astype(np.int64).to_numpy()
-        minx, miny, maxx, maxy = img.footprints(
-            phash.to_numpy("int64"), w.to_numpy("int32"), h.to_numpy("int32"), idx
-        )
-        qt = qtk.calculate(minx, miny, maxx, maxy)
-        return pd.DataFrame(
-            {"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy, "qt": qt}
-        )
+    @pandas_udf(FOOTPRINT_SCHEMA)
+    def fp(idx: pd.Series, phash: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(footprint_cells(idx, phash, w, h))
 
-    out = images.withColumn("_fp", fp("image_id", "phash", "w", "h"))
+    out = images.withColumn("_fp", fp(*_footprint_inputs()))
     return out.select("*", "_fp.minx", "_fp.miny", "_fp.maxx", "_fp.maxy", "_fp.qt").drop("_fp")
+
+
+def image_tiles(
+    images: DataFrame,
+    group_qts: np.ndarray,
+    sort_cols: list[str] | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """``tile_sorted(with_footprint(images), group_qts, ...)`` in one Arrow
+    pass: footprint, cell, group cell and destination partition of every
+    row come from (image_id index, phash, w, h) together, then the rows are
+    laid out as tile_sorted lays them out."""
+
+    def place(group_qts, parts, idx, phash, w, h):
+        fp = footprint_cells(idx, phash, w, h)
+        return {**fp, **sortblocks.place_tiles(group_qts, parts, fp["qt"])}
+
+    return sortblocks.lay_out_tiles(
+        images, group_qts, place, f"{FOOTPRINT_SCHEMA}, {sortblocks.PLACE_SCHEMA}",
+        _footprint_inputs(), sort_cols, num_partitions,
+    )
 
 
 def phash_near_dup(

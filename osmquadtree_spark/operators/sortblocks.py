@@ -252,12 +252,12 @@ def compute_groups_scalable(
 MAX_TILE_PARTITIONS = 2000
 
 
-def _groups_of(qt: pd.Series, group_qts: np.ndarray) -> np.ndarray:
+def _groups_of(qt, group_qts: np.ndarray) -> np.ndarray:
     # a single NULL makes the Arrow batch float64, silently destroying
     # the low (depth) bits of every qt > 2^53 — fail loudly instead
-    if qt.isna().any():
+    if pd.isna(qt).any():
         raise ValueError("assign_group: NULL cell id in batch")
-    return assign_groups(qt.to_numpy("int64"), group_qts)
+    return assign_groups(np.asarray(qt, dtype=np.int64), group_qts)
 
 
 def make_assign_group_udf(spark, group_qts: np.ndarray):
@@ -292,6 +292,42 @@ def tile_partitions(groups: np.ndarray, group_qts: np.ndarray, parts: int) -> np
     return (pos * parts // max(n, 1)).astype(np.int32)
 
 
+PLACE_SCHEMA = "group_qt bigint, _part_id int"
+
+
+def place_tiles(group_qts: np.ndarray, parts: int, qt) -> dict:
+    """Group cell and destination partition (PLACE_SCHEMA) of a batch of
+    cells."""
+    g = _groups_of(qt, group_qts)
+    return {"group_qt": g, "_part_id": tile_partitions(g, group_qts, parts)}
+
+
+def lay_out_tiles(
+    df: DataFrame,
+    group_qts: np.ndarray,
+    place,
+    schema: str,
+    inputs: list,
+    sort_cols: list[str] | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """One Arrow pass ``place(group_qts, parts, *inputs)`` appends the
+    ``schema`` columns, PLACE_SCHEMA's among them; ``repartitionById``
+    on ``_part_id`` places the rows, and each partition is sorted by
+    (group cell, sort key). The group table ships once per executor via a
+    Spark broadcast."""
+    parts = num_partitions or max(1, min(len(group_qts), MAX_TILE_PARTITIONS))
+    bc = df.sparkSession.sparkContext.broadcast(group_qts)
+
+    @pandas_udf(schema)
+    def place_batch(*cols: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(place(bc.value, parts, *cols))
+
+    out = df.withColumn("_tile", place_batch(*inputs)).select(*df.columns, "_tile.*")
+    out = out.repartitionById(parts, "_part_id")
+    return out.sortWithinPartitions("group_qt", *(sort_cols or []))
+
+
 def tile_sorted(
     df: DataFrame,
     group_qts: np.ndarray,
@@ -304,19 +340,9 @@ def tile_sorted(
     ``repartitionById`` places the rows, and each partition is sorted by
     (group cell, sort key) — the resort_objects semantics
     (resortobjects.cpp:112-140)."""
-    parts = num_partitions or max(1, min(len(group_qts), MAX_TILE_PARTITIONS))
-    bc = df.sparkSession.sparkContext.broadcast(group_qts)
-
-    @pandas_udf("group_qt bigint, _part_id int")
-    def place_tile(qt: pd.Series) -> pd.DataFrame:
-        g = _groups_of(qt, bc.value)
-        return pd.DataFrame({"group_qt": g, "_part_id": tile_partitions(g, bc.value, parts)})
-
-    out = df.withColumn("_tile", place_tile(F.col(qt_col))).select(
-        *df.columns, "_tile.group_qt", "_tile._part_id"
+    return lay_out_tiles(
+        df, group_qts, place_tiles, PLACE_SCHEMA, [F.col(qt_col)], sort_cols, num_partitions
     )
-    out = out.repartitionById(parts, "_part_id")
-    return out.sortWithinPartitions("group_qt", *(sort_cols or []))
 
 
 def write_tile_sorted(
@@ -336,18 +362,38 @@ def write_tile_sorted(
     per-(partition, tile) lineage rows (row count, min/max cell) + the
     manifest whose presence marks the committed snapshot — a resumed job
     skips completed stages (see tests/test_sortblocks.py::test_resume).
+    The commit is ``commit_tiles``.
+    """
+    out = tile_sorted(df, group_qts, qt_col, sort_cols, num_partitions)
+    return commit_tiles(out, path, group_qts, qt_col)
 
-    The row count is observed on the write job. The lineage is one
+
+def commit_tiles(
+    out: DataFrame,
+    path: str,
+    group_qts: np.ndarray,
+    qt_col: str = "qt",
+    extra: dict | None = None,
+    expect: dict | None = None,
+) -> dict:
+    """Write an already laid-out tile table (``tile_sorted`` or
+    ``images.image_tiles``) and commit it with its lineage.
+
+    The row count, and any ``extra`` aggregate columns, are observed on
+    the write job; ``expect`` maps observed names to the values they must
+    have, and a mismatch raises before anything commits. The lineage is one
     column-pruned aggregate over (``_part_id``, ``group_qt``, qt) of the
     committed files, read with the write's schema (no footer-inference
     job); it has at most |tiles| rows, so it is collected and committed
     from the driver, and the manifest's rows/tiles derive from it.
     """
     t0 = time.time()
-    out = tile_sorted(df, group_qts, qt_col, sort_cols, num_partitions)
-    written = write_observed(out, path)["rows"]
+    obs = write_observed(out, path, extra)
+    bad = [f"{k} {obs[k]} (expected {v})" for k, v in (expect or {}).items() if obs[k] != v]
+    if bad:
+        raise RuntimeError(f"tile write at {path} observed {', '.join(bad)}")
     lineage = (
-        df.sparkSession.read.schema(out.schema)
+        out.sparkSession.read.schema(out.schema)
         .parquet(os.path.join(path, "data"))
         .groupBy("_part_id", "group_qt")
         .agg(
@@ -359,9 +405,9 @@ def write_tile_sorted(
         .sort_values(["_part_id", "group_qt"], ignore_index=True)
     )
     rows = int(lineage["row_count"].sum())
-    if rows != written:
+    if rows != obs["rows"]:
         raise RuntimeError(
-            f"tile lineage at {path} counts {rows} rows, the write observed {written}"
+            f"tile lineage at {path} counts {rows} rows, the write observed {obs['rows']}"
         )
     atomic_export_local(lineage, os.path.join(path, "_metrics"))
     return commit_manifest(
@@ -370,6 +416,7 @@ def write_tile_sorted(
             "rows": rows,
             "tiles": int(lineage["group_qt"].nunique()),
             "groups": int(len(group_qts)),
+            **{k: obs[k] for k in extra or {}},
             "elapsed_sec": time.time() - t0,
         },
     )

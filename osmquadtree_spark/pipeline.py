@@ -4,9 +4,11 @@ North-rule lifecycle (the Spark restatement of the reference's
 calcqts → sortblocks chain, /root/reference/src/calcqts/calcqts.cpp:189-241 +
 src/sorting/sortblocks.cpp:422-501, applied to image rows):
 
-  stage "qts"    footprint + quadtree cell per row (Arrow-vectorized kernel)
+  stage "qts"    quadtree cell per row (Arrow-vectorized kernel) → a narrow
+                 (image_id, qt) table, as calcqts writes (id, qt)
   stage "groups" cell histogram → driver-side greedy tile split
-  stage "tiles"  group assignment + destination partition (one Arrow pass)
+  stage "tiles"  the input read again: footprint, cell, group and
+                 destination partition in one Arrow pass
                  → repartitionById → sorted tile table
                  + per-(partition, tile) lineage metrics
 
@@ -16,11 +18,16 @@ curation pipeline (commit.py — the sandbox stand-in for an Iceberg
 snapshot commit; in production each stage is
 `writeTo(...).createOrReplace()` on an Iceberg table and the manifest is
 the snapshot). Row counts come from the write jobs themselves, and the
-committed qts table is read once, with the schema its manifest records,
-for both downstream stages. A killed job re-run with the same
-``out_dir`` skips every committed stage and continues from the first
-uncommitted one, which is the north rule's resume-from-checkpoint
-semantics (tested in tests/test_sortblocks.py::test_resume).
+committed qts table is read with the schema its manifest records.
+
+The payload is written once, by the tile stage. Both writes observe the
+row count and an order-independent hash of (image_id, qt); the qts
+manifest records them, and a tile write whose input gained, lost or
+re-celled a row since raises before the tile manifest commits. A killed
+job re-run with the same ``out_dir`` skips every committed stage and
+continues from the first uncommitted one, which is the north rule's
+resume-from-checkpoint semantics (tests/test_sortblocks.py::test_resume);
+until stage "tiles" has committed, the re-run needs the input again.
 """
 
 from __future__ import annotations
@@ -30,24 +37,35 @@ import time
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .commit import (
     commit_manifest, is_committed, read_committed, read_manifest, write_observed,
 )
 from .operators import sortblocks
-from .operators.images import with_footprint
-from .operators.sortblocks import write_tile_sorted
+from .operators.images import image_tiles, with_footprint
+from .operators.sortblocks import commit_tiles
+# perfbench's spans wrap ``pipeline.write_tile_sorted`` by name
+from .operators.sortblocks import write_tile_sorted  # noqa: F401
+
+
+def _fingerprint() -> dict:
+    # bit_xor is order-independent and, unlike a sum of int64 hashes,
+    # cannot overflow under ANSI mode
+    return {"fingerprint": F.bit_xor(F.xxhash64("image_id", "qt"))}
 
 
 def stage_qts(spark: SparkSession, images: DataFrame, path: str) -> dict:
-    """Assign footprint + cell id to every image row; checkpoint the full
-    row (payload columns ride along so the tile write is a single pass).
-    The manifest records the written schema, so the downstream read needs
-    no footer inference."""
+    """Assign the quadtree cell of every image row and checkpoint the narrow
+    (image_id, qt) table: the source scan reads only image_id, phash, w and
+    h. The manifest records the written schema, so the downstream read
+    needs no footer inference, and the source fingerprint."""
     if is_committed(path):
         return read_manifest(path)
     t0 = time.time()
-    w = write_observed(with_footprint(images), path)
+    w = write_observed(
+        with_footprint(images).select("image_id", "qt"), path, extra=_fingerprint()
+    )
     return commit_manifest(path, {**w, "elapsed_sec": time.time() - t0})
 
 
@@ -90,22 +108,29 @@ def stage_groups(
 
 def stage_tiles(
     spark: SparkSession,
-    qts: DataFrame,
+    images: DataFrame,
+    qts_manifest: dict,
     groups_path: str,
     path: str,
     sort_cols: list[str] | None = None,
     num_partitions: int | None = None,
 ) -> dict:
-    """Group assignment + tile-sorted layout + per-(partition, tile) lineage."""
+    """Read the input again and place every row in its tile in one Arrow
+    pass (images.image_tiles), then write the tile-sorted table with its
+    per-(partition, tile) lineage. The write must observe the fingerprint
+    the qts manifest recorded."""
     if is_committed(path):
         return read_manifest(path)
-    gqt = pd.read_parquet(os.path.join(groups_path, "groups.parquet"))["group_qt"]
-    return write_tile_sorted(
-        qts,
+    groups = pd.read_parquet(os.path.join(groups_path, "groups.parquet"))
+    gqt = groups["group_qt"].to_numpy("int64")
+    fingerprint = _fingerprint()
+    return commit_tiles(
+        image_tiles(images, gqt, sort_cols or ["image_id"], num_partitions),
         path,
-        gqt.to_numpy("int64"),
-        sort_cols=sort_cols or ["image_id"],
-        num_partitions=num_partitions,
+        gqt,
+        extra=fingerprint,
+        # a qts manifest without a fingerprint matches no tile write
+        expect={k: qts_manifest.get(k) for k in ("rows", *fingerprint)},
     )
 
 
@@ -120,17 +145,20 @@ def run_image_tiling(
     num_partitions: int | None = None,
     stop_after: str | None = None,
 ) -> dict:
-    """Run (or resume) the full pipeline. ``images`` may be None on resume —
-    it is only read if stage "qts" is uncommitted. ``stop_after`` simulates a
-    kill between stage commits (for resume tests)."""
+    """Run (or resume) the full pipeline. ``images`` may be None on resume
+    only once stage "tiles" has committed: stages "qts" and "tiles" both
+    read it. ``stop_after`` simulates a kill between stage commits (for
+    resume tests)."""
     t0 = time.time()
     qts_p = os.path.join(out_dir, "qts")
     grp_p = os.path.join(out_dir, "groups")
     til_p = os.path.join(out_dir, "tiles")
 
     manifests: dict[str, dict] = {}
-    if images is None and not is_committed(qts_p):
-        raise ValueError("stage 'qts' not committed and no input provided")
+    if images is None:
+        for stage, p in (("qts", qts_p), ("tiles", til_p)):
+            if not is_committed(p):
+                raise ValueError(f"stage {stage!r} not committed and no input provided")
     manifests["qts"] = stage_qts(spark, images, qts_p)
     if stop_after == "qts":
         return manifests
@@ -141,7 +169,7 @@ def run_image_tiling(
     if stop_after == "groups":
         return manifests
     manifests["tiles"] = stage_tiles(
-        spark, qts, grp_p, til_p, num_partitions=num_partitions
+        spark, images, manifests["qts"], grp_p, til_p, num_partitions=num_partitions
     )
     total = time.time() - t0
     manifests["total"] = {

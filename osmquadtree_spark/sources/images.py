@@ -19,6 +19,8 @@ import struct
 import zlib
 
 import numpy as np
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
 
 MASK64 = (1 << 64) - 1
 
@@ -166,20 +168,29 @@ def caption_for(i: int) -> str:
     return f"caption {i}: " + " ".join(words)
 
 
-def image_row(i: int) -> dict:
-    phash = np.int64(np.uint64(splitmix64(np.uint64(i))))
-    w = _W_CYCLE[i % 4]
-    h = _H_CYCLE[(i // 4) % 4]
-    fmt = _FMT_CYCLE[i % 3]
-    pix = pixels_for(int(phash), w, h)
+def image_meta(i: int) -> dict:
+    """Row ``i`` of the table without its payload: every column but ``bytes``."""
     return {
         "image_id": f"img{i:012d}",
-        "bytes": CODECS[fmt][0](pix),
-        "w": np.int32(w),
-        "h": np.int32(h),
-        "fmt": fmt,
+        "w": np.int32(_W_CYCLE[i % 4]),
+        "h": np.int32(_H_CYCLE[(i // 4) % 4]),
+        "fmt": _FMT_CYCLE[i % 3],
         "caption": caption_for(i),
-        "phash": phash,
+        "phash": np.int64(np.uint64(splitmix64(np.uint64(i)))),
+    }
+
+
+def encode_payload(phash: int, w: int, h: int, fmt: str) -> bytes:
+    """The encoded image of a row: its phash pattern in its own format."""
+    return CODECS[fmt][0](pixels_for(int(phash), int(w), int(h)))
+
+
+def image_row(i: int) -> dict:
+    m = image_meta(i)
+    return {
+        "image_id": m.pop("image_id"),
+        "bytes": encode_payload(m["phash"], m["w"], m["h"], m["fmt"]),
+        **m,
     }
 
 
@@ -214,24 +225,32 @@ def derive_footprints(idx: np.ndarray):
     return footprints(ph, w, h, idx)
 
 
-IMAGE_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, caption string, phash bigint"
-)
+META_SCHEMA = "image_id string, w int, h int, fmt string, caption string, phash bigint"
 
 
 def images_df(spark, n: int, partitions: int = 32):
     """Distributed generation: spark.range → mapInPandas(generator). The
     generator is a pure function of the row index, so any partitioning
     yields the same table — this is how the 10^12-row design point scales
-    (no driver-side materialization)."""
-    import pandas as pd
+    (no driver-side materialization).
+
+    The generator emits the metadata; ``bytes`` is a separate pandas UDF
+    over (phash, w, h, fmt), so a plan that never reads ``bytes`` prunes
+    the encoding away (the tiling stages read only the metadata)."""
 
     def gen(batches):
         for pdf in batches:
-            idx = pdf["id"].to_numpy()
-            yield pd.DataFrame([image_row(int(i)) for i in idx])
+            yield pd.DataFrame([image_meta(int(i)) for i in pdf["id"]])
 
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, IMAGE_SCHEMA)
+    @pandas_udf("binary")
+    def encode(phash: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
+        return pd.Series([encode_payload(*r) for r in zip(phash, w, h, fmt)])
+
+    meta = spark.range(0, n, 1, partitions).mapInPandas(gen, META_SCHEMA)
+    return meta.select(
+        "image_id", encode("phash", "w", "h", "fmt").alias("bytes"),
+        "w", "h", "fmt", "caption", "phash",
+    )
 
 
 def phash_catalog(spark, n: int, partitions: int = 32):
@@ -247,7 +266,6 @@ def phash_catalog(spark, n: int, partitions: int = 32):
     independent of n, so the DuckDB oracle restates the catalog without a
     scale parameter. Pure function of the row index — any partitioning
     yields the same table (the 10^12-row design point)."""
-    import pandas as pd
 
     one = np.uint64(1)
 

@@ -32,6 +32,23 @@ def test_png_is_real_png():
     assert row["bytes"][:8] == b"\x89PNG\r\n\x1a\n"
 
 
+def test_images_df_encodes_only_when_bytes_read(spark):
+    """The generator emits the metadata and a separate UDF encodes the
+    payload, so a plan that never reads ``bytes`` runs no encoder; the
+    rows are image_row's."""
+    df = img.images_df(spark, 24, partitions=3)
+
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    assert "encode(" not in plan(df.select("image_id", "phash", "w", "h"))
+    assert "encode(" in plan(df)
+    for r in df.collect():
+        want = img.image_row(int(r["image_id"][3:]))
+        assert list(r.asDict()) == list(want)
+        assert {**r.asDict(), "bytes": bytes(r["bytes"])} == want
+
+
 def test_footprint_matches_scalar_oracle():
     n = 512
     idx = np.arange(n)

@@ -8,6 +8,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from osmquadtree_spark.pipeline import run_image_tiling
 from osmquadtree_spark.sources.images import images_df
@@ -84,9 +85,11 @@ def test_resume(spark, tmp_path):
     qts_manifest = os.path.join(out_kill, "qts", "_manifest.json")
     mtime_before = os.path.getmtime(qts_manifest)
 
-    # resume WITHOUT the input — must restart from the committed checkpoint
+    # resume with the input (the tile stage reads it again) — must restart
+    # from the committed checkpoint
     m2 = run_image_tiling(
-        spark, None, out_kill, target=TARGET, minsize=MINSIZE, rollup=True
+        spark, images_df(spark, N_IMAGES, partitions=8), out_kill,
+        target=TARGET, minsize=MINSIZE, rollup=True,
     )
     assert os.path.getmtime(qts_manifest) == mtime_before  # stage not recomputed
     assert m2["tiles"]["rows"] == N_IMAGES
@@ -100,6 +103,148 @@ def test_resume(spark, tmp_path):
 def test_resume_without_checkpoint_fails(spark, tmp_path):
     with pytest.raises(ValueError):
         run_image_tiling(spark, None, str(tmp_path / "missing"))
+
+
+def test_resume_without_input_before_tiles_fails(spark, tmp_path):
+    out = str(tmp_path / "qts_only")
+    _run(spark, out, stop_after="qts")
+    with pytest.raises(ValueError, match="'tiles'"):
+        run_image_tiling(spark, None, out, target=TARGET, minsize=MINSIZE)
+    assert not os.path.exists(os.path.join(out, "groups", "_manifest.json"))
+
+
+def _drop_one_row(imgs):
+    return imgs.filter(F.col("image_id") != "img000000000007")
+
+
+def _swap_one_phash(imgs):
+    return imgs.withColumn(
+        "phash",
+        F.when(F.col("image_id") == "img000000000007", F.lit(12345)).otherwise(F.col("phash")),
+    )
+
+
+@pytest.mark.parametrize("change", [_drop_one_row, _swap_one_phash])
+def test_source_change_between_stages_raises(spark, tmp_path, change):
+    """The tile stage reads the input again; a resume over an input that
+    lost a row or re-celled one must not commit a tile table that
+    disagrees with the committed qts and groups."""
+    out = str(tmp_path / "changed")
+    _run(spark, out, stop_after="groups")
+    changed = change(images_df(spark, N_IMAGES, partitions=8))
+    with pytest.raises(RuntimeError, match="fingerprint|rows"):
+        run_image_tiling(spark, changed, out, target=TARGET, minsize=MINSIZE)
+    assert not os.path.exists(os.path.join(out, "tiles", "_manifest.json"))
+
+
+def _tile_files(path):
+    """Every row of a committed tile table, file by file in row order."""
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    return pd.concat(
+        [pd.read_parquet(os.path.join(path, f)) for f in files], ignore_index=True
+    )
+
+
+@pytest.mark.parametrize("parts", ["below_groups", "above_groups"])
+def test_pipeline_tiles_equal_library_path(spark, tmp_path, parts):
+    """The pipeline's fused tile pass (footprint, cell, group and partition
+    from the source in one Arrow pass) commits the table the library path
+    write_tile_sorted(with_footprint(images)) commits: same tile per row,
+    same rows in the same order in every partition."""
+    from osmquadtree_spark.operators.images import with_footprint
+    from osmquadtree_spark.operators.sortblocks import write_tile_sorted
+
+    out = str(tmp_path / "pipe")
+    _run(spark, out, stop_after="groups")
+    gqt = pd.read_parquet(os.path.join(out, "groups", "groups.parquet"))["group_qt"]
+    gqt = gqt.to_numpy("int64")
+    n_parts = {"below_groups": len(gqt) // 3, "above_groups": 2 * len(gqt) + 1}[parts]
+    _run(spark, out, num_partitions=n_parts)
+    lib = str(tmp_path / "lib")
+    write_tile_sorted(
+        with_footprint(images_df(spark, N_IMAGES, partitions=8)), lib, gqt,
+        sort_cols=["image_id"], num_partitions=n_parts,
+    )
+    cols = ["image_id", "minx", "miny", "maxx", "maxy", "qt", "group_qt", "_part_id"]
+    a = _tile_files(os.path.join(out, "tiles", "data"))
+    b = _tile_files(os.path.join(lib, "data"))
+    assert list(a.columns) == list(b.columns)
+    assert len(a) == len(b) == N_IMAGES
+    by_id = [t[cols].sort_values("image_id", ignore_index=True) for t in (a, b)]
+    pd.testing.assert_frame_equal(*by_id)
+    order_a, order_b = (t.groupby("_part_id")["image_id"].agg(list).to_dict() for t in (a, b))
+    assert order_a == order_b
+
+
+@pytest.fixture(scope="module")
+def parquet_images(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("images") / "src")
+    images_df(spark, N_IMAGES, partitions=8).write.parquet(src)
+    return src
+
+
+def _write_plans(monkeypatch, module) -> list:
+    """Physical plans of the frames ``module`` passes to write_observed."""
+    plans = []
+    write = module.write_observed
+
+    def spy(df, path, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(df, path, *a, **kw)
+
+    monkeypatch.setattr(module, "write_observed", spy)
+    return plans
+
+
+def _read_columns(plan: str) -> list[set]:
+    import re
+
+    return [
+        {f.split(":")[0] for f in cols.split(",")}
+        for cols in re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    ]
+
+
+def test_stage_plans_prune_qts_and_fuse_tiles(spark, tmp_path, monkeypatch, parquet_images):
+    """Stage qts writes (image_id, qt), so its source scan is pruned to the
+    four columns the cell needs (no payload or caption is read); the tile
+    stage reads the whole row and places it in ONE Arrow pass."""
+    from osmquadtree_spark import pipeline
+    from osmquadtree_spark.operators import sortblocks
+
+    qts_plans = _write_plans(monkeypatch, pipeline)
+    tile_plans = _write_plans(monkeypatch, sortblocks)
+    m = run_image_tiling(
+        spark, spark.read.parquet(parquet_images), str(tmp_path / "out"),
+        target=TARGET, minsize=MINSIZE,
+    )
+    assert [f["name"] for f in m["qts"]["schema"]["fields"]] == ["image_id", "qt"]
+    (qts_plan,), (tile_plan,) = qts_plans, tile_plans
+    assert _read_columns(qts_plan) == [{"image_id", "phash", "w", "h"}], qts_plan
+    assert _read_columns(tile_plan) == [
+        {"image_id", "bytes", "w", "h", "fmt", "caption", "phash"}
+    ], tile_plan
+    assert tile_plan.count("ArrowEvalPython") == 1, tile_plan
+
+
+def test_pipeline_job_count(spark, tmp_path, parquet_images):
+    """A fresh run takes at most 8 Spark jobs (the qts write, the
+    histogram collect, the tile write and its lineage aggregate, with
+    their map stages): reading the source again in the tile stage adds
+    no job."""
+    import uuid
+
+    imgs = spark.read.parquet(parquet_images)
+    sc = spark.sparkContext
+    group = f"tile-pipeline-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "run_image_tiling job-count guard")
+    try:
+        run_image_tiling(
+            spark, imgs, str(tmp_path / "out"), target=TARGET, minsize=MINSIZE, rollup=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 def test_compute_groups_scalable_matches_dense(spark):
