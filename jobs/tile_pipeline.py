@@ -68,11 +68,7 @@ def main() -> None:
     if args.input:
         images = spark.read.parquet(args.input)
     else:
-        # one generator partition per task slot: both the qts and the tile
-        # stage run the generator, and each extra task costs a Python round trip
-        images = images_df(
-            spark, args.n_images, partitions=spark.sparkContext.defaultParallelism
-        )
+        images = images_df(spark, args.n_images)
     manifests = run_image_tiling(
         spark,
         images,

@@ -176,7 +176,8 @@ def image_tiles(
     """``tile_sorted(with_footprint(images), group_qts, ...)`` in one Arrow
     pass: footprint, cell, group cell and destination partition of every
     row come from (image_id index, phash, w, h) together, then the rows are
-    laid out as tile_sorted lays them out."""
+    laid out as tile_sorted lays them out. This is the ``layout`` that
+    ``write_tile_sorted`` takes for image rows."""
 
     def place(group_qts, parts, idx, phash, w, h):
         fp = footprint_cells(idx, phash, w, h)

@@ -352,6 +352,10 @@ def write_tile_sorted(
     qt_col: str = "qt",
     sort_cols: list[str] | None = None,
     num_partitions: int | None = None,
+    *,
+    layout=None,
+    extra: dict | None = None,
+    expect: dict | None = None,
 ) -> dict:
     """Write the tile-sorted table + per-tile lineage metrics.
 
@@ -362,38 +366,30 @@ def write_tile_sorted(
     per-(partition, tile) lineage rows (row count, min/max cell) + the
     manifest whose presence marks the committed snapshot — a resumed job
     skips completed stages (see tests/test_sortblocks.py::test_resume).
-    The commit is ``commit_tiles``.
-    """
-    out = tile_sorted(df, group_qts, qt_col, sort_cols, num_partitions)
-    return commit_tiles(out, path, group_qts, qt_col)
 
-
-def commit_tiles(
-    out: DataFrame,
-    path: str,
-    group_qts: np.ndarray,
-    qt_col: str = "qt",
-    extra: dict | None = None,
-    expect: dict | None = None,
-) -> dict:
-    """Write an already laid-out tile table (``tile_sorted`` or
-    ``images.image_tiles``) and commit it with its lineage.
-
-    The row count, and any ``extra`` aggregate columns, are observed on
-    the write job; ``expect`` maps observed names to the values they must
-    have, and a mismatch raises before anything commits. The lineage is one
-    column-pruned aggregate over (``_part_id``, ``group_qt``, qt) of the
-    committed files, read with the write's schema (no footer-inference
-    job); it has at most |tiles| rows, so it is collected and committed
-    from the driver, and the manifest's rows/tiles derive from it.
+    The rows are laid out by ``tile_sorted``, or by
+    ``layout(df, group_qts, sort_cols, num_partitions)`` for a frame whose
+    cell column ``qt_col`` is computed in the placing Arrow pass itself
+    (``images.image_tiles``). The row count, and any ``extra`` aggregate
+    columns, are observed on the write job; ``expect`` maps observed names
+    to the values they must have, and a mismatch raises before anything
+    commits. The lineage is one column-pruned aggregate over
+    (``_part_id``, ``group_qt``, qt) of the committed files, read with the
+    write's schema (no footer-inference job); it has at most |tiles| rows,
+    so it is collected and committed from the driver, and the manifest's
+    rows/tiles derive from it.
     """
     t0 = time.time()
+    if layout is None:
+        out = tile_sorted(df, group_qts, qt_col, sort_cols, num_partitions)
+    else:
+        out = layout(df, group_qts, sort_cols, num_partitions)
     obs = write_observed(out, path, extra)
     bad = [f"{k} {obs[k]} (expected {v})" for k, v in (expect or {}).items() if obs[k] != v]
     if bad:
         raise RuntimeError(f"tile write at {path} observed {', '.join(bad)}")
     lineage = (
-        out.sparkSession.read.schema(out.schema)
+        df.sparkSession.read.schema(out.schema)
         .parquet(os.path.join(path, "data"))
         .groupBy("_part_id", "group_qt")
         .agg(

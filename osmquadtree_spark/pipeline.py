@@ -44,9 +44,7 @@ from .commit import (
 )
 from .operators import sortblocks
 from .operators.images import image_tiles, with_footprint
-from .operators.sortblocks import commit_tiles
-# perfbench's spans wrap ``pipeline.write_tile_sorted`` by name
-from .operators.sortblocks import write_tile_sorted  # noqa: F401
+from .operators.sortblocks import write_tile_sorted
 
 
 def _fingerprint() -> dict:
@@ -115,19 +113,23 @@ def stage_tiles(
     sort_cols: list[str] | None = None,
     num_partitions: int | None = None,
 ) -> dict:
-    """Read the input again and place every row in its tile in one Arrow
-    pass (images.image_tiles), then write the tile-sorted table with its
-    per-(partition, tile) lineage. The write must observe the fingerprint
-    the qts manifest recorded."""
+    """Read the input again and write the tile-sorted table with its
+    per-(partition, tile) lineage; the rows are placed in one Arrow pass
+    (images.image_tiles computes footprint, cell, group cell and
+    partition together). The write must observe the row count and
+    fingerprint the qts manifest recorded."""
     if is_committed(path):
         return read_manifest(path)
     groups = pd.read_parquet(os.path.join(groups_path, "groups.parquet"))
     gqt = groups["group_qt"].to_numpy("int64")
     fingerprint = _fingerprint()
-    return commit_tiles(
-        image_tiles(images, gqt, sort_cols or ["image_id"], num_partitions),
+    return write_tile_sorted(
+        images,
         path,
         gqt,
+        sort_cols=sort_cols or ["image_id"],
+        num_partitions=num_partitions,
+        layout=image_tiles,
         extra=fingerprint,
         # a qts manifest without a fingerprint matches no tile write
         expect={k: qts_manifest.get(k) for k in ("rows", *fingerprint)},

@@ -180,18 +180,15 @@ def image_meta(i: int) -> dict:
     }
 
 
-def encode_payload(phash: int, w: int, h: int, fmt: str) -> bytes:
-    """The encoded image of a row: its phash pattern in its own format."""
-    return CODECS[fmt][0](pixels_for(int(phash), int(w), int(h)))
+def image_payload(i: int) -> bytes:
+    """The ``bytes`` of row ``i``: its phash pattern encoded in its format."""
+    m = image_meta(i)
+    return CODECS[m["fmt"]][0](pixels_for(int(m["phash"]), int(m["w"]), int(m["h"])))
 
 
 def image_row(i: int) -> dict:
     m = image_meta(i)
-    return {
-        "image_id": m.pop("image_id"),
-        "bytes": encode_payload(m["phash"], m["w"], m["h"], m["fmt"]),
-        **m,
-    }
+    return {"image_id": m.pop("image_id"), "bytes": image_payload(i), **m}
 
 
 def footprints(phash: np.ndarray, w: np.ndarray, h: np.ndarray, idx: np.ndarray):
@@ -229,28 +226,27 @@ META_SCHEMA = "image_id string, w int, h int, fmt string, caption string, phash 
 
 
 def images_df(spark, n: int, partitions: int = 32):
-    """Distributed generation: spark.range → mapInPandas(generator). The
-    generator is a pure function of the row index, so any partitioning
+    """Distributed generation: spark.range → pandas UDFs of the row index.
+    The generator is a pure function of the row index, so any partitioning
     yields the same table — this is how the 10^12-row design point scales
     (no driver-side materialization).
 
-    The generator emits the metadata; ``bytes`` is a separate pandas UDF
-    over (phash, w, h, fmt), so a plan that never reads ``bytes`` prunes
-    the encoding away (the tiling stages read only the metadata)."""
+    The metadata and ``bytes`` are two UDFs of the index that Spark runs in
+    one Python pass, so a plan that never reads ``bytes`` prunes the
+    encoding away (the qts stage reads only the metadata)."""
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame([image_meta(int(i)) for i in pdf["id"]])
+    @pandas_udf(META_SCHEMA)
+    def meta(idx: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([image_meta(int(i)) for i in idx])
 
     @pandas_udf("binary")
-    def encode(phash: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
-        return pd.Series([encode_payload(*r) for r in zip(phash, w, h, fmt)])
+    def encode(idx: pd.Series) -> pd.Series:
+        return pd.Series([image_payload(int(i)) for i in idx])
 
-    meta = spark.range(0, n, 1, partitions).mapInPandas(gen, META_SCHEMA)
-    return meta.select(
-        "image_id", encode("phash", "w", "h", "fmt").alias("bytes"),
-        "w", "h", "fmt", "caption", "phash",
+    rows = spark.range(0, n, 1, partitions).select(
+        meta("id").alias("m"), encode("id").alias("bytes")
     )
+    return rows.select("m.image_id", "bytes", "m.w", "m.h", "m.fmt", "m.caption", "m.phash")
 
 
 def phash_catalog(spark, n: int, partitions: int = 32):

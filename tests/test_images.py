@@ -33,9 +33,9 @@ def test_png_is_real_png():
 
 
 def test_images_df_encodes_only_when_bytes_read(spark):
-    """The generator emits the metadata and a separate UDF encodes the
-    payload, so a plan that never reads ``bytes`` runs no encoder; the
-    rows are image_row's."""
+    """The metadata and the payload are two UDFs of the row index that run
+    in one Python pass, so a plan that never reads ``bytes`` runs no
+    encoder; the rows are image_row's."""
     df = img.images_df(spark, 24, partitions=3)
 
     def plan(d):
@@ -43,6 +43,7 @@ def test_images_df_encodes_only_when_bytes_read(spark):
 
     assert "encode(" not in plan(df.select("image_id", "phash", "w", "h"))
     assert "encode(" in plan(df)
+    assert plan(df).count("ArrowEvalPython") == 1
     for r in df.collect():
         want = img.image_row(int(r["image_id"][3:]))
         assert list(r.asDict()) == list(want)
