@@ -12,4 +12,8 @@ Layout:
   functions/  pandas-UDF wrappers around the kernels
 """
 
+from . import pyworker
+
+pyworker.install()
+
 __version__ = "0.1.0"

@@ -5,7 +5,9 @@ resume-from-first-uncommitted-stage semantics, chaining the curation
 operators a training-data pipeline actually runs:
 
   stage "quality"  Gopher-style keep/drop with reason bitmask
-                   (operators/docs.quality_gate)
+                   (operators/docs.quality_gate with keep_columns: ONE
+                   join, docs ⋈ the per-doc rarity aggregate, and the
+                   bitmask projected next to the doc columns)
   stage "dedup"    MinHash-LSH near-dup pairs → connected components →
                    canonical representative per cluster
                    (operators/dedup.minhash_lsh_pairs +
@@ -16,7 +18,9 @@ operators a training-data pipeline actually runs:
                    anti-joined out of the corpus FIRST (train =
                    doc_id % mod != 0, the q_contaminate_bloom
                    convention) so bench docs can never leak into the
-                   final shards as training rows
+                   final shards as training rows; the probe passes the
+                   doc columns through and the write drops its
+                   contaminated rows (no anti-join back onto the corpus)
   stage "weights"  DSIR importance weights vs the benchmark target
                    (operators/dsir, λ artifact committed inside)
   stage "shards"   fixed-token-budget shard packing + per-shard
@@ -76,19 +80,19 @@ def stage_quality(
     verify: bool = False,
 ) -> dict:
     """quality_gate over the full corpus; keeps the input columns beside
-    (reasons, keep) so downstream stages read one table.
-    ``quality_params`` forwards threshold kwargs to quality_gate — the
-    drop-rate tuning surface the reason histogram in this stage's
-    manifest exists to inform."""
+    (reasons, keep) so downstream stages read one table. The gate's
+    ``keep_columns`` projects its decision next to the docs columns in
+    its one join (docs ⋈ the per-doc rarity aggregate), so the stage does
+    not join the decision back onto the text. ``quality_params``
+    forwards threshold kwargs to quality_gate — the drop-rate tuning
+    surface the reason histogram in this stage's manifest exists to
+    inform."""
     if is_committed(path):
         return read_manifest(path)
     t0 = time.time()
     from .operators.docs import quality_gate
 
-    qg = quality_gate(docs, **(quality_params or {})).select(
-        "doc_id", "reasons", "keep"
-    )
-    joined = docs.join(qg, "doc_id")
+    joined = quality_gate(docs, **(quality_params or {}), keep_columns=True)
     # the reason histogram rides the write's observe too: `reasons` is a
     # 4-bit mask, so its 16 possible values (+ the NULL-text bucket) are a
     # FIXED set of count_if aggregates — no groupBy, no post-write read
@@ -194,10 +198,11 @@ def stage_decon(
     as training rows AND be double-counted as target+raw by the weights
     stage. Set False only
     for an external eval set whose doc_id namespace is unrelated to the
-    corpus. The probe itself runs ONCE, in the same job as the stage
-    write (its flagged side feeds the anti-join; round 4 paid a second
-    full gram-extraction pass just to count probed rows — the count now
-    comes from an observation on the write's own scan)."""
+    corpus. The probe itself runs ONCE, as the stage write: it passes
+    the doc columns through (``keep_columns``), so the write keeps the
+    rows whose ``contaminated`` is not true instead of anti-joining the
+    flagged ids back onto the probe's own input, and the probed count is
+    an observation on the probe's output."""
     if is_committed(path):
         return read_manifest(path)
     t0 = time.time()
@@ -209,14 +214,12 @@ def stage_decon(
     docs = read_committed(spark, dedup_path, dedup).filter("is_canonical")
     if exclude_bench:
         docs = docs.join(bench.select("doc_id").distinct(), "doc_id", "left_anti")
-    flagged = (
-        bl.bloom_probe(docs.select("doc_id", "text"), bf, min_hits=min_hits)
-        .filter("contaminated")
-        .select("doc_id")
-    )
     probe_obs = Observation()
-    out = docs.observe(probe_obs, F.count(F.lit(1)).alias("probed")).join(
-        flagged, "doc_id", "left_anti"
+    out = (
+        bl.bloom_probe(docs, bf, min_hits=min_hits, keep_columns=True)
+        .observe(probe_obs, F.count(F.lit(1)).alias("probed"))
+        .filter(~F.coalesce(F.col("contaminated"), F.lit(False)))
+        .select(*docs.columns)
     )
     w = write_observed(out, path, verify=verify)
     probed_rows = int(probe_obs.get["probed"])

@@ -14,18 +14,24 @@ rate and surfaced per-doc so a downstream exact pass can re-check just
 the flagged sliver).
 
 Spark shape:
-- build: the bench grams come from the shared ``distinct_grams`` stage
-  (raw strings — the hash must be the cross-engine polyhash64, not
-  xxhash64); each task folds its grams into a LOCAL m-bit bitmap
-  (memory per task = m/8 bytes, yielded once per task as range-sharded
-  rows), then one tiny groupBy(shard_id) OR-merge — shuffle volume is
-  n_tasks × m/8 bytes, independent of benchmark size.
-- merge: Bloom filters OR: plain union of shard tables through the same
-  fold (mergeability pinned in tests — build(A) ∪ build(B) ≡ build(A∪B)).
+- build: ONE mapInPandas over the bench text, no shuffle. Each task
+  extracts its word n-grams with the probe's own ``_gram_strings`` (raw
+  strings — the hash must be the cross-engine polyhash64, not xxhash64)
+  and folds them into a LOCAL m-bit bitmap (memory per task = m/8
+  bytes), yielded once per task as n_shards range-sharded PARTIAL rows.
+  OR is idempotent, so a gram seen in many docs or many tasks needs no
+  distinct and no groupBy OR-merge: ``collect_bloom`` ORs the partials
+  on the driver — at most n_tasks × n_shards rows, n_tasks × m/8 bytes,
+  independent of benchmark size.
+- merge: Bloom filters OR: plain union of partial tables, OR-ed by the
+  same collect (mergeability pinned in tests — build(A) ∪ build(B) ≡
+  build(A∪B)); rows built with different (n, k) are refused there.
 - probe: the collected bitmap (m/8 bytes, bounded by construction) is
-  broadcast; ONE mapInPandas pass over (doc_id, text) extracts grams,
-  hashes, tests k bits per distinct gram and emits per-doc hit counts.
-  The corpus is never exploded into a shuffle.
+  broadcast; ONE mapInArrow pass over the docs extracts grams, hashes,
+  tests k bits per distinct gram and emits per-doc hit counts, optionally
+  passing every input column through untouched so a caller can filter
+  the probe's own output instead of joining it back. The corpus is never
+  exploded into a shuffle.
 
 Hashing: h1 = polyhash64(gram) (kernels/strhash.py — cross-engine exact),
 h2 = splitmix64(h1) | 1, bit_j = (h1 + j*h2) mod 2^64 mod m for
@@ -42,7 +48,9 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..kernels.strhash import polyhash64
 from ..sources.images import splitmix64
@@ -91,25 +99,21 @@ def bloom_build(
     m_bits: int = 1 << 20,
     k: int = 4,
     n_shards: int = 8,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Fold the benchmark corpus' distinct word n-grams into a range-sharded
-    Bloom bitmap: (shard_id int, bitmap binary of m_bits/(8*n_shards)
-    bytes). Deterministic; plain-union mergeable through bloom_or."""
+    """Fold the benchmark corpus' word n-grams into range-sharded PARTIAL
+    Bloom bitmaps: (shard_id int, bitmap binary of m_bits/(8*n_shards)
+    bytes, n, k), n_shards rows per task — one task's local filter.
+    collect_bloom ORs them into the filter. Deterministic; union-mergeable
+    (bloom_or). NULL texts and docs with fewer than n words add no gram."""
     assert m_bits & (m_bits - 1) == 0, "m_bits must be a power of two"
     assert m_bits % (8 * n_shards) == 0
-    from .docs import distinct_grams
-
-    grams = distinct_grams(
-        bench, n, id_col=id_col, text_col=text_col, hash_grams=False
-    ).select("gram")
     shard_bytes = m_bits // 8 // n_shards
 
     def fold(batches):
         local = np.zeros(m_bits // 8, dtype=np.uint8)
         for pdf in batches:
-            g = pdf["gram"].to_numpy(dtype=object)
+            _, g = _gram_strings(pdf[text_col].dropna(), n)
             if not len(g):
                 continue
             pos = _positions(polyhash64(list(g)), k, m_bits).ravel()
@@ -130,35 +134,10 @@ def bloom_build(
             }
         )
 
-    partials = grams.mapInPandas(
+    partials = bench.select(text_col).mapInPandas(
         fold, "shard_id int, bitmap binary, n int, k int"
     )
-    return _with_build_params(_or_shards(partials), n, k)
-
-
-_SHARD_SCHEMA = "shard_id int, bitmap binary, n int, k int"
-
-
-def _or_shards(partials: DataFrame) -> DataFrame:
-    def orfold(key, pdf):
-        acc = None
-        for b in pdf["bitmap"]:
-            a = np.frombuffer(b, dtype=np.uint8)
-            acc = a.copy() if acc is None else acc | a
-        ns, ks = set(pdf["n"]), set(pdf["k"])
-        # merging filters built with different (n, k) silently breaks the
-        # no-false-negative guarantee — refuse
-        assert len(ns) == 1 and len(ks) == 1, f"mixed bloom params: n={ns} k={ks}"
-        return pd.DataFrame(
-            {
-                "shard_id": [key[0]],
-                "bitmap": [acc.tobytes()],
-                "n": [ns.pop()],
-                "k": [ks.pop()],
-            }
-        )
-
-    return partials.groupBy("shard_id").applyInPandas(orfold, _SHARD_SCHEMA)
+    return _with_build_params(partials, n, k)
 
 
 def _with_build_params(df: DataFrame, n: int, k: int) -> DataFrame:
@@ -182,14 +161,14 @@ def _build_params(df: DataFrame) -> tuple[int, int] | None:
 
 
 def bloom_or(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two Bloom filters (same m/k/n — enforced per shard group):
-    bitwise OR per shard — plain unionByName through the same fold, like
-    the sketch trio. Build-param metadata is re-attached (applyInPandas
-    rebuilds the schema from a bare DDL string, which would drop it)."""
-    out = _or_shards(a.unionByName(b))
-    pa, pb = _build_params(a), _build_params(b)
-    if pa is not None and pa == pb:
-        out = _with_build_params(out, *pa)
+    """Merge two Bloom filters (same m/k/n — enforced by collect_bloom):
+    the plain union of their partial rows, OR-ed when collected, like the
+    sketch trio. Build-param metadata is re-attached when both sides
+    carry the same (n, k)."""
+    out = a.unionByName(b)
+    params = _build_params(a)
+    if params is not None and params == _build_params(b):
+        out = _with_build_params(out, *params)
     return out
 
 
@@ -210,30 +189,35 @@ class BloomFilter:
 
 
 def collect_bloom(bloom: DataFrame) -> BloomFilter:
-    """Assemble the sharded table into one BloomFilter. Bounded driver
-    collect BY CONSTRUCTION: n_shards rows, m/8 bytes total regardless of
-    benchmark size (the same bounded-artifact argument as the qttree
-    group table). Works on empty tables only via bloom_probe's empty
-    handling — an empty build (no bench docs) yields zero shards, which
-    collapses to a 0-bit filter; callers probing with it get 0 hits. The
-    empty fallback's (n, k) come from the build frame's schema metadata
-    (pinned by bloom_build), so even a zero-partition bench cannot make a
-    later probe extract grams at the wrong gram order — contamination is
+    """OR the partial shard rows into one BloomFilter on the driver.
+    Bounded collect: at most n_tasks × n_shards rows of the build, m/8
+    bytes per task, regardless of benchmark size (the same
+    bounded-artifact argument as the qttree group table). Rows built
+    with different (n, k) or shard sizes raise: OR-ing them would
+    silently break the no-false-negative guarantee. An empty build (a
+    zero-partition bench emits no fold task) collapses to a 0-bit
+    filter; callers probing with it get 0 hits. The empty fallback's
+    (n, k) come from the build frame's schema metadata (pinned by
+    bloom_build), so even a zero-partition bench cannot make a later
+    probe extract grams at the wrong gram order — contamination is
     correctly false either way (zero bitmap), but the probe's n_grams
     column must still count the grams the BUILD would have seen."""
     rows = bloom.collect()
     if not rows:
         params = _build_params(bloom) or (3, 4)
         return BloomFilter(np.zeros(1 << 13, dtype=np.uint8), n=params[0], k=params[1])
-    n_shards = len(rows)
-    shard_bytes = max(len(bytes(r["bitmap"])) for r in rows)
+    shapes = {(int(r["n"]), int(r["k"]), len(r["bitmap"])) for r in rows}
+    if len(shapes) != 1:
+        raise ValueError(f"mixed bloom params (n, k, shard bytes): {sorted(shapes)}")
+    n, k, shard_bytes = shapes.pop()
+    n_shards = 1 + max(int(r["shard_id"]) for r in rows)
     out = np.zeros(n_shards * shard_bytes, dtype=np.uint8)
     for row in rows:
         s = int(row["shard_id"])
-        out[s * shard_bytes : (s + 1) * shard_bytes] = np.frombuffer(
+        out[s * shard_bytes : (s + 1) * shard_bytes] |= np.frombuffer(
             row["bitmap"], dtype=np.uint8
         )
-    return BloomFilter(out, n=int(rows[0]["n"]), k=int(rows[0]["k"]))
+    return BloomFilter(out, n=n, k=k)
 
 
 # Twin of docs.benchmark_overlap for a different regime: shuffle-free fixed-size bitmap.
@@ -243,61 +227,67 @@ def bloom_probe(
     min_hits: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
+    keep_columns: bool = False,
 ) -> DataFrame:
     """Probe every document's distinct word n-grams against the filter:
     (doc_id, n_grams, bloom_hits, contaminated). n and k come FROM the
     filter (build-time values — no way to probe with drifted params).
     NULL text propagates NULLs; a doc with < n words has 0 grams and is
-    clean. ZERO shuffle: one mapInPandas over the scan; the bitmap ships
+    clean. ZERO shuffle: one mapInArrow over the scan; the bitmap ships
     as a sparkContext.broadcast variable (one torrent-distributed copy
     per executor — at the multi-GB planet-bench setting a plain closure
-    would re-ship m/8 bytes with EVERY task's serialized function)."""
+    would re-ship m/8 bytes with EVERY task's serialized function).
+
+    ``keep_columns`` passes every column of ``docs`` through in place of
+    ``id_col`` (the Arrow arrays as they arrived, so no value is
+    converted), so a caller that wants the docs minus the contaminated
+    ones — the curation decon stage — filters the probe's own output
+    instead of joining the flagged ids back onto the corpus."""
     n, k = bf.n, bf.k
     m_bits = bf.m_bits
     assert m_bits & (m_bits - 1) == 0
     bvar = docs.sparkSession.sparkContext.broadcast(bf.bitmap)
+    keep = docs.columns if keep_columns else [id_col]
+    scan = docs.select(*dict.fromkeys(keep + [text_col]))
 
     def probe(batches):
         bitmap = bvar.value
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            isnull = pdf[text_col].isna().to_numpy()
-            row, g = _gram_strings(pdf[text_col].fillna(""), n)
-            nrows = len(ids)
-            n_grams = np.zeros(nrows, dtype=np.int64)
-            hits = np.zeros(nrows, dtype=np.int64)
+        for batch in batches:
+            texts = batch.column(text_col).to_pandas()
+            isnull = texts.isna().to_numpy()
+            row, g = _gram_strings(texts.fillna(""), n)
+            n_grams = np.zeros(batch.num_rows, dtype=np.int64)
+            hits = np.zeros(batch.num_rows, dtype=np.int64)
             if len(row):
                 h1 = polyhash64(list(g))
                 # distinct grams per doc: sort by (row, h1), keep firsts
                 order = np.lexsort((h1, row))
                 r_s, h_s = row[order], h1[order]
-                keep = np.r_[True, (r_s[1:] != r_s[:-1]) | (h_s[1:] != h_s[:-1])]
-                r_u, h_u = r_s[keep], h_s[keep]
+                first = np.r_[True, (r_s[1:] != r_s[:-1]) | (h_s[1:] != h_s[:-1])]
+                r_u, h_u = r_s[first], h_s[first]
                 np.add.at(n_grams, r_u, 1)
                 pos = _positions(h_u, k, m_bits)
                 byte = bitmap[(pos >> np.uint64(3)).astype(np.int64)]
                 bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1
                 member = bit.all(axis=1)
                 np.add.at(hits, r_u[member], 1)
-            out = pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_grams": n_grams,
-                    "bloom_hits": hits,
-                    "contaminated": hits >= min_hits,
-                }
+            mask = isnull if isnull.any() else None
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [
+                    pa.array(n_grams, mask=mask),
+                    pa.array(hits, mask=mask),
+                    pa.array(hits >= min_hits, mask=mask),
+                ],
+                names=keep + ["n_grams", "bloom_hits", "contaminated"],
             )
-            if isnull.any():
-                for c in ("n_grams", "bloom_hits"):
-                    out[c] = out[c].astype("Int64")
-                    out.loc[isnull, c] = pd.NA
-                out["contaminated"] = out["contaminated"].astype("boolean")
-                out.loc[isnull, "contaminated"] = pd.NA
-            yield out
 
-    id_field = docs.schema[id_col].dataType.simpleString()
-    return docs.select(id_col, text_col).mapInPandas(
-        probe,
-        f"{id_col} {id_field}, n_grams bigint, bloom_hits bigint, "
-        "contaminated boolean",
+    schema = StructType(
+        [StructField(c, docs.schema[c].dataType) for c in keep]
+        + [
+            StructField("n_grams", LongType()),
+            StructField("bloom_hits", LongType()),
+            StructField("contaminated", BooleanType()),
+        ]
     )
+    return scan.mapInArrow(probe, schema)

@@ -14,18 +14,20 @@ convergence in O(log² n) rounds (2-5 in practice), every step a plain
 DataFrame op (no UDFs, no driver-side graph).
 
 Scale shape: the input edges are oriented (large → small) and deduplicated
-ONCE into an eager checkpoint; the node set and the loop both read that
-checkpoint, so the (possibly expensive) plan that produced the edges runs
-exactly once. State is only the current edge list (≤ input edges,
-shrinking toward one star edge per non-root node); each round shuffles on
-the node id — the natural key, skew-limited because large-star points
-high-degree neighborhoods at their min and the edge list contracts
-geometrically. Lineage is truncated per round via cache.stage_checkpoint
-(reliable checkpoint dir on clusters, localCheckpoint in bounded local
-runs). The loop stops on an exact star-forest test run BEFORE each round
-(one groupBy over the u/v roles + one aggregate): an input that is
-already a star forest runs zero rounds, and no round is spent confirming
-a fixpoint already reached.
+ONCE into an eager checkpoint; the loop and the final labelling both read
+that checkpoint, so the (possibly expensive) plan that produced the edges
+runs exactly once. The labels are one groupBy-min over the converged star
+forest plus the checkpoint's self-loop nodes (see connected_components).
+State is only the current edge list (≤ input edges, shrinking toward one
+star edge per non-root node); each round shuffles on the node id — the
+natural key, skew-limited because large-star points high-degree
+neighborhoods at their min and the edge list contracts geometrically.
+Lineage is truncated per round via cache.stage_checkpoint (reliable
+checkpoint dir on clusters, localCheckpoint in bounded local runs). The
+loop stops on an exact star-forest test run BEFORE each round (one groupBy
+over the u/v roles + one aggregate): an input that is already a star
+forest runs zero rounds, and no round is spent confirming a fixpoint
+already reached.
 """
 
 from __future__ import annotations
@@ -71,8 +73,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 def _oriented(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """The input as distinct (u ≥ v) edges, self-loops KEPT, in an eager
     checkpoint: the one evaluation of ``edges``. Self-loops stay so the
-    node set read off this frame covers a node that appears only in a
-    self-edge; the loop filters them out."""
+    labelling can name a node that appears only in a self-edge; the loop
+    filters them out."""
     e = edges.select(
         F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v")
     ).distinct()
@@ -155,8 +157,8 @@ def _converged_star(
                 "(theoretical bound is O(log^2 n) ≈ 10 for 2^30 nodes) — "
                 "treat as a bug, not a data property"
             )
-        # round 0 reads the oriented checkpoint, which the node set still
-        # needs; only round outputs are released
+        # round 0 reads the oriented checkpoint, which the labelling
+        # still needs; only round outputs are released
         prev = e if rounds else None
         # eager=False: the star test above is the materializing action
         # (measured: ~9 s/round eager vs ~5 s non-eager at 8M edges — the
@@ -190,24 +192,29 @@ def connected_components(
     component_id = the smallest node id in the component (the canonical
     "keep" representative of a duplicate cluster).
 
-    ``edges`` is evaluated once, into the oriented checkpoint; the node
-    set is that checkpoint's distinct endpoints (self-loops included) and
-    the labels are the star forest of :func:`_converged_star`."""
+    ``edges`` is evaluated once, into the oriented checkpoint. The labels
+    come from the star forest of :func:`_converged_star` in one
+    groupBy(node)-min over three candidate sets:
+
+    - every non-root u, labelled by its root v (one star row each);
+    - every root v, labelled by itself (once per child, hence the groupBy);
+    - every self-loop node of the checkpoint, labelled by itself — this
+      covers a node whose only edges are self-loops, which the star
+      forest cannot name; for any other self-loop node the min keeps the
+      star's label, which is never above the node itself.
+
+    Every node of a non-self-loop edge is a non-root or a root of the
+    star forest, so the three sets cover the node set exactly: no
+    distinct over the endpoints and no join."""
     oriented = _oriented(edges, id_a, id_b)
     star = _converged_star(oriented, max_rounds, metrics_path, operator)
-    nodes = (
-        oriented.select(F.col("u").alias("node"))
-        .unionByName(oriented.select(F.col("v").alias("node")))
-        .distinct()
+    loops = oriented.filter(F.col("u") == F.col("v"))
+    candidates = (
+        star.select(F.col("u").alias("node"), F.col("v").alias("_l"))
+        .unionByName(star.select(F.col("v").alias("node"), F.col("v").alias("_l")))
+        .unionByName(loops.select(F.col("u").alias("node"), F.col("u").alias("_l")))
     )
-    labels = star.select(F.col("u").alias("node"), F.col("v").alias("component_id"))
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("component_id"), F.col("node")).alias("component_id"),
-        )
-    )
+    return candidates.groupBy("node").agg(F.min("_l").alias("component_id"))
 
 
 def dup_clusters(

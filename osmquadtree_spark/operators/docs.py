@@ -554,6 +554,15 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     Docs with fewer than 2 words have no bigram: top_bigram is NULL and the
     count/fraction are 0.
     """
+    return docs.select(
+        "doc_id", *[c.alias(k) for k, c in _repetition_columns().items()]
+    )
+
+
+def _repetition_columns() -> dict:
+    """repetition_stats' output columns (all but doc_id) as expressions
+    over the ``text`` column, so quality_gate can project them in
+    the same select as its reason bits."""
     words = F.split(F.col("text"), " ")
     n = F.size(words)
     nd = F.size(F.array_distinct(words))
@@ -594,22 +603,21 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     n_distinct = F.when(F.col("text").isNotNull(), nd.cast("bigint"))
     n_bigrams = n.cast("bigint") - 1
     has_bg = F.col("text").isNotNull() & (n >= 2)
-    return docs.select(
-        "doc_id",
-        n_words.alias("n_words"),
-        n_distinct.alias("n_distinct"),
-        F.when(
+    return {
+        "n_words": n_words,
+        "n_distinct": n_distinct,
+        "dup_word_x10000": F.when(
             F.col("text").isNotNull(),
             intdiv((n - nd).cast("bigint") * 10000, n.cast("bigint")),
-        ).alias("dup_word_x10000"),
-        F.when(has_bg, fold["bestb"]).alias("top_bigram"),
-        F.when(has_bg, fold["best"]).otherwise(
+        ),
+        "top_bigram": F.when(has_bg, fold["bestb"]),
+        "top_bigram_cnt": F.when(has_bg, fold["best"]).otherwise(
             F.when(F.col("text").isNotNull(), F.lit(0).cast("bigint"))
-        ).alias("top_bigram_cnt"),
-        F.when(has_bg, intdiv(fold["best"] * 10000, n_bigrams)).otherwise(
-            F.when(F.col("text").isNotNull(), F.lit(0).cast("bigint"))
-        ).alias("top_bigram_x10000"),
-    )
+        ),
+        "top_bigram_x10000": F.when(
+            has_bg, intdiv(fold["best"] * 10000, n_bigrams)
+        ).otherwise(F.when(F.col("text").isNotNull(), F.lit(0).cast("bigint"))),
+    }
 
 
 # PII redaction patterns. Each is valid (and means the same thing) in BOTH
@@ -731,40 +739,52 @@ def token_rarity(docs: DataFrame, small_vocab: bool = False) -> DataFrame:
     them); an empty string splits to the single empty token in both
     engines and is counted like any other token.
     """
-    toks = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
-    )
-    vocab = toks.groupBy("token").agg(F.count("*").alias("freq"))
-    lookup = F.broadcast(vocab) if small_vocab else vocab
-    per_doc = (
-        toks.join(lookup, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum("freq").alias("sum_freq"),
-            F.min("freq").alias("min_freq"),
-            F.sum((F.col("freq") == 1).cast("bigint")).alias("n_hapax"),
-        )
-    )
+    per_doc = _rarity_per_doc(docs, small_vocab)
     return (
         docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
-            "n_tokens",
-            "min_freq",
-            "n_hapax",
-            # floor(sum·100/n) decomposed as (sum div n)·100 +
-            # (sum mod n)·100 div n — an exact identity that never forms
-            # sum·100 (which overflows int64 when a boilerplate doc holds
-            # ~10^5 copies of a ~10^12-frequency token at corpus scale,
-            # precisely the documents this screen exists to flag); the
-            # HUGEINT oracle computes sum·100//n directly, same value
-            F.expr(
-                "(sum_freq div n_tokens) * cast(100 as bigint)"
-                " + ((sum_freq % n_tokens) * cast(100 as bigint)) div n_tokens"
-            ).alias("mean_freq_x100"),
+            F.col("_n").alias("n_tokens"),
+            F.col("_min_freq").alias("min_freq"),
+            F.col("_n_hapax").alias("n_hapax"),
+            _mean_freq_x100().alias("mean_freq_x100"),
         )
+    )
+
+
+def _rarity_per_doc(docs: DataFrame, small_vocab: bool) -> DataFrame:
+    """(doc_id, _n, _sum_freq, _min_freq, _n_hapax) for every doc with
+    non-NULL text: tokens ⋈ vocab → groupBy(doc_id), token_rarity's one
+    corpus-frequency aggregate (the private names keep it joinable onto
+    any docs table)."""
+    toks = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
+    )
+    vocab = toks.groupBy("token").agg(F.count("*").alias("freq"))
+    lookup = F.broadcast(vocab) if small_vocab else vocab
+    return (
+        toks.join(lookup, "token")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("_n"),
+            F.sum("freq").alias("_sum_freq"),
+            F.min("freq").alias("_min_freq"),
+            F.sum((F.col("freq") == 1).cast("bigint")).alias("_n_hapax"),
+        )
+    )
+
+
+def _mean_freq_x100() -> "F.Column":
+    """floor(_sum_freq·100/_n) over _rarity_per_doc's columns, decomposed
+    as (sum div n)·100 + (sum mod n)·100 div n — an exact identity that
+    never forms sum·100 (which overflows int64 when a boilerplate doc
+    holds ~10^5 copies of a ~10^12-frequency token at corpus scale,
+    precisely the documents this screen exists to flag); the HUGEINT
+    oracle computes sum·100//n directly, same value."""
+    return F.expr(
+        "(_sum_freq div _n) * cast(100 as bigint)"
+        " + ((_sum_freq % _n) * cast(100 as bigint)) div _n"
     )
 
 
@@ -1212,6 +1232,7 @@ def quality_gate(
     max_top_bigram_x10000: int = 1800,
     max_mean_freq_x100: int = 91000,
     small_vocab: bool = False,
+    keep_columns: bool = False,
 ) -> DataFrame:
     """(doc_id, n_tokens, reasons, keep): the composite Gopher-style
     keep/drop decision — the single surface a curation pipeline filters
@@ -1222,33 +1243,36 @@ def quality_gate(
     reasons is what makes drop-rate dashboards and threshold tuning
     possible; ``keep`` is simply reasons == 0.
 
-    Composes the row-local repetition stage (one shuffle-free projection)
-    with the corpus-frequency stage (vocab agg + broadcast lookup) and
-    joins them on doc_id — each input stat is computed by exactly the
-    operator that already gates it, so this adds one join and a bitmask
-    projection, no new kernels. NULL-text documents carry NULL
-    reasons/keep (they need a manual-inspection queue, not a silent
-    drop/keep).
+    ONE join: the docs left-joined to the per-doc rarity aggregate
+    (token_rarity's tokens ⋈ vocab → groupBy doc_id), then one projection
+    of the bitmask — the repetition signals are repetition_stats' own
+    row-local expressions of ``text``, so they need no second pass and no
+    join. Each input stat is the expression of the operator that already
+    gates it; no new kernels. NULL-text documents carry NULL reasons/keep
+    (they need a manual-inspection queue, not a silent drop/keep).
+
+    ``keep_columns`` returns every docs column (doc_id first) beside
+    (reasons, keep) instead of (doc_id, n_tokens): the curation quality
+    stage's table, with no join of the decision back onto the text.
     """
-    rep = repetition_stats(docs)
-    rar = token_rarity(docs, small_vocab=small_vocab).select(
-        "doc_id", "n_hapax", "mean_freq_x100"
-    )
-    j = rep.join(rar, "doc_id")
-    nw = F.col("n_words")
+    rep = _repetition_columns()
+    nw = rep["n_words"]
     reasons = (
         F.when(nw < min_tokens, QG_SHORT).otherwise(0)
         + F.when(
-            (F.col("dup_word_x10000") > max_dup_x10000)
-            | (F.col("top_bigram_x10000") > max_top_bigram_x10000),
+            (rep["dup_word_x10000"] > max_dup_x10000)
+            | (rep["top_bigram_x10000"] > max_top_bigram_x10000),
             QG_REPETITIVE,
         ).otherwise(0)
-        + F.when(F.col("mean_freq_x100") > max_mean_freq_x100, QG_COMMON).otherwise(0)
-        + F.when(F.col("n_hapax") * 2 > nw, QG_GIBBERISH).otherwise(0)
+        + F.when(_mean_freq_x100() > max_mean_freq_x100, QG_COMMON).otherwise(0)
+        + F.when(F.col("_n_hapax") * 2 > nw, QG_GIBBERISH).otherwise(0)
     ).cast("bigint")
-    return j.select(
-        "doc_id",
-        nw.alias("n_tokens"),
+    if keep_columns:
+        kept = ["doc_id"] + [c for c in docs.columns if c != "doc_id"]
+    else:
+        kept = ["doc_id", nw.alias("n_tokens")]
+    return docs.join(_rarity_per_doc(docs, small_vocab), "doc_id", "left").select(
+        *kept,
         F.when(nw.isNotNull(), reasons).alias("reasons"),
         F.when(nw.isNotNull(), reasons == 0).alias("keep"),
     )

@@ -148,3 +148,33 @@ def test_probe_plan_is_shuffle_free(spark, corpus):
         spark, corpus, F.col("doc_id") == 1, F.col("doc_id") != 1
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def test_build_plan_is_shuffle_free(spark, corpus):
+    """The build is one mapInPandas over the bench text: OR is idempotent,
+    so no distinct and no groupBy OR-merge — collect_bloom ORs the
+    partial rows."""
+    built = bl.bloom_build(corpus.filter(F.col("doc_id").isin(1, 2)), n=3, m_bits=M_BITS, k=K)
+    assert "Exchange" not in built._jdf.queryExecution().executedPlan().toString()
+
+
+def _shard_rows(spark, rows):
+    return spark.createDataFrame(rows, "shard_id int, bitmap binary, n int, k int")
+
+
+def test_collect_ors_duplicate_shard_rows(spark):
+    a = bytes([0b0001, 0, 0b1000, 0])
+    b = bytes([0b0100, 0b0010, 0, 0])
+    c = bytes([0, 0, 0b0001, 0b1000_0000])
+    bf = bl.collect_bloom(
+        _shard_rows(spark, [(0, a, 3, 4), (0, b, 3, 4), (0, a, 3, 4), (1, c, 3, 4), (1, c, 3, 4)])
+    )
+    want = np.r_[np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8), np.frombuffer(c, np.uint8)]
+    np.testing.assert_array_equal(bf.bitmap, want)
+    assert (bf.n, bf.k) == (3, 4)
+
+
+@pytest.mark.parametrize("other", [(0, bytes(4), 2, 4), (1, bytes(4), 3, 5), (1, bytes(8), 3, 4)])
+def test_collect_refuses_mixed_params(spark, other):
+    with pytest.raises(ValueError, match="mixed bloom params"):
+        bl.collect_bloom(_shard_rows(spark, [(0, bytes(4), 3, 4), other]))

@@ -9,8 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from osmquadtree_spark.commit import commit_manifest, write_observed
-from osmquadtree_spark.curation import run_curation, stage_shards
+from osmquadtree_spark.commit import commit_manifest, read_committed, write_observed
+from osmquadtree_spark.curation import run_curation, stage_quality, stage_shards
 
 # permissive thresholds for the tiny-vocab synthetic corpus: the default
 # Gopher-style mean-frequency rule correctly drops ~98% of word salad,
@@ -171,11 +171,66 @@ def test_stage_shard_manifest_matches_gate(spark, docs, tmp_path):
     assert len(want.collect()) > 10
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_stage_quality_equals_gate_join(spark, docs, tmp_path):
+    """The quality stage projects quality_gate's decision next to the doc
+    columns in one join; its table must equal the gate's output joined
+    back onto the docs, NULL-text docs included (NULL reasons/keep)."""
+    null_docs = (
+        docs.filter(F.col("doc_id") % 50 == 0)
+        .withColumn("doc_id", F.col("doc_id") + 1_000_000)
+        .withColumn("text", F.lit(None).cast("string"))
+    )
+    corpus = docs.unionByName(null_docs)
+    path = str(tmp_path / "quality")
+    m = stage_quality(spark, corpus, path, QP)
+    assert m["manual_queue"] == null_docs.count() > 0
+    from osmquadtree_spark.operators.docs import quality_gate
+
+    want = corpus.join(
+        quality_gate(corpus, **QP).select("doc_id", "reasons", "keep"), "doc_id"
+    )
+    got = read_committed(spark, path)
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+
+
+def test_stage_decon_equals_anti_join(spark, docs, full_run):
+    """The decon stage filters the probe's own pass-through output; its
+    table must equal the anti-join of the flagged ids onto the probed
+    canonicals."""
+    from osmquadtree_spark.operators import bloom as bl
+
+    out, m = full_run
+    bench = docs.filter(F.col("doc_id") % 41 == 0).select("doc_id", "text")
+    bf = bl.collect_bloom(bl.bloom_build(bench))
+    probed = (
+        read_committed(spark, os.path.join(out, "dedup"))
+        .filter("is_canonical")
+        .join(bench.select("doc_id").distinct(), "doc_id", "left_anti")
+    )
+    flagged = (
+        bl.bloom_probe(probed.select("doc_id", "text"), bf, min_hits=2)
+        .filter("contaminated")
+        .select("doc_id")
+    )
+    want = probed.join(flagged, "doc_id", "left_anti")
+    got = read_committed(spark, os.path.join(out, "decon"))
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+    assert m["decon"]["flagged"] > 0
+
+
 def test_run_curation_job_count(spark, docs, tmp_path):
-    """The whole chain's Spark jobs under one job group. Re-running the
-    MinHash pair plan for the component node set, an idle convergence
-    round, re-running the shard packing for the manifest or a footer
-    inference per stage read would each add jobs here."""
+    """The whole chain's Spark jobs under one job group: 49 on this
+    corpus. Re-running the MinHash pair plan for the component labels,
+    an idle convergence round, re-running the shard packing for the
+    manifest, a footer inference per stage read, a join of a stage's
+    result back onto its own input or a shuffle in the Bloom build would
+    each add jobs here."""
     import uuid
 
     sc = spark.sparkContext
@@ -189,4 +244,4 @@ def test_run_curation_job_count(spark, docs, tmp_path):
     # one, and it sticks), stage checkpoints are reliable: writing the
     # oriented-edge checkpoint's files is one more job
     reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 56 + reliable
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 49 + reliable
