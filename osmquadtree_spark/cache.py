@@ -6,7 +6,7 @@ tables) that are read by multiple join branches of ONE query plan; the
 builder returns lazily, so the operator itself can never know when the last
 action ran. Without a registry those cached blocks accumulate across a
 50-query driver sweep until LRU eviction. ``release_all()`` (called from
-queries.clear_session_caches and at the end of bench sweeps) unpersists
+queries.clear_session_caches before every tools/gates.py sweep) unpersists
 everything registered since the last release.
 """
 

@@ -28,6 +28,15 @@ _VW_CASE = "CASE i % 4 WHEN 0 THEN 32 WHEN 1 THEN 64 WHEN 2 THEN 48 ELSE 96 END"
 _VH_CASE = "CASE i % 4 WHEN 0 THEN 24 WHEN 1 THEN 48 WHEN 2 THEN 32 ELSE 64 END"
 
 
+def _wave_sql(t: str) -> str:
+    """samples_for's sample ``t`` of clip (f1, f2). The waveform is closed
+    form, so the next sample is this at ``t + 1``: no window over the
+    samples."""
+    return f"""GREATEST(-32768, LEAST(32767,
+           ((({t}) * f1) % 8192 - 4096)
+           + CAST(floor(((({t}) * f2) % 4096 - 2048) / 2e0) AS BIGINT)))"""
+
+
 def media_features_sql(every: int = 2) -> str:
     """Twin of queries.q_media_features: audio features + video frame means
     in the long (kind, media_id, item, metric, value) shape. Media count =
@@ -45,15 +54,9 @@ WITH ids AS (
          ((u // 256) % 256)::BIGINT + 4 AS f2
   FROM seeds
 ), samples AS (
-  SELECT i, sr, ns, s.t AS t,
-         GREATEST(-32768, LEAST(32767,
-           ((s.t * f1) % 8192 - 4096)
-           + CAST(floor(((s.t * f2) % 4096 - 2048) / 2e0) AS BIGINT))) AS w
+  SELECT i, sr, ns, {_wave_sql('s.t')} AS w,
+         CASE WHEN s.t + 1 < ns THEN {_wave_sql('s.t + 1')} END AS wn
   FROM clips, unnest(generate_series(0, ns - 1)) s(t)
-), lagged AS (
-  SELECT i, sr, ns, t, w,
-         LEAD(w) OVER (PARTITION BY i ORDER BY t) AS wn
-  FROM samples
 ), afeat AS (
   SELECT i,
          MAX(ns * 1000 // sr) AS duration_ms,
@@ -61,7 +64,7 @@ WITH ids AS (
          CAST(floor(sqrt(SUM(w * w) / MAX(ns)) * 1000) AS BIGINT) AS rms_x1000,
          COALESCE(SUM(CASE WHEN wn IS NOT NULL AND w * wn < 0 THEN 1 END), 0)::BIGINT
            AS zero_crossings
-  FROM lagged GROUP BY i
+  FROM samples GROUP BY i
 ), vids AS (
   SELECT i,
          ({_VW_CASE})::BIGINT AS w,

@@ -18,7 +18,7 @@ again replaces the pending rows (newest wins): building the same query
 twice in one run commits one copy of its metrics, not two. A plan that
 is built but never run still commits, because its values were computed
 while it was built. Every run endpoint in this repo —
-queries.clear_session_caches, bench sweeps, tools/driver_sweep and both
+queries.clear_session_caches, every tools/gates.py sweep and both
 jobs — calls ``commit_pending``; a process that records metrics and exits
 without calling it drops them: if you end a run, flush it.
 

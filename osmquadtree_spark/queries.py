@@ -1,8 +1,8 @@
 """Gate registry: every implemented operator as a (spark, sf_dir) →
 DataFrame builder, paired with a DuckDB oracle SQL twin.
 
-This is the engine's public query surface (consumed by __spark_entry__.py,
-bench.py and tools/driver_sweep.py). Column names and dtypes are aligned
+This is the engine's public query surface (consumed by __spark_entry__.py
+and tools/gates.py). Column names and dtypes are aligned
 with the oracle SQL because the driver's comparison hashes values after
 sorting columns by name; ``compare`` is the repo's one copy of that check.
 
@@ -18,8 +18,9 @@ just above it:
         ...
 
 ``driver=True`` puts it in the external driver's 50-entry contract
-(``spark_queries()`` / ``oracle_sql()``), ``headline=True`` in bench.py's
-default suite. The oracle is a thunk, built only when a harness asks.
+(``spark_queries()`` / ``oracle_sql()``), ``headline=True`` in the default
+suite of tools/gates.py's timing run. The oracle is a thunk, built only
+when a harness asks.
 
 Oracle-parity ground rules used throughout (see functions/sql_oracle.py):
 integer arithmetic is overflow-free; float math is either single basic IEEE
@@ -73,7 +74,7 @@ class Gate(NamedTuple):
     build: Callable[[SparkSession, str], DataFrame]
     oracle: Callable[[], str]  # DuckDB SQL, built only when asked for
     driver: bool  # in the external driver's contract (spark_queries/oracle_sql)
-    headline: bool  # in bench.py's default suite
+    headline: bool  # in tools/gates.py's default timing suite
 
 
 GATES: dict[str, Gate] = {}
@@ -240,7 +241,7 @@ def _elements(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _elements_qt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per (session, sf): the assigned-cell element table — seven
     queries derive from it; a session computes the cell table once, exactly
-    like production reading a stored `-qts` table. (bench.py clears the memo
+    like production reading a stored `-qts` table. (tools/gates.py clears the memo
     between repeat sweeps so the first consumer of each sweep pays the full
     generation+kernel cost.)"""
     qt_calc = make_qt_calculate()
@@ -2177,7 +2178,7 @@ def q_ann_lsh_topk(spark, sf_dir):
 
 
 def clear_session_caches(keep_input_stores: bool = False) -> None:
-    """Drop per-(session, sf) memos. bench.py calls this between repeat
+    """Drop per-(session, sf) memos. tools/gates.py calls this between repeat
     sweeps so a best-of-N timing never reports a query's OWN computation as
     a memo hit.
 
@@ -2207,7 +2208,7 @@ def clear_session_caches(keep_input_stores: bool = False) -> None:
 
 # ----------------------------------------------------------------------------
 # gates beyond the external driver's 50-entry cap (driver=False): the SAME
-# value gate, run by tools/driver_sweep.py over every entry of GATES.
+# value gate, run by tools/gates.py --check over every entry of GATES.
 
 
 def _ann_ivf_topk_sql() -> str:

@@ -1,5 +1,5 @@
-"""The one SparkSession builder: every entry point (the jobs, bench.py,
-bench_scaling.py, tools/driver_sweep.py, the test session) gets its
+"""The one SparkSession builder: every entry point (the jobs,
+tools/gates.py, bench_scaling.py, the test session) gets its
 session from ``build``, so what the benchmarks measure is the config the
 jobs ship with. The only per-caller value is the number of task slots.
 
@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 
 # The driver heap is a quarter of the host's memory, scaled by the share of
 # the host's cores the session gets, within [1 GiB, 16 GiB]. Not perfbench's
-# eighth: tools/driver_sweep.py collects whole result sets to compare them,
+# eighth: tools/gates.py --check collects whole result sets to compare them,
 # and at 4 of 4 cores on a 15.7 GB host sf0.1's geojson_tiles took 84.2 s
 # with a 2 GiB heap against 38.9 s with 4 GiB (changes_stream 280.6 vs
 # 285.5 s, image_phash_clusters 77.4 vs 72.6 s, all EQ). Scaling with the

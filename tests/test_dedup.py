@@ -193,7 +193,7 @@ def test_cap_metrics_committed(spark, tmp_path):
     """"No silent caps": passing metrics_path REGISTERS the dropped-bucket
     stats and candidate counts with the run-scoped metrics registry;
     commit_pending (called by every run endpoint — clear_session_caches,
-    bench sweeps, driver_sweep) writes them ONCE per run under a run-id
+    gate sweeps) writes them ONCE per run under a run-id
     directory. Plan construction alone writes nothing (r3 advice: an
     abandoned plan must not clobber a previous run's table)."""
     from osmquadtree_spark import metrics

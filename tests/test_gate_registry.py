@@ -1,5 +1,5 @@
 """The gate registry (queries.GATES) and the one value comparison
-(queries.compare) that tools/driver_sweep.py and test_entry_oracle share."""
+(queries.compare) that tools/gates.py --check and test_entry_oracle share."""
 
 import duckdb
 import pytest

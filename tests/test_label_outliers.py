@@ -1,7 +1,7 @@
 """label_outlier_stats pins: independent numpy reference (float quantize →
 integer centroid → integer distances), planted-outlier recovery, NULL
 label/embedding handling. Value parity vs DuckDB over the fixture table is
-gated by tools/driver_sweep.py (`embedding_outliers`)."""
+gated by tools/gates.py --check (`embedding_outliers`)."""
 
 import numpy as np
 

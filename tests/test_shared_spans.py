@@ -1,7 +1,7 @@
 """shared_span_pairs pins: independent O(n·m) dynamic-programming longest
 common substring (token-level) reference, constructed overlap cases, hash
 on/off invariance, guard rails. Value parity vs DuckDB over the fixture
-corpus is gated by tools/driver_sweep.py (`shared_spans`)."""
+corpus is gated by tools/gates.py --check (`shared_spans`)."""
 
 import pytest
 

@@ -1,7 +1,7 @@
 """source_quota_cap pins: independent python reference over the shared
 splitmix64 mark, prefilter-active and deficit-fallback regimes, NULL-key
 grouping, and oversample invariance. Value parity vs DuckDB over the
-fixture corpus is gated by tools/driver_sweep.py (`source_quota`)."""
+fixture corpus is gated by tools/gates.py --check (`source_quota`)."""
 
 import numpy as np
 import pytest

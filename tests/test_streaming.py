@@ -16,8 +16,9 @@ CH_SCHEMA = "key bigint, seq bigint, payload double, changetype int"
 
 
 def _write_batch(spark, path, rows, i):
-    pdf = pd.DataFrame(rows, columns=["key", "seq", "payload", "changetype"])
-    spark.createDataFrame(pdf, CH_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
+    # from the tuples, not through pandas, which would write a NaN payload
+    # as NULL
+    spark.createDataFrame(rows, CH_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, f"b{i}")
     )
 
@@ -224,8 +225,7 @@ def test_stream_nan_payload_is_null(spark, tmp_path):
     ):
         src, chk = str(tmp_path / f"s_{tag}"), str(tmp_path / f"c_{tag}")
         for i, rows in enumerate(batches):
-            # from tuples, not pandas: a pandas NaN would be written as NULL
-            spark.createDataFrame(rows, CH_SCHEMA).coalesce(1).write.parquet(f"{src}/b{i}")
+            _write_batch(spark, src, rows, i)
         sink = f"nan_{tag}"
         _run_stream(spark, src, chk, sink)
         # every row the update-mode sink received carries the winner

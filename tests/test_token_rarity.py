@@ -1,6 +1,6 @@
 """token_rarity pins: independent python Counter reference, NULL/empty-text
 edge cases, and broadcast-vs-shuffle lookup parity. Full value parity vs
-DuckDB over the fixture corpus is gated by tools/driver_sweep.py
+DuckDB over the fixture corpus is gated by tools/gates.py --check
 (`token_rarity`)."""
 
 from collections import Counter

@@ -1,7 +1,7 @@
 """token_shards pins: independent single-pass python prefix-sum reference,
 band-width invariance (the decomposition must not affect the answer),
 boundary straddling, negative-id monotonicity of trunc-banding. Value
-parity vs DuckDB over the fixture corpus is gated by tools/driver_sweep.py
+parity vs DuckDB over the fixture corpus is gated by tools/gates.py --check
 (`token_shards`)."""
 
 import pytest
