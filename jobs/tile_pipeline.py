@@ -9,6 +9,10 @@ The north-rule deployment shape:
         [--input /data/images.parquet | --n-images 1000000] \\
         [--target 40000 --minsize 20000 --tree-level 15 --partitions 256]
 
+--partitions sets the tile layout's partition (and file) count; it
+defaults to the session's spark.sql.shuffle.partitions, at most one
+partition per tile.
+
 Re-running with the same --out-dir resumes from the first uncommitted
 stage (per-stage manifests are the commit markers — Iceberg snapshots in
 production). The re-run takes the same --input or --n-images: the qts
@@ -52,7 +56,10 @@ def main() -> None:
     ap.add_argument("--target", type=int, default=40000)
     ap.add_argument("--minsize", type=int, default=20000)
     ap.add_argument("--tree-level", type=int, default=15)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument(
+        "--partitions", type=int, default=None,
+        help="tile layout partitions (default: the session's shuffle partitions)",
+    )
     ap.add_argument("--stop-after", default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
 

@@ -13,6 +13,15 @@ the directory, and a failed commit leaves no tmp file behind.
 The manifest also records the written schema, so the next stage reads
 the committed data with it (``read_committed``) instead of inferring it
 from the parquet footers — a Spark job per stage boundary.
+
+A stage's ``data`` table is written zstd-compressed: the Parquet counterpart of
+the reference's per-block zlib and Iceberg's default
+``write.parquet.compression-codec``. A column chunk that overflows its
+dictionary, as a payload column with many distinct values does in a
+large file, falls back to PLAIN pages, which zstd still compresses and
+snappy, Spark's default, barely does. The codec sits on the writer, not
+in the session, because it is a property of the committed table and
+holds under any session, a launcher's included.
 """
 
 from __future__ import annotations
@@ -66,7 +75,7 @@ def commit_manifest(path: str, manifest: dict) -> dict:
 def write_observed(
     df: DataFrame, path: str, extra: dict | None = None, verify: bool = False
 ) -> dict:
-    """Write ``df`` as the stage's ``data`` parquet; the row count (+ any ``extra``
+    """Write ``df`` as the stage's zstd ``data`` parquet; the row count (+ any ``extra``
     aggregate columns) is observed ON the write job — zero read-back.
     The result also holds the written ``schema`` (JSON) for the manifest.
     ``verify`` re-reads the committed files and cross-checks the observed
@@ -77,7 +86,7 @@ def write_observed(
     aggs = [F.count(F.lit(1)).alias("rows")] + [
         v.alias(k) for k, v in (extra or {}).items()
     ]
-    df.observe(obs, *aggs).write.mode("overwrite").parquet(data)
+    df.observe(obs, *aggs).write.mode("overwrite").option("compression", "zstd").parquet(data)
     got = {k: int(v) if v is not None else 0 for k, v in obs.get.items()}
     if verify:
         rb = int(df.sparkSession.read.parquet(data).count())

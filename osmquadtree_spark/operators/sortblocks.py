@@ -13,7 +13,10 @@ group table IS the partitioner: the same Arrow pass that assigns a row's
 group also computes its destination partition from the tile's DFS
 position, and the layout is one ``repartitionById`` on that id +
 ``sortWithinPartitions`` — no sampling pass, and the layout is a
-deterministic function of the group table. Spark's in-partition sort is
+deterministic function of the group table and the partition count. The
+count is the session's shuffle partitions (at most one per tile), so
+each partition holds a contiguous DFS block of whole tiles, the way the
+reference packs many tiles into one file. Spark's in-partition sort is
 the same external-sort algorithm as the reference's splitbyid/tempobjs
 spill machinery, with shuffle-managed memory.
 
@@ -247,11 +250,6 @@ def compute_groups_scalable(
     return group_table(groups)
 
 
-# one tile per partition up to this many groups; beyond it, contiguous
-# DFS blocks of tiles per partition
-MAX_TILE_PARTITIONS = 2000
-
-
 def _groups_of(qt, group_qts: np.ndarray) -> np.ndarray:
     # a single NULL makes the Arrow batch float64, silently destroying
     # the low (depth) bits of every qt > 2^53 — fail loudly instead
@@ -285,8 +283,9 @@ def with_group_column(
 def tile_partitions(groups: np.ndarray, group_qts: np.ndarray, parts: int) -> np.ndarray:
     """Destination partition of each assigned group cell: the tile's DFS
     position in the (sorted) group table × ``parts`` ÷ n_groups. Monotone
-    in the group cell, so partitions follow DFS tile order and a tile
-    never straddles two partitions."""
+    in the group cell, so partitions hold contiguous DFS blocks of tiles
+    and a tile never straddles two partitions; with ``parts >= n_groups``
+    every tile has a partition of its own."""
     n = len(group_qts)
     pos = np.searchsorted(group_qts, groups).clip(max=max(n - 1, 0))
     return (pos * parts // max(n, 1)).astype(np.int32)
@@ -315,9 +314,18 @@ def lay_out_tiles(
     ``schema`` columns, PLACE_SCHEMA's among them; ``repartitionById``
     on ``_part_id`` places the rows, and each partition is sorted by
     (group cell, sort key). The group table ships once per executor via a
-    Spark broadcast."""
-    parts = num_partitions or max(1, min(len(group_qts), MAX_TILE_PARTITIONS))
-    bc = df.sparkSession.sparkContext.broadcast(group_qts)
+    Spark broadcast.
+
+    ``parts`` defaults to the session's ``spark.sql.shuffle.partitions``
+    (capped at one partition per tile), the setting every other shuffle
+    of the job follows: AQE cannot coalesce a ``repartitionById``, and a
+    partition per tile would size the sort and write tasks, the files and
+    the lineage re-read by the group table instead of the data."""
+    spark = df.sparkSession
+    parts = num_partitions or max(
+        1, min(len(group_qts), int(spark.conf.get("spark.sql.shuffle.partitions")))
+    )
+    bc = spark.sparkContext.broadcast(group_qts)
 
     @pandas_udf(schema)
     def place_batch(*cols: pd.Series) -> pd.DataFrame:

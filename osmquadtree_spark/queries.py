@@ -3218,7 +3218,7 @@ def _phash_pairs(spark, sf_dir):
     from .sources.images import phash_catalog
 
     n = _load(spark, sf_dir, "part").count()  # also registers the oracle view
-    cat = phash_catalog(spark, n, partitions=spark.sparkContext.defaultParallelism)
+    cat = phash_catalog(spark, n)
     return cat, img_ops.phash_near_dup(
         cat, max_hamming=3, metrics_path=_scratch(sf_dir, "metrics")
     )

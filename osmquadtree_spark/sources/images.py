@@ -225,11 +225,16 @@ def derive_footprints(idx: np.ndarray):
 META_SCHEMA = "image_id string, w int, h int, fmt string, caption string, phash bigint"
 
 
-def images_df(spark, n: int, partitions: int = 32):
+def _range_partitions(spark, partitions: int | None) -> int:
+    return partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def images_df(spark, n: int, partitions: int | None = None):
     """Distributed generation: spark.range → pandas UDFs of the row index.
     The generator is a pure function of the row index, so any partitioning
     yields the same table — this is how the 10^12-row design point scales
-    (no driver-side materialization).
+    (no driver-side materialization). ``partitions`` defaults to the
+    session's shuffle partitions.
 
     The metadata and ``bytes`` are two UDFs of the index that Spark runs in
     one Python pass, so a plan that never reads ``bytes`` prunes the
@@ -243,13 +248,13 @@ def images_df(spark, n: int, partitions: int = 32):
     def encode(idx: pd.Series) -> pd.Series:
         return pd.Series([image_payload(int(i)) for i in idx])
 
-    rows = spark.range(0, n, 1, partitions).select(
+    rows = spark.range(0, n, 1, _range_partitions(spark, partitions)).select(
         meta("id").alias("m"), encode("id").alias("bytes")
     )
     return rows.select("m.image_id", "bytes", "m.w", "m.h", "m.fmt", "m.caption", "m.phash")
 
 
-def phash_catalog(spark, n: int, partitions: int = 32):
+def phash_catalog(spark, n: int, partitions: int | None = None):
     """(img_idx, phash) perceptual-hash catalog with planted near-dup
     variants — the dedup input over the north-rule image shape (phash is
     an input_hint column; real pipelines compute it from pixels, here it
@@ -261,7 +266,8 @@ def phash_catalog(spark, n: int, partitions: int = 32):
     (img_idx = -10^9 - 1 - i). Negative variant ids keep the id space
     independent of n, so the DuckDB oracle restates the catalog without a
     scale parameter. Pure function of the row index — any partitioning
-    yields the same table (the 10^12-row design point)."""
+    yields the same table (the 10^12-row design point); ``partitions``
+    defaults to the session's shuffle partitions."""
 
     one = np.uint64(1)
 
@@ -290,6 +296,6 @@ def phash_catalog(spark, n: int, partitions: int = 32):
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return spark.range(0, n, 1, partitions).mapInPandas(
+    return spark.range(0, n, 1, _range_partitions(spark, partitions)).mapInPandas(
         gen, "img_idx bigint, phash bigint"
     )

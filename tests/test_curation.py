@@ -245,3 +245,16 @@ def test_run_curation_job_count(spark, docs, tmp_path):
     # oriented-edge checkpoint's files is one more job
     reliable = sc._jsc.sc().getCheckpointDir().isDefined()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 49 + reliable
+
+
+def test_stage_tables_are_zstd(full_run):
+    """Curation stage tables are committed as zstd Parquet."""
+    import pyarrow.parquet as pq
+
+    out, _ = full_run
+    data = os.path.join(out, "quality", "data")
+    files = [f for f in os.listdir(data) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(os.path.join(data, f)).metadata
+        assert meta.row_group(0).column(0).compression == "ZSTD", f

@@ -7,6 +7,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +45,15 @@ def test_pipeline_end_to_end(spark, tmp_path):
     groups = pd.read_parquet(os.path.join(out, "groups", "groups.parquet"))
     gset = set(groups["group_qt"].astype(np.int64))
     assert set(df["group_qt"].astype(np.int64)) <= gset
+    # committed stage tables are zstd Parquet
+    for stage in ("qts", "tiles"):
+        data = os.path.join(out, stage, "data")
+        codecs = {
+            pq.ParquetFile(os.path.join(data, f)).metadata.row_group(0).column(0).compression
+            for f in os.listdir(data)
+            if f.endswith(".parquet")
+        }
+        assert codecs == {"ZSTD"}, stage
 
 
 def test_lineage_metrics_cover_all_rows(spark, tmp_path):
@@ -273,24 +283,37 @@ def test_compute_groups_scalable_matches_dense(spark):
             assert np.array_equal(a, b)
 
 
-@pytest.mark.parametrize("case", ["parts_below_groups", "parts_above_groups", "root_only"])
+@pytest.mark.parametrize(
+    "case",
+    ["parts_below_groups", "parts_above_groups", "root_only", "default", "default_few_groups"],
+)
 def test_tile_layout_places_whole_tiles_in_dfs_order(spark, tmp_path, case):
     """The group table is the partitioner: whatever the partition count,
     every tile lands in exactly one partition (one file), partitions
-    follow DFS tile order, and the committed lineage equals the data."""
+    follow DFS tile order, and the committed lineage equals the data.
+    Without ``num_partitions`` the tiles spread over the session's shuffle
+    partitions (8 here), one partition per tile when there are fewer."""
     from pyspark.sql import functions as F
 
     from osmquadtree_spark.operators.images import with_footprint
     from osmquadtree_spark.operators.sortblocks import compute_groups, write_tile_sorted
 
     imgs = with_footprint(images_df(spark, N_IMAGES, partitions=8))
-    gqt, _, _ = compute_groups(imgs, "qt", TARGET, MINSIZE, 15, rollup=True)
+    target, minsize = (200, 100) if case == "default_few_groups" else (TARGET, MINSIZE)
+    gqt, _, _ = compute_groups(imgs, "qt", target, minsize, 15, rollup=True)
     assert len(gqt) >= 4
     gqt, parts = {
         "parts_below_groups": (gqt, len(gqt) // 3),
         "parts_above_groups": (gqt, 2 * len(gqt) + 1),
         "root_only": (np.zeros(1, np.int64), 4),
+        "default": (gqt, None),
+        "default_few_groups": (gqt, None),
     }[case]
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle == 8
+    if parts is None:
+        assert (len(gqt) > shuffle) == (case == "default")
+    n_parts = parts or shuffle
     path = str(tmp_path / case)
     man = write_tile_sorted(imgs, path, gqt, sort_cols=["image_id"], num_partitions=parts)
     data = (
@@ -299,13 +322,14 @@ def test_tile_layout_places_whole_tiles_in_dfs_order(spark, tmp_path, case):
         .toPandas()
     )
     assert len(data) == man["rows"] == N_IMAGES
-    assert data["_part_id"].between(0, parts - 1).all()
+    assert data["_part_id"].between(0, n_parts - 1).all()
+    assert data["_part_id"].nunique() == data["file"].nunique() == min(n_parts, len(gqt))
     assert (data.groupby("group_qt")["_part_id"].nunique() == 1).all()
     assert (data.groupby("file")["_part_id"].nunique() == 1).all()
     assert (data.groupby("_part_id")["file"].nunique() == 1).all()
     per_tile = data.groupby("group_qt")["_part_id"].first().sort_index()
     assert per_tile.is_monotonic_increasing
-    if parts >= len(gqt):
+    if n_parts >= len(gqt):
         assert (data.groupby("_part_id")["group_qt"].nunique() == 1).all()
     lineage = pd.read_parquet(os.path.join(path, "_metrics"))
     want = (
